@@ -127,185 +127,19 @@ object Bench {
     }
     if (rerun.nonEmpty)
       System.err.println(s"[bench] reran ${rerun.size} outliers (>5x median ${fmt(median)}s): ${rerun.mkString(", ")}")
-    // The similarity-edge pair frame is memoized across cl_pagerank and
-    // cl_dbscan (the production shape: both graph queries share one
-    // build), so their timed numbers above are MARGINAL costs over the
-    // shared frame. The build itself is reported as its own timed line
-    // ("pair_build_sec") so round-over-round artifacts stay comparable
-    // and the shared cost never silently vanishes from the report.
-    val pairBuild = try {
-      operators.Clustering.evictSimEdgePairs(spark)
-      val t0 = System.nanoTime()
-      operators.Clustering.simEdgePairs(spark, sfDir,
-        operators.Clustering.SimEdgeThreshold).count()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] pair build FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    // Same transparency for the OTHER memo: the Iters-round k-means
-    // training every cl_* query amortizes, timed after eviction.
-    val centroidTrain = try {
-      operators.Clustering.evictTrainedCentroids(spark)
-      val t0 = System.nanoTime()
-      operators.Clustering.trainedCents(spark, sfDir)
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] centroid train FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    // The ql_* weight-table training the five quality-classifier queries
-    // amortize (round 14 memo): timed after eviction, forced to actually
-    // materialize via a count on the pinned B-row frame.
-    val qlTrain = try {
-      operators.QualityClassifier.evictTrainedModel(spark)
-      val t0 = System.nanoTime()
-      operators.QualityClassifier.trainedModel(spark, sfDir)._2.count()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ql train FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    // The corpus scoring pass the five ql_* evaluation cards amortize
-    // (round-15 optimization — the trainedModel memo stopped
-    // re-training, this prices the once-per-session re-SCORING the
-    // cards now share): timed after eviction, forced to materialize via
-    // a count on the pinned per-doc frame. Note trainedModel stays
-    // memoized here, so this line prices the scoring pass alone.
-    val qlScored = try {
-      operators.QualityClassifier.evictScored(spark)
-      val t0 = System.nanoTime()
-      operators.QualityClassifier.scored(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ql scored FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    // The OPQ rotation training ann_opq amortizes (round 14 memo — the
-    // chronic rerun-flag fix: training no longer re-pays per timing run).
-    val opqTrain = try {
-      operators.Similarity.evictTrainedRotation(spark)
-      val t0 = System.nanoTime()
-      operators.Similarity.trainedRotation(spark, sfDir)
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] opq train FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    // The IVF coarse-codebook Lloyd sweep ann_ivf_trained / the health
-    // and recall cards amortize (round 14).
-    val ivfTrain = try {
-      operators.Similarity.evictTrainedIvfCents(spark)
-      val t0 = System.nanoTime()
-      operators.Similarity.trainedIvfCents(spark, sfDir)
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ivf train FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    val irStats = try {
-      operators.Retrieval.evictSample(spark)
-      val t0 = System.nanoTime()
-      operators.Retrieval.corpusSample(spark, sfDir)
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ir stats FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    // The exact PPJoin truth-pair set five dedup queries amortize
-    // (round-15 optimization — dd_ppjoin presents it, the four banding
-    // cards evaluate against it): timed after eviction, forced to
-    // materialize via a count on the pinned truth-pair frame.
-    val ddTruth = try {
-      operators.Dedup.evictPpjoinTruth(spark)
-      val t0 = System.nanoTime()
-      operators.Dedup.ppjoinPairsUnsorted(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] dd truth FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    // The retrieval family's shared evaluation artifacts (round-15
-    // optimization — the annTruth discipline): the self-excluded BM25
-    // top-10 and the token/shingle Jaccard truths each serve ir_eval /
-    // ir_eval_strict / ir_fusion from one memoized, pinned frame; the
-    // builds are priced here after eviction so the per-card timings
-    // above are marginal costs and the shared passes never vanish from
-    // the artifact.
-    val irTop = try {
-      operators.Retrieval.evictEvalTop(spark)
-      val t0 = System.nanoTime()
-      operators.Retrieval.bm25EvalTop(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ir top FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    val irTruth = try {
-      operators.Retrieval.evictTruth(spark)
-      val t0 = System.nanoTime()
-      operators.Retrieval.truthFrame(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ir truth FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    val irTruthShingle = try {
-      operators.Retrieval.evictTruthShingle(spark)
-      val t0 = System.nanoTime()
-      operators.Retrieval.truthFrameShingle(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ir shingle truth FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    // The exact brute-force truth pass the ANN evaluation cards amortize
-    // (round 15 memo — previously re-executed inside ann_recall_card /
-    // ann_dim_trunc / ann_sq8, the bench's three heaviest lines): timed
-    // after eviction, forced to materialize via a count on the pinned
-    // ≤5·|Q|-row frame.
-    // The budgeted ANN query sample every similarity card serves from
-    // (round-15 optimization): priced after eviction like the other
-    // shared artifacts.
-    val annQueries = try {
-      operators.Similarity.evictQueries(spark)
-      val t0 = System.nanoTime()
-      operators.Similarity.budgetQueries(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ann queries FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    // The three declared IVF-PQ variants' residual codebooks (round-15
-    // optimization — trained-quantizer artifacts, the opq_train class):
-    // summed build cost after eviction.
-    val pqBook = try {
-      operators.Similarity.evictResidualBooks(spark)
-      operators.Similarity.priceResidualBooks(spark, sfDir)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] pq books FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    val annTruth = try {
-      operators.Similarity.evictAnnTruth(spark)
-      val t0 = System.nanoTime()
-      operators.Similarity.annTruth(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ann truth FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
-    }
-    // The NN-descent graph build ann_nndescent/ann_beam amortize
-    // (round 15 memo — the pair_build_sec pattern): timed after
-    // eviction; the build's own checkpoints materialize inside the call.
-    val nnGraph = try {
-      operators.Similarity.evictNnGraph(spark)
-      val t0 = System.nanoTime()
-      operators.Similarity.nnDescentGraph(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] nn graph FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      -1.0
+    // Each priced shared build (SparkEntry.SharedBuilds), timed after
+    // eviction and reported as its own "<name>_sec" line, in list order,
+    // so round-over-round artifacts stay comparable.
+    val sharedSecs = SparkEntry.SharedBuilds.map { case (name, evict, build) =>
+      name -> (try {
+        evict(spark)
+        val t0 = System.nanoTime()
+        build(spark, sfDir)
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] shared build $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        -1.0
+      })
     }
     // 1,000-standing-query registry cost (round 15, r14 verdict item 6):
     // rows/sec of the token-keyed INDEXED scorer vs the per-term SCAN
@@ -372,10 +206,7 @@ object Bench {
     // while the build cost moves into a priced line. This field adds
     // every priced shared-build line back so round-over-round totals
     // compare like for like; "total" keeps its historical meaning.
-    val sharedBuilds = Seq(pairBuild, centroidTrain, qlTrain, qlScored,
-      opqTrain, ivfTrain, irStats, ddTruth, irTop, irTruth, irTruthShingle,
-      annQueries, pqBook, annTruth, nnGraph)
-    val totalWithShared = total + sharedBuilds.filter(_ >= 0).sum
+    val totalWithShared = total + sharedSecs.map(_._2).filter(_ >= 0).sum
     // Loader throughput (the reference's headline number): stream the
     // events table through the exactly-once partitioned file sink and
     // measure end-to-end records/sec, plus per-epoch commit latency
@@ -531,9 +362,10 @@ object Bench {
     val reruns = rerun.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val streamRatesJson = streamRates.map(r => fmt(r)).mkString("[", ",", "]")
     val bloomRatesJson = bloomRates.map(r => fmt(r)).mkString("[", ",", "]")
+    val sharedFields = sharedSecs.map { case (n, v) => s""""${n}_sec":${fmt(v)}""" }.mkString(",")
     // stream_reruns derives from the actual run count (runs beyond the
     // first timed pass), never a literal — a self-describing artifact
-    val streamFields = s""""failed":$failed,"reruns":$reruns,"sf":"$sfDir","stream_load_rows_per_sec":${loadRate.toLong},"epoch_latency_ms_p50":$epochP50,"epoch_latency_ms_p99":$epochP99,"bloom_gate_rows_per_sec":${bloomRate.toLong},"stream_reruns":${math.max(0, streamRates.length - 1)},"stream_rates":$streamRatesJson,"bloom_rates":$bloomRatesJson,"pair_build_sec":${fmt(pairBuild)},"centroid_train_sec":${fmt(centroidTrain)},"ql_train_sec":${fmt(qlTrain)},"ql_scored_sec":${fmt(qlScored)},"opq_train_sec":${fmt(opqTrain)},"ivf_train_sec":${fmt(ivfTrain)},"ir_stats_sec":${fmt(irStats)},"dd_truth_sec":${fmt(ddTruth)},"ir_top_sec":${fmt(irTop)},"ir_truth_sec":${fmt(irTruth)},"ir_truth_shingle_sec":${fmt(irTruthShingle)},"ann_queries_sec":${fmt(annQueries)},"pq_book_sec":${fmt(pqBook)},"ann_truth_sec":${fmt(annTruth)},"nn_graph_sec":${fmt(nnGraph)},"bm25_reg1k_indexed_rows_per_sec":${reg1kIndexed.toLong},"bm25_reg1k_scan_rows_per_sec":${reg1kScan.toLong},"total_with_shared_sec":${fmt(totalWithShared)},"calib_sec":[${fmt(calibStart)},${fmt(calibEnd)}],"calib_ref_sec":$ReferenceCalibSec,${hostNormFields(hostFactor, total, fmt)}"""
+    val streamFields = s""""failed":$failed,"reruns":$reruns,"sf":"$sfDir","stream_load_rows_per_sec":${loadRate.toLong},"epoch_latency_ms_p50":$epochP50,"epoch_latency_ms_p99":$epochP99,"bloom_gate_rows_per_sec":${bloomRate.toLong},"stream_reruns":${math.max(0, streamRates.length - 1)},"stream_rates":$streamRatesJson,"bloom_rates":$bloomRatesJson,$sharedFields,"bm25_reg1k_indexed_rows_per_sec":${reg1kIndexed.toLong},"bm25_reg1k_scan_rows_per_sec":${reg1kScan.toLong},"total_with_shared_sec":${fmt(totalWithShared)},"calib_sec":[${fmt(calibStart)},${fmt(calibEnd)}],"calib_ref_sec":$ReferenceCalibSec,${hostNormFields(hostFactor, total, fmt)}"""
     // FULL artifact: every per-query number. Printed first for
     // collectors that keep whole stdout AND written to a file so the
     // full per-query map survives even when only the stdout tail does.

@@ -68,7 +68,7 @@ object Clustering {
   // the key): a refreshed corpus under the same dir REPLACES the stale
   // entry instead of stranding it for the session lifetime — the bounded-
   // cache behavior a long-lived session needs.
-  private val centsMemo =
+  private[graft] val centsMemo =
     new graft.util.SessionMemo[Seq[(Int, Seq[Double])]]("embeddings")
 
   // The thresholded similarity-edge PAIRS (ddEmbedCosFor's sign-bucket
@@ -87,7 +87,7 @@ object Clustering {
   // replaces the stale entry, whose checkpoint blocks the ContextCleaner
   // reclaims once the dropped frame reference is GC'd — no strand for
   // the session lifetime.
-  private val pairsMemo =
+  private[graft] val pairsMemo =
     new graft.util.SessionMemo.Keyed[(String, Double), DataFrame]("embeddings")
 
   /** Memoized undirected similarity candidate pairs (vec_a < vec_b). */
@@ -103,20 +103,6 @@ object Clustering {
 
   /** The threshold cl_pagerank/cl_dbscan share (their one memo entry). */
   private[graft] val SimEdgeThreshold = 0.25
-
-  /** Bench hook: drop this session's memoized pair frames so a timed
-    * run measures the BUILD, not a cache hit — the pair-build cost would
-    * otherwise vanish from every timed number (it is paid once during
-    * the warm run and shared thereafter, which is the production shape
-    * but not a comparable per-query timing). */
-  private[graft] def evictSimEdgePairs(s: SparkSession): Unit =
-    pairsMemo.evict(s)
-
-  /** Bench hook, the [[evictSimEdgePairs]] twin for the OTHER memo: drop
-    * the trained centroids so a timed [[trainedCents]] call measures the
-    * Iters-round training sweep every cl_* query amortizes. */
-  private[graft] def evictTrainedCentroids(s: SparkSession): Unit =
-    centsMemo.evict(s)
 
   /** Train `Iters` rounds and return the final per-vector assignment
     * (vec_id, e, label, cid, d) — the shared frame behind all cl_*

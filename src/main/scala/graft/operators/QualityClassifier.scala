@@ -107,14 +107,8 @@ object QualityClassifier {
   // is the (1-row target pin, B-row weight pin) PAIR — scoring needs
   // the same frozen target the weights were trained against, and
   // caching them together keeps the two from ever drifting.
-  private val modelMemo =
+  private[graft] val modelMemo =
     new graft.util.SessionMemo[(DataFrame, DataFrame)]("documents")
-
-  /** Bench hook (the Clustering.evictTrainedCentroids twin): drop this
-    * session's memoized ql model so a timed [[trainedModel]] call
-    * measures the training sweep the five ql_* queries amortize. */
-  private[graft] def evictTrainedModel(s: SparkSession): Unit =
-    modelMemo.evict(s)
 
   /** The memoized (target pin, weight-table pin) pair — ONE training
     * run per (session, dir) shared by all five ql_* queries and
@@ -168,12 +162,9 @@ object QualityClassifier {
   // once and every card reads the score column. One narrow row per doc
   // (7 flat columns), lazily checkpoint-pinned — MEMORY_AND_DISK, so at
   // cluster scale it spills to local disk like any scored-corpus
-  // artifact. The bench prices the pass after eviction (ql_scored_sec).
-  private val scoredMemo = new graft.util.SessionMemo[DataFrame]("documents")
-
-  /** Bench hook: drop the memoized scored frame so a timed call prices
-    * the scoring pass the five ql_* queries amortize. */
-  private[graft] def evictScored(s: SparkSession): Unit = scoredMemo.evict(s)
+  // artifact. Priced as a shared build after eviction
+  // (graft.SparkEntry.SharedBuilds).
+  private[graft] val scoredMemo = new graft.util.SessionMemo[DataFrame]("documents")
 
   /** Per-doc scores (doc_id, source, label, n_feats, score, prob, keep)
     * with score/prob UNROUNDED — [[qlScore]] presents the rounded card;

@@ -1308,13 +1308,6 @@ object Transforms {
       ndup.cast("decimal(18,0)") * denomLit < numLit * nseg.cast("decimal(18,0)"))
   }
 
-  /** [[bloomDedup]]'s build+gate convenience for the line gate
-    * (production loops persist the build via [[saveBloom]] instead). */
-  def lineDupDedup(docs: DataFrame, historical: DataFrame,
-      expectedLines: Long, fpp: Double = 0.01,
-      maxDupShare: Double = 0.3): DataFrame =
-    lineDupGate(docs, buildLineBloom(historical, expectedLines, fpp), maxDupShare)
-
   /** Boilerplate line TRIM at ingest — the streaming twin of the batch
     * `dd_line_trim` operator, completing the line family's stream side
     * ([[lineDupGate]] drops whole documents; this REMOVES the known
@@ -1350,17 +1343,6 @@ object Transforms {
         when(nseg <= 0, col("text")).otherwise(array_join(kept, "\n")))
   }
 
-  /** [[extendBloom]] for the line filter: OR the new batch's segment
-    * keys into the saved history — one pass over the increment. Same
-    * sizing-params contract as every merge. */
-  def extendLineBloom(spark: SparkSession, path: String, newDocs: DataFrame,
-      expectedLines: Long, fpp: Double = 0.01): Array[Byte] = {
-    val merged = mergeBloom(loadBloom(spark, path),
-      buildLineBloom(newDocs, expectedLines, fpp))
-    saveBloom(spark, merged, path)
-    merged
-  }
-
   /** [[buildBloom]] at SPAN granularity (round 15): the filter holds the
     * fused 8-gram window hash (`graft_gram_buckets`, the SAME hash the
     * batch `dd_span_trim` census counts — gate and census can never
@@ -1384,16 +1366,6 @@ object Transforms {
       .agg(call_function("graft_bloom_agg", col("h"),
         lit(expectedGrams), lit(numBits)).as("bf"))
       .head().getAs[Array[Byte]](0)
-  }
-
-  /** [[extendBloom]] for the span filter: OR the new batch's window
-    * keys into the saved history — one pass over the increment. */
-  def extendSpanBloom(spark: SparkSession, path: String, newDocs: DataFrame,
-      expectedGrams: Long, fpp: Double = 0.01): Array[Byte] = {
-    val merged = mergeBloom(loadBloom(spark, path),
-      buildSpanBloom(newDocs, expectedGrams, fpp))
-    saveBloom(spark, merged, path)
-    merged
   }
 
   /** Verbatim duplicated-span TRIM at ingest (round 15) — the streaming

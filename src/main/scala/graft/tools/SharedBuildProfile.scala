@@ -1,12 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiler for the PRICED shared-build lines (round 16): times
-  * evict → rebuild of a named memoized artifact, min-of-N, without
-  * paying a full bench sweep per data point. The r15 c8 capture showed
-  * ir_truth_shingle at 127× its c32 time — this tool exists to measure
-  * that ratio in isolation before/after the truth-join fixes.
+  * evict → rebuild of a named [[graft.SparkEntry.SharedBuilds]] entry,
+  * min-of-N, without paying a full bench sweep per data point. The r15
+  * c8 capture showed the shingle truth build at 127× its c32 time — this
+  * tool exists to measure that ratio in isolation before/after the
+  * truth-join fixes.
   * Usage: `runMain graft.tools.SharedBuildProfile <name> [name...]`;
   * `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` as in Bench;
   * `GRAFT_BUILD_RUNS` (default 3) timed runs per name. */
@@ -18,17 +17,6 @@ object SharedBuildProfile {
     val spark = graft.GraftSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.graft.lint", "off")
-    import graft.operators._
-    val builds: Map[String, SparkSession => Unit] = Map(
-      "ir_top" -> (s => { Retrieval.evictEvalTop(s); Retrieval.bm25EvalTop(s, sfDir).count(); () }),
-      "ir_truth" -> (s => { Retrieval.evictTruth(s); Retrieval.truthFrame(s, sfDir).count(); () }),
-      "ir_truth_shingle" -> (s => { Retrieval.evictTruthShingle(s); Retrieval.truthFrameShingle(s, sfDir).count(); () }),
-      "dd_truth" -> (s => { Dedup.evictPpjoinTruth(s); Dedup.ppjoinPairsUnsorted(s, sfDir).count(); () }),
-      "ann_truth" -> (s => { Similarity.evictAnnTruth(s); Similarity.annTruth(s, sfDir).count(); () }),
-      "nn_graph" -> (s => { Similarity.evictNnGraph(s); Similarity.nnDescentGraph(s, sfDir).count(); () }),
-      "pq_book" -> (s => { Similarity.evictResidualBooks(s); Similarity.priceResidualBooks(s, sfDir); () }),
-      "ann_queries" -> (s => { Similarity.evictQueries(s); Similarity.budgetQueries(s, sfDir).count(); () }),
-      "ql_scored" -> (s => { QualityClassifier.evictScored(s); QualityClassifier.scored(s, sfDir).count(); () }))
     val stageRows = java.util.Collections.synchronizedList(
       new java.util.ArrayList[(Long, Int, String)]())
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -42,13 +30,14 @@ object SharedBuildProfile {
       }
     })
     args.foreach { name =>
-      val fn = builds.getOrElse(name,
-        sys.error(s"unknown build (known: ${builds.keys.toSeq.sorted.mkString(", ")})"))
-      fn(spark) // warm codegen/JIT (and upstream memos, e.g. the sample)
+      val (_, evict, build) = graft.SparkEntry.SharedBuilds.find(_._1 == name).getOrElse(
+        sys.error(s"unknown build (known: ${graft.SparkEntry.SharedBuilds.map(_._1).mkString(", ")})"))
+      def fn(): Unit = { evict(spark); build(spark, sfDir) }
+      fn() // warm codegen/JIT (and upstream memos, e.g. the sample)
       val times = (1 to runs).map { _ =>
         stageRows.clear()
         val t0 = System.nanoTime()
-        fn(spark)
+        fn()
         (System.nanoTime() - t0) / 1e9
       }
       println(f"BUILDPROFILE $name%-18s min=${times.min}%7.3f s  runs=${times.map(t => f"$t%.3f").mkString(", ")}")

@@ -59,12 +59,6 @@ class GraftMetrics extends StreamingQueryListener {
     import scala.jdk.CollectionConverters._
     rows.keySet.asScala.toSeq.sorted
   }
-
-  /** All epoch latencies seen across queries (for whole-run percentiles). */
-  def allEpochLatenciesMs: Seq[Long] = {
-    import scala.jdk.CollectionConverters._
-    durations.values.asScala.flatMap(_.asScala).toSeq
-  }
 }
 
 object GraftMetrics {

@@ -1,5 +1,9 @@
 package graft.util
 
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success}
+
 import org.apache.spark.sql.SparkSession
 
 /** Per-(session, dir) memo for deterministic trained/sampled artifacts,
@@ -10,6 +14,8 @@ import org.apache.spark.sql.SparkSession
   * item 3: the fingerprint + WeakHashMap boilerplate had been copied
   * per operator file with only the table name and value type differing
   * — three-plus copies of the same invalidation logic to keep in sync.
+  * The memos whose builds are priced are listed once, in
+  * [[graft.SparkEntry.SharedBuilds]].
   *
   * Invalidation contract (the Clustering rationale, preserved exactly):
   *  - keyed by DIR with the fingerprint stored ALONGSIDE the value (not
@@ -21,10 +27,18 @@ import org.apache.spark.sql.SparkSession
   *    colliding on a 32-bit hash would silently reuse a stale artifact,
   *    the exact hazard the fingerprint exists to close (driver-side and
   *    tiny, so the long key costs nothing);
+  *  - a superseded value is NOT released: a consumer on another thread
+  *    may still be reading its localCheckpoint frame, and local
+  *    checkpoints have no lineage to recompute from. The ContextCleaner
+  *    reclaims its blocks once the frame is unreferenced;
   *  - WEAK session keys, so stopped test sessions are not kept alive;
-  *  - compute runs inside the per-session lock: concurrent same-session
-  *    callers wait for ONE training run instead of racing duplicates
-  *    (training is deterministic, so waiting is strictly cheaper).
+  *  - compute runs ONCE per key and OUTSIDE the per-session monitor:
+  *    the monitor only installs a per-key promise, concurrent
+  *    same-key callers wait on it instead of racing duplicates
+  *    (training is deterministic, so waiting is strictly cheaper), and
+  *    other keys — and nested memo calls — never wait behind a
+  *    multi-second Spark job. A compute that throws is not cached: the
+  *    next call (or a waiter) computes afresh.
   */
 private[graft] final class SessionMemo[V](table: String) {
   private val keyed = new SessionMemo.Keyed[String, V](table)
@@ -38,8 +52,7 @@ private[graft] final class SessionMemo[V](table: String) {
   def getOrCompute(s: SparkSession, dir: String)(compute: => V): V =
     keyed.getOrCompute(s, dir, dir)(compute)
 
-  /** Bench hook: drop this session's entries so a timed call prices the
-    * computation the consumers amortize (the pair_build_sec pattern). */
+  /** See [[SessionMemo.Keyed.evict]]. */
   def evict(s: SparkSession): Unit = keyed.evict(s)
 }
 
@@ -51,7 +64,7 @@ private[graft] object SessionMemo {
   final class Keyed[K, V](table: String) {
     private val cache = java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession,
-        scala.collection.mutable.Map[K, (String, V)]]())
+        scala.collection.mutable.Map[K, (String, Promise[V])]]())
 
     def fingerprint(s: SparkSession, dir: String): String = {
       val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
@@ -65,47 +78,61 @@ private[graft] object SessionMemo {
     private def perSession(s: SparkSession) = cache.synchronized {
       var m = cache.get(s)
       if (m == null) {
-        m = scala.collection.mutable.Map.empty[K, (String, V)]
+        m = scala.collection.mutable.Map.empty[K, (String, Promise[V])]
         cache.put(s, m)
       }
       m
     }
 
+    @annotation.tailrec
     def getOrCompute(s: SparkSession, dir: String, key: K)(compute: => V): V = {
       val m = perSession(s)
       val fp = fingerprint(s, dir)
-      m.synchronized {
+      val (slot, owner) = m.synchronized {
         m.get(key) match {
-          case Some((cachedFp, v)) if cachedFp == fp => v
-          case stale =>
-            val v = compute
-            m.put(key, (fp, v))
-            // a fingerprint-superseded value is released AFTER the
-            // replacement computes: the stale frame's pinned blocks
-            // would otherwise strand until GC + ContextCleaner
-            stale.foreach { case (_, old) => release(old) }
-            v
+          case Some((cachedFp, p)) if cachedFp == fp => (p, false)
+          case _ =>
+            val p = Promise[V]()
+            m.put(key, (fp, p))
+            (p, true)
         }
+      }
+      if (owner) {
+        val v = try compute catch { case e: Throwable =>
+          m.synchronized { if (m.get(key).exists(_._2 eq slot)) m.remove(key) }
+          slot.failure(e)
+          throw e
+        }
+        slot.success(v)
+        v
+      } else Await.ready(slot.future, Duration.Inf).value.get match {
+        case Success(v) => v
+        case Failure(_) => getOrCompute(s, dir, key)(compute)
       }
     }
 
+    /** Drop this session's entries and release the blocks behind them,
+      * so a timed call prices the computation the consumers amortize.
+      * QUIESCENT PATHS ONLY — Bench, SharedBuildProfile and perfbench's
+      * traced pricing, each single-threaded between queries: a consumer
+      * still reading an evicted localCheckpoint frame fails with
+      * "checkpoint block not found". */
     def evict(s: SparkSession): Unit = cache.synchronized {
       val m = cache.get(s)
       if (m != null) m.synchronized {
-        m.values.foreach { case (_, v) => release(v) }
+        m.values.foreach { case (_, p) => p.future.value.foreach(_.foreach(release)) }
         m.clear()
       }
     }
 
-    /** Release checkpoint/cache block storage behind an evicted or
-      * fingerprint-superseded value (round 16, r15 advice item 3):
-      * `Dataset.unpersist` covers CacheManager entries and the shim
-      * covers localCheckpoint RDD blocks — without this, Bench's
-      * evict-then-reprice transiently doubles the pinned footprint and
-      * a refreshed corpus strands the old corpus-sized pin for the
-      * session lifetime. Values nested one Product level deep (e.g.
-      * the (model, frame) pairs) are walked; release failures are
-      * non-fatal by design — eviction is hygiene, not correctness. */
+    /** Release checkpoint/cache block storage behind an evicted value
+      * (round 16, r15 advice item 3): `Dataset.unpersist` covers
+      * CacheManager entries and the shim covers localCheckpoint RDD
+      * blocks — without this, Bench's evict-then-reprice transiently
+      * doubles the pinned footprint. Values nested one Product level
+      * deep (e.g. the (model, frame) pairs) are walked; release
+      * failures are non-fatal by design — eviction is hygiene, not
+      * correctness. */
     private def release(v: Any): Unit = v match {
       case df: org.apache.spark.sql.Dataset[_] =>
         try {

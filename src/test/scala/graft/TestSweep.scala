@@ -24,6 +24,11 @@ object TestSweep {
         })
       }
       futures.flatMap(_.get())
-    } finally pool.shutdown()
+    } finally {
+      // a failed sweep must not leave in-flight Spark jobs running into
+      // the next test
+      pool.shutdown()
+      pool.awaitTermination(30, java.util.concurrent.TimeUnit.MINUTES)
+    }
   }
 }
