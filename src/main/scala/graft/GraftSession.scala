@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, FsConstants, LocalFileSystem}
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
+
+import graft.util.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
 
 /** Session factory with graft's recommended configuration: UTC session
   * time, AQE with skew handling, shuffle parallelism sized to the
@@ -11,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * shuffle-partition count change (rule of thumb: 2–3× total cores, or
   * let AQE coalesce from a higher initial number).
   */
-object GraftSession {
+object GraftSession extends Logging {
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -36,13 +41,37 @@ object GraftSession {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")
+      // Local file I/O without a process per file: with no libhadoop on
+      // the classpath, Hadoop's local FS spawns `chmod` for every file it
+      // creates (twice, with the `.crc`) and every directory it makes, and
+      // FileContext (Spark's checkpoint logs) spawns `readlink` per path.
+      // These classes set the same permissions through java.nio. Only
+      // file:// changes; a later `.config(...)` of either key wins.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   /** Build and finish wiring (extension injection needs the config path;
     * runtime registration covers externally-built sessions too). */
   def create(master: String, shufflePartitions: Int): SparkSession = {
     val spark = builder(master, shufflePartitions).getOrCreate()
+    for (found <- pinnedLocalFs(spark.sparkContext.hadoopConfiguration))
+      logWarning(s"file:// resolves to $found, not ${classOf[NioRawLocalFileSystem].getName}: " +
+        "a local FileSystem was cached before this session was built, so local creates " +
+        "and mkdirs keep Hadoop's per-file chmod process")
     plans.GraftFunctions.register(spark)
     plans.TopKPerGroup.install(spark)
     spark
   }
+
+  /** The raw class `file://` resolves to, when `conf` asks for
+    * [[NioLocalFileSystem]] but gets another. Hadoop caches file systems
+    * by scheme and user, not by configuration, so a `file://` access made
+    * before the session was built pins the class it resolved then. */
+  private[graft] def pinnedLocalFs(conf: Configuration): Option[String] =
+    if (conf.get("fs.file.impl") != classOf[NioLocalFileSystem].getName) None
+    else FileSystem.get(FsConstants.LOCAL_FS_URI, conf) match {
+      case _: NioLocalFileSystem => None
+      case l: LocalFileSystem => Some(l.getRaw.getClass.getName)
+      case other => Some(other.getClass.getName)
+    }
 }

@@ -329,22 +329,25 @@ object Sinks {
       // Range endpoints come from (event_type, event_id) when the schema
       // carries them — the sink itself is schema-agnostic (the
       // SnapshotTableSink rule), so non-event epochs (e.g. a gated
-      // shard-manifest stream) commit rows-only markers
+      // shard-manifest stream) commit rows-only markers. The row count
+      // rides in the range aggregate, so an event epoch costs one job
       val hasEv = batch.columns.contains("event_type") &&
         batch.columns.contains("event_id")
-      val ranges =
-        if (!hasEv) ""
-        else batch.groupBy(col("event_type"))
-          .agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"))
-          .collect()
-          .sortBy(_.getString(0))
-          .map(r => s"${r.getString(0)}=${r.getLong(1)}..${r.getLong(2)}")
-          .mkString(",")
+      val (ranges, rows) =
+        if (!hasEv) ("", batch.count())
+        else {
+          val groups = batch.groupBy(col("event_type"))
+            .agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"), count(lit(1)).as("n"))
+            .collect()
+            .sortBy(_.getString(0))
+          (groups.map(r => s"${r.getString(0)}=${r.getLong(1)}..${r.getLong(2)}").mkString(","),
+            groups.map(_.getLong(3)).sum)
+        }
       val commits = new Path(outDir, "_commits")
       fs.mkdirs(commits)
       val tmpMarker = new Path(commits, s".tmp.$batchId")
       val out = fs.create(tmpMarker, true)
-      out.write(s"$ranges;rows=${batch.count()}\n".getBytes("UTF-8")); out.close()
+      out.write(s"$ranges;rows=$rows\n".getBytes("UTF-8")); out.close()
       renameOrThrow(fs, tmpMarker, new Path(commits, batchId.toString))
       batch.unpersist()
     }
