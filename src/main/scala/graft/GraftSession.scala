@@ -50,8 +50,10 @@ object GraftSession extends Logging {
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
-  /** Build and finish wiring (extension injection needs the config path;
-    * runtime registration covers externally-built sessions too). */
+  /** Build the session. The builder's extension carries graft's planner
+    * strategy and SQL functions; registering the functions at runtime as
+    * well covers a session that `getOrCreate` returned already built
+    * without it. */
   def create(master: String, shufflePartitions: Int): SparkSession = {
     val spark = builder(master, shufflePartitions).getOrCreate()
     for (found <- pinnedLocalFs(spark.sparkContext.hadoopConfiguration))
@@ -59,7 +61,6 @@ object GraftSession extends Logging {
         "a local FileSystem was cached before this session was built, so local creates " +
         "and mkdirs keep Hadoop's per-file chmod process")
     plans.GraftFunctions.register(spark)
-    plans.TopKPerGroup.install(spark)
     spark
   }
 

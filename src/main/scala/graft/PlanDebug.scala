@@ -1,18 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: prints physical-plan evidence for the scale checklist in
-  * SURVEY.md §4 (pushdown, pruning, broadcasts, codegen spans).
+  * SURVEY.md §4 (pushdown, pruning, broadcasts, codegen spans), on a
+  * factory session, so the plans are the ones `GraftExtensions` shapes.
   * Run: sbt "runMain graft.PlanDebug [queryName ...]"
   */
 object PlanDebug {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = "/root/testdata/sf0.01"
+    val (spark, d) = tools.DevTool.session()
     val names = if (args.nonEmpty) args.toSeq else Seq("q6_filter_agg", "q5_region_join", "q1_pricing")
     names.foreach { n =>
       println(s"========== $n ==========")

@@ -95,9 +95,6 @@ object Tables {
             try n.conf.set(k, v) catch { case _: org.apache.spark.sql.AnalysisException => () }
           }
           n.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          // runtime-registered functions don't carry over to a new session;
-          // queries compose graft expressions onto this relation's datasets
-          graft.plans.GraftFunctions.register(n)
           n
         })
         load(ns, d, "events").withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -20,14 +21,13 @@ object VecFns {
     aggregate(v, lit(0.0), (acc, x) => acc + x)
 
   /** Native codegen'd dot product (graft.functions.DotProduct). Works
-    * directly on `array<float>` with double accumulation; the session must
-    * have graft functions registered (GraftFunctions.register / extension). */
+    * directly on `array<float>` with double accumulation. */
   def dot(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
+    GraftFunctions.call("graft_dot", a, b)
 
-  /** Interpreted fallback with identical semantics (for sessions without
-    * the registry; ~10× slower per pair). Matching [[DotProduct]] takes
-    * care: a bare `zip_with` pads the shorter array with nulls and a
+  /** Interpreted reference with identical semantics, which NullSafetySpec
+    * checks the [[DotProduct]] kernel against (~10× slower per pair).
+    * Matching the kernel takes care: a bare `zip_with` pads the shorter array with nulls and a
     * null product poisons the whole fold to NULL, where the native
     * expression zero-fills null elements and min-truncates unequal
     * lengths — hence the coalesces (null element → 0 contribution) which

@@ -314,7 +314,6 @@ object Clustering {
     * the greedy keep-first policy of dd_exact, lifted to semantic
     * space. */
   def clSemanticDedup: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     val asn = finalAssign(s, d).withColumn("nrm", l2norm(col("e")))
     // hot-cluster bound, same discipline as the LSH bucket cap: pair
     // generation runs over at most MaxClusterMembers (smallest vec_ids)
@@ -448,7 +447,6 @@ object Clustering {
     * cluster scale) so iterations — and sibling operators — never re-run
     * the self-join. */
   def clPagerank: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d).filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding").as("e"))
     val n = emb.count() // driver scalar: node count (one narrow scan)
@@ -721,7 +719,6 @@ object Clustering {
     * reachability closure — exact but O(Σ cluster²) rows, which is why
     * the ORACLE is the small-SF check and hash-min is the engine. */
   def clDbscan: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d).filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding").as("e"))
     val pairs = simEdgePairs(s, d, SimEdgeThreshold) // memoized, shared with cl_pagerank

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.functions.TextFns._
 import graft.functions.VecFns._
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -140,7 +141,6 @@ object Dedup {
     * aggregation-shaped plan pays a ~300× row explosion for the same
     * result). */
   private def sigDf(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     // Round-4 hardening: fused tokenize+shingle+minhash in ONE native
     // expression (graft.functions.MinHashTokens) — the column-composed
     // chain is an optimizer trap: alias inlining into the shingle
@@ -157,7 +157,7 @@ object Dedup {
     // pass in ddSigWidth and the shingle/phash kernels keep theirs.
     Tables.documents(s, d)
       .select(col("doc_id"),
-        call_function("graft_minhash_tokens", tokens(col("text"))).as("sig"))
+        GraftFunctions.call("graft_minhash_tokens", tokens(col("text"))).as("sig"))
       .filter(element_at(col("sig"), 1).isNotNull)
   }
 
@@ -418,11 +418,10 @@ object Dedup {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= 8)
-    graft.plans.GraftFunctions.register(s)
     // fused 5-gram hashing (graft_gram_buckets, mod 0) — bit-equal to
     // the md5/conv chain by GramBucketsSpec
     val hashed = docs.select(col("doc_id"),
-      call_function("graft_gram_buckets", col("tk"), lit(5), lit(8), lit(0)).as("hs"))
+      GraftFunctions.call("graft_gram_buckets", col("tk"), lit(5), lit(8), lit(0)).as("hs"))
     val fps = hashed.select(col("doc_id"), explode(array_distinct(expr(
       "transform(sequence(1, size(hs) - 3), i -> array_min(slice(hs, i, 4)))"))).as("fp"))
     val bounded = graft.plans.TopKPerGroup.transform(
@@ -641,7 +640,6 @@ object Dedup {
     * The oracle-pinned query uses dims 1–4 on the test corpus; see
     * [[ddEmbedCosFor]] for the corpus-scaled form. */
   def ddEmbedCos: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     ddEmbedCosFor(
       Tables.embeddings(s, d).filter(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding").as("e")),
@@ -896,7 +894,6 @@ object Dedup {
     * otherwise diverge between branches, defeat exchange reuse, and
     * re-run the tokenizer). */
   def ddSubstring: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= 8)
@@ -904,7 +901,7 @@ object Dedup {
     // value) — bit-equal to the md5/conv chain by GramBucketsSpec, no
     // per-window gram string or hex round-trip in the hot pass
     val wins = docs.select(col("doc_id"), explode(
-      call_function("graft_gram_buckets", col("tk"), lit(8), lit(8), lit(0))).as("h"))
+      GraftFunctions.call("graft_gram_buckets", col("tk"), lit(8), lit(8), lit(0))).as("h"))
     val perPair = wins.groupBy(col("h"), col("doc_id"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(true) // collapsed (h, doc) frame feeds both branches once
@@ -967,7 +964,6 @@ object Dedup {
     * island window (doc-keyed — bounded by doc length) and the two
     * shrinking aggregates ride on it. */
   def ddDupSpan: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= 8)
@@ -975,7 +971,7 @@ object Dedup {
       .select(col("doc_id"), (size(col("tk")) - 7).cast("long").as("n_windows"),
         // fused 8-gram hashing (graft_gram_buckets, mod 0) — bit-equal
         // to the md5/conv chain by GramBucketsSpec
-        posexplode(call_function("graft_gram_buckets",
+        posexplode(GraftFunctions.call("graft_gram_buckets",
           col("tk"), lit(8), lit(8), lit(0)))
           .as(Seq("pos", "h")))
       .localCheckpoint(true) // position frame feeds count + join branches once;
@@ -1070,12 +1066,11 @@ object Dedup {
     * collect_list reassembly of documents. Pure integer/string
     * arithmetic end to end — hash-exact cross-engine. */
   def ddSpanTrim: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val base = docs.select(col("doc_id"), tokens(col("text")).as("tk"))
     val wins = base.filter(size(col("tk")) >= 8)
       .select(col("doc_id"),
-        posexplode(call_function("graft_gram_buckets",
+        posexplode(GraftFunctions.call("graft_gram_buckets",
           col("tk"), lit(8), lit(8), lit(0))).as(Seq("pos", "h")))
       .localCheckpoint(true) // one tokenize+hash pass feeds census + join
     val dupHashes = wins.groupBy(col("h"))
@@ -1315,7 +1310,6 @@ object Dedup {
       ppjoinPairsBuild(s, d).localCheckpoint(false))
 
   private def ppjoinPairsBuild(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val (tNum, tDen) = (9, 10) // J >= 9/10 as an exact rational
     // Shingles WITHOUT higher-order functions: posexplode materializes
     // the token stream once, two leads over a doc-keyed window build the
@@ -1379,7 +1373,7 @@ object Dedup {
       .join(sdocs.select(col("doc_id").as("id_a"), col("stk").as("s_a")), "id_a")
       .join(sdocs.select(col("doc_id").as("id_b"), col("stk").as("s_b")), "id_b")
       .withColumn("n_common",
-        call_function("graft_overlap", col("s_a"), col("s_b")).cast("long"))
+        GraftFunctions.call("graft_overlap", col("s_a"), col("s_b")).cast("long"))
       .withColumn("n_union",
         size(col("s_a")).cast("long") + size(col("s_b")).cast("long") - col("n_common"))
       .filter(lit(tDen) * col("n_common") >= lit(tNum) * col("n_union"))
@@ -1476,10 +1470,9 @@ object Dedup {
     * both engines; a per-pair mean would add float-sum order hazards
     * for no decision value). */
   def ddSigWidth: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     val wide = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"),
-        call_function("graft_minhash_tokens_w", tokens(col("text")), lit(8)).as("sig"))
+        GraftFunctions.call("graft_minhash_tokens_w", tokens(col("text")), lit(8)).as("sig"))
       .filter(element_at(col("sig"), 1).isNotNull)
     val mh = wide.select(col("doc_id") +:
       (0 until 32).map(j => element_at(col("sig"), j + 1).as(s"m$j")): _*)

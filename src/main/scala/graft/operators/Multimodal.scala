@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFns._
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -188,12 +189,11 @@ object Multimodal {
     * chunk index (a totals branch off the raw chunk frame would be a
     * second full chunk+md5 pass over the corpus). */
   def mmCdcChunk: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     Tables.documents(s, d)
       .filter(col("text").isNotNull)
       .withColumn("payload", col("text").cast("binary"))
       .select(col("doc_id"), formatOf(col("doc_id")).as("format"), col("payload"),
-        call_function("graft_cdc_cuts", col("payload"), lit(16), lit(5), lit(128)).as("cuts"))
+        GraftFunctions.call("graft_cdc_cuts", col("payload"), lit(16), lit(5), lit(128)).as("cuts"))
       .select(col("format"), col("payload"), col("cuts"), posexplode(col("cuts")))
       .withColumn("start",
         when(col("pos") === 0, lit(0)).otherwise(element_at(col("cuts"), col("pos"))))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFns._
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -80,13 +81,12 @@ object QualityClassifier {
   private def labeledFeats(docs: DataFrame, target: DataFrame): DataFrame = docs
     .select(col("doc_id"), col("source"),
       explode(concat(
-        call_function("graft_gram_buckets", col("tk"), lit(1), lit(8), lit(B)),
-        call_function("graft_gram_buckets", col("tk"), lit(2), lit(8), lit(B)))).as("b"))
+        GraftFunctions.call("graft_gram_buckets", col("tk"), lit(1), lit(8), lit(B)),
+        GraftFunctions.call("graft_gram_buckets", col("tk"), lit(2), lit(8), lit(B)))).as("b"))
     .crossJoin(broadcast(target))
     .withColumn("y", col("source") === col("ts"))
 
   private def corpus(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     // widened (round 15): the gram-bucket kernel + feature explode run
     // directly on this scan, which a single small file serializes
     Tables.widen(Tables.documents(s, d))

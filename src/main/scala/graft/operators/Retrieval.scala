@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFns._
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -331,7 +332,6 @@ object Retrieval {
     * The dtk/sizes shapes below are therefore exactly r15's. */
   private def truthFrameBy(s: SparkSession, d: String,
       featsOf: Column => Column): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val base = docs.select(col("doc_id"), tokens(col("text")).as("tk"))
     val dtk = base.select(col("doc_id"),
@@ -352,14 +352,14 @@ object Retrieval {
     val numBits = math.min(67108864L, math.max(64L, math.ceil(
       -items * math.log(0.01) / (math.log(2) * math.log(2))).toLong))
     val bfRow = qtok.select(xxhash64(col("t")).as("h"))
-      .agg(call_function("graft_bloom_agg", col("h"),
+      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
         lit(items), lit(numBits)).as("bf"))
       .head()
     // empty query set → null aggregate → no pre-filter (the join below
     // is empty either way; EmptyInputSpec's contract)
     val dtkF =
       if (bfRow.isNullAt(0)) dtk
-      else dtk.filter(call_function("graft_bloom_contains",
+      else dtk.filter(GraftFunctions.call("graft_bloom_contains",
         lit(bfRow.getAs[Array[Byte]](0)), xxhash64(col("t"))))
     // shuffle-hash, not broadcast: qtok is bounded by the sampled docs'
     // VOCABULARY (unbounded per doc length), and the joined stream must

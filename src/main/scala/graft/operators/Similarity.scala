@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.VecFns._
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,7 +79,6 @@ object Similarity {
 
 
   private[operators] def vectors(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     Tables.embeddings(s, d)
       // a vector that failed to embed upstream cannot be indexed or
       // searched — drop it (dirty corpora are the norm; NullInputSpec)
@@ -378,7 +378,6 @@ object Similarity {
     * collect the identical book the batch build broadcasts. */
   private def assignBook(cents: DataFrame, k: Int,
       twoLevel: Boolean): (DataFrame, Int) = {
-    graft.plans.GraftFunctions.register(cents.sparkSession)
     // [parent, cid, cn, ce(dim)] blocks; one-level parents are the cids
     // themselves (ignored under probes = 0)
     def cbOf(src: DataFrame): DataFrame = src
@@ -435,7 +434,7 @@ object Similarity {
     val (book, probes) = assignBook(cents, k, twoLevel)
     v.crossJoin(broadcast(book))
       .select(Seq(col("vec_id")) ++ carry.map(col) :+
-        call_function("graft_ivf_assign", col("e"), col("nrm"),
+        GraftFunctions.call("graft_ivf_assign", col("e"), col("nrm"),
           col("sb"), col("cb"), lit(probes)).as("cell"): _*)
       // -1 = no eligible cell (empty codebook): drop, restoring the
       // empty-join semantics of the aggregation shape this replaces
@@ -882,7 +881,7 @@ object Similarity {
     // per vector) — at 100 TB the encode stage's dominant cost.
     val codes = balanceNarrow(v.crossJoin(broadcast(flatPqBook(cents)))
       .select(col("vec_id"), col("nrm"),
-        call_function("graft_pq_encode", col("e"), col("pcb"), lit(m)).as("codes"))
+        GraftFunctions.call("graft_pq_encode", col("e"), col("pcb"), lit(m)).as("codes"))
       .filter(col("codes").isNotNull), v)
     // query-side LUT: flattened 8×16 table ordered by (subspace, code)
     val lutEntries = array((0 until m).map { j =>
@@ -901,7 +900,7 @@ object Similarity {
     val scored = codes.crossJoin(broadcast(luts))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("approx_cos",
-        call_function("graft_pq_score", col("lut"), col("codes")) / (col("qn") * col("nrm")))
+        GraftFunctions.call("graft_pq_score", col("lut"), col("codes")) / (col("qn") * col("nrm")))
     val shortlist = graft.plans.TopKPerGroup.transform(scored,
       Seq(col("query_id")), Seq(col("approx_cos").desc, col("vec_id").asc), 50)
     // exact re-rank of the 50-candidate shortlist (queries broadcast)
@@ -1568,7 +1567,7 @@ object Similarity {
         balanceNarrow(assignCells(v, cents, nCells, twoLevel)
           .crossJoin(broadcast(flatPqBook(cents.select(col("cid"), col("ce")))))
           .select(col("vec_id"), col("nrm"), col("cell"),
-            call_function("graft_pq_encode", col("e"), col("pcb"), lit(m)).as("codes"))
+            GraftFunctions.call("graft_pq_encode", col("e"), col("pcb"), lit(m)).as("codes"))
           .filter(col("codes").isNotNull), v)
       } else {
         // residual coding: assign cell first (the shared assignCells
@@ -1583,7 +1582,7 @@ object Similarity {
           .crossJoin(broadcast(flatPqBook(
             rcbs.select(col("rid").as("cid"), col("rce").as("ce")))))
           .select(col("vec_id"), col("nrm"), col("cell"),
-            call_function("graft_pq_encode", col("r"), col("pcb"), lit(m)).as("codes"))
+            GraftFunctions.call("graft_pq_encode", col("r"), col("pcb"), lit(m)).as("codes"))
           .filter(col("codes").isNotNull), v)
       }
     val probes = {
@@ -1613,7 +1612,7 @@ object Similarity {
           x => x.getField("val")).as("lut"))
     val probedLuts = luts.join(probes, col("query_id") === col("pqid"))
       .select(col("query_id"), col("qn"), col("lut"), col("pcell"), col("pdot"))
-    val adc = call_function("graft_pq_score", col("lut"), col("codes"))
+    val adc = GraftFunctions.call("graft_pq_score", col("lut"), col("codes"))
     val scored = encoded.join(broadcast(probedLuts),
         encoded("cell") === col("pcell") && col("vec_id") =!= col("query_id"))
       .withColumn("approx_cos",

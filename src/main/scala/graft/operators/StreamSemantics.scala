@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -317,10 +318,9 @@ object StreamSemantics {
     * byte-level vectors are pinned in RowBinarySpec — binary output is not
     * expressible in the SQL oracle). */
   def slRowbinary: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     Tables.events(s, d)
       .select(col("event_id"),
-        hex(call_function("graft_rowbinary",
+        hex(GraftFunctions.call("graft_rowbinary",
           struct(col("event_id"), col("user_id"), col("event_type"),
             col("ts"), col("value")))).as("rowbinary_hex"))
       .orderBy(col("event_id"))
@@ -390,12 +390,11 @@ object StreamSemantics {
     * encode∘decode = id on real data; byte-level golden vectors for the
     * encoding itself are pinned in ProtoWireSpec. */
   def slProto: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     Tables.events(s, d)
-      .select(call_function("graft_proto",
+      .select(GraftFunctions.call("graft_proto",
         struct(col("event_id"), col("user_id"), col("event_type"),
           col("ts"), col("value"), col("props"))).as("pb"))
-      .select(call_function("graft_proto_decode", col("pb"),
+      .select(GraftFunctions.call("graft_proto_decode", col("pb"),
         lit("event_id BIGINT, user_id BIGINT, event_type STRING, ts TIMESTAMP, value DOUBLE, props STRING")).as("rec"))
       .select(col("rec.event_id").as("event_id"), col("rec.user_id").as("user_id"),
         col("rec.event_type").as("event_type"), col("rec.ts").as("ts"),

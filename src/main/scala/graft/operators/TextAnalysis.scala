@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFns._
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -840,7 +841,7 @@ object TextAnalysis {
   private[graft] def bpeEncode(word: Column,
       merges: Seq[(String, String)]): Column =
     if (merges.isEmpty) split(word, "")
-    else call_function("graft_bpe_fuse", split(word, ""),
+    else GraftFunctions.call("graft_bpe_fuse", split(word, ""),
       typedLit(merges.map(_._1)), typedLit(merges.map(_._2)))
 
   /** The composed-HOF encode — SEMANTICS REFERENCE ONLY (BpeFuseSpec
@@ -867,7 +868,6 @@ object TextAnalysis {
     mergeMemo.getOrCompute(s, d) { trainBpe(s, d) }
 
   private def trainBpe(s: SparkSession, d: String): Seq[(Long, String, String, String, Long)] = {
-    graft.plans.GraftFunctions.register(s) // graft_bpe_fuse below
     val hist = Tables.documents(s, d)
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wc"))
@@ -893,7 +893,7 @@ object TextAnalysis {
           merges += ((k.toLong, l, r, l + r, c))
           // same native kernel apply uses (one-entry table): a trained
           // merge is a streamed/applied merge by construction
-          cur = cur.select(call_function("graft_bpe_fuse", col("syms"),
+          cur = cur.select(GraftFunctions.call("graft_bpe_fuse", col("syms"),
             typedLit(Seq(l)), typedLit(Seq(r))).as("syms"), col("wc"))
           k += 1
         case None => exhausted = true
@@ -914,7 +914,6 @@ object TextAnalysis {
     * n_chars (every fuse consumes exactly one symbol) ties the output
     * to ta_tokens' exact char accounting. */
   def taBpeApply: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s) // graft_bpe_fuse via bpeEncode
     val merges = trainedBpeMerges(s, d).map(m => (m._2, m._3))
     val tk = tokens(col("text"))
     Tables.documents(s, d)
@@ -960,11 +959,10 @@ object TextAnalysis {
     * kernel 9x in a single select would run the full codepoint walk
     * once per slot. */
   private def censusPerDoc(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val classes = ScriptClasses
     val withCen = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
-        call_function("graft_script_census", col("text")).as("cen"))
+        GraftFunctions.call("graft_script_census", col("text")).as("cen"))
     val base = withCen.select(
       col("doc_id") +: col("lang") +:
         coalesce(element_at(col("cen"), 1), lit(0L)).as("n_cp") +:

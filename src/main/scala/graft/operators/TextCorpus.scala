@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFns._
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -318,7 +319,6 @@ object TextCorpus {
     * per-bucket log-ratio is computed once (B evaluations of ln), so the
     * per-doc sum is a pure decimal fold of bit-identical doubles. */
   def taDsir: Q = (s, d) => {
-    graft.plans.GraftFunctions.register(s)
     val B = DsirBuckets
     val docs = Tables.documents(s, d)
       .filter(col("text").isNotNull && col("source").isNotNull)
@@ -334,8 +334,8 @@ object TextCorpus {
     def feats(frame: DataFrame): DataFrame = frame
       .select(col("doc_id"), col("source"),
         explode(concat(
-          call_function("graft_gram_buckets", col("tk"), lit(1), lit(8), lit(B)),
-          call_function("graft_gram_buckets", col("tk"), lit(2), lit(8), lit(B)))).as("b"))
+          GraftFunctions.call("graft_gram_buckets", col("tk"), lit(1), lit(8), lit(B)),
+          GraftFunctions.call("graft_gram_buckets", col("tk"), lit(2), lit(8), lit(B)))).as("b"))
       .crossJoin(broadcast(target))
     // B-row metadata pin: cnt feeds grand AND ratio — left lazy, the two
     // consumers' diverging projections defeat exchange reuse and the

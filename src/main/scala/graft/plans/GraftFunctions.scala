@@ -1,17 +1,23 @@
 package graft.plans
 
 import graft.functions.{DotProduct, MinHashSig, MinHashTokens, PqAdcScore, ProtoWireDecode, ProtoWireEncode, RowBinaryEncode, ShardedBloomProbe, SortedOverlapCount, VerticaNativeEncode}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftShim, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registry for graft's native Catalyst expressions.
+/** Registry for graft's native Catalyst expressions: one builder per
+  * name in [[all]], shared by every way of reaching them.
   *
-  * Two entry points:
+  * DataFrame code builds the expression as a Column with
+  * `GraftFunctions.call("graft_dot", a, b)`. That needs nothing installed
+  * in the session, so it works on any session, including one an
+  * application built itself.
+  *
+  * SQL text (and `call_function`) looks the name up in the session's
+  * function registry, so the session needs one of:
   *  - `spark.sql.extensions=graft.plans.GraftExtensions` at session build
-  *    (the production path, via SparkSessionExtensions), or
-  *  - `GraftFunctions.register(spark)` at runtime (idempotent; used by the
-  *    operators so any session works).
+  *    (set by [[graft.GraftSession]]), or
+  *  - `GraftFunctions.register(spark)` at runtime (idempotent).
   */
 object GraftFunctions {
 
@@ -266,6 +272,18 @@ object GraftFunctions {
       val v = e.eval()
       if (v == null) "" else v.toString
     }
+
+  private val builders: Map[String, Seq[Expression] => Expression] =
+    all.map { case (id, _, build) => id.funcName -> build }.toMap
+
+  /** `name`'s expression over `args` as a Column. Same builder, so the
+    * same arity and literal checks, as the SQL path; an unknown name or
+    * a bad argument list throws here, when the Column is built. */
+  def call(name: String, args: Column*): Column = {
+    val build = builders.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown graft function: $name"))
+    GraftShim.column(build(args.map(GraftShim.expression)))
+  }
 
   def register(spark: SparkSession): Unit = all.foreach { case (id, info, builder) =>
     if (!spark.sessionState.functionRegistry.functionExists(id)) {

@@ -22,9 +22,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * ordering (make it total) for deterministic results.
   *
   * Wiring: `TopKPerGroup.transform` builds the logical node directly and
-  * `GraftStrategy` plans it; registered per-session via
-  * `spark.experimental.extraStrategies` (see `TopKPerGroup.install`) or
-  * `GraftExtensions` (injectPlannerStrategy).
+  * `GraftStrategy` plans it; the strategy comes from `GraftExtensions`
+  * (injectPlannerStrategy) or, on any other session, from
+  * `spark.experimental.extraStrategies` (`TopKPerGroup.install`, on first
+  * use).
   */
 case class TopKPerGroupNode(
     k: Int,
@@ -138,11 +139,16 @@ object GraftStrategy extends SparkStrategy {
 
 object TopKPerGroup {
 
-  /** Register the strategy on a session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(GraftStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftStrategy
+  /** Register the strategy on a session (idempotent), on first use by
+    * [[transform]]. The check and the append hold the session's
+    * `experimental` lock, so concurrent callers on one session add it
+    * once. */
+  private def install(spark: SparkSession): Unit = {
+    val ex = spark.experimental
+    ex.synchronized {
+      if (!ex.extraStrategies.contains(GraftStrategy)) {
+        ex.extraStrategies = ex.extraStrategies :+ GraftStrategy
+      }
     }
   }
 

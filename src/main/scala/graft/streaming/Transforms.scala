@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
@@ -333,13 +334,12 @@ object Transforms {
   def dsirScore(docs: DataFrame, logRatio: Map[Long, Double],
       minLogwPerFeat: Double = 0.0,
       buckets: Int = graft.operators.TextCorpus.DsirBuckets): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val lrCol = if (logRatio.isEmpty) map().cast("map<bigint,double>")
       else map(logRatio.toSeq.flatMap { case (b, r) => Seq(lit(b), lit(r)) }: _*)
     val toks = graft.functions.TextFns.tokens(col("text"))
     val bkts = concat(
-      call_function("graft_gram_buckets", toks, lit(1), lit(8), lit(buckets)),
-      call_function("graft_gram_buckets", toks, lit(2), lit(8), lit(buckets)))
+      GraftFunctions.call("graft_gram_buckets", toks, lit(1), lit(8), lit(buckets)),
+      GraftFunctions.call("graft_gram_buckets", toks, lit(2), lit(8), lit(buckets)))
     val logw = aggregate(
       transform(bkts, b => coalesce(element_at(lrCol, b), lit(0.0))),
       lit(0.0), (acc, x) => acc + x)
@@ -375,13 +375,12 @@ object Transforms {
   def qlScore(docs: DataFrame, weights: Map[Long, Double],
       minScore: Double = 0.0,
       buckets: Int = graft.operators.TextCorpus.DsirBuckets): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val wCol = if (weights.isEmpty) map().cast("map<bigint,double>")
       else map(weights.toSeq.flatMap { case (b, w) => Seq(lit(b), lit(w)) }: _*)
     val toks = graft.functions.TextFns.tokens(col("text"))
     val bkts = concat(
-      call_function("graft_gram_buckets", toks, lit(1), lit(8), lit(buckets)),
-      call_function("graft_gram_buckets", toks, lit(2), lit(8), lit(buckets)))
+      GraftFunctions.call("graft_gram_buckets", toks, lit(1), lit(8), lit(buckets)),
+      GraftFunctions.call("graft_gram_buckets", toks, lit(2), lit(8), lit(buckets)))
     val wsum = aggregate(
       transform(bkts, b => coalesce(element_at(wCol, b), lit(0.0))),
       lit(0.0), (acc, x) => acc + x)
@@ -510,7 +509,6 @@ object Transforms {
         .withColumn("score", lit(null).cast("double"))
         .filter(lit(false))
     }
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     // inverted registry: term -> (idf, ascending query ids), CSR-flat;
     // idf is the scan form's exact driver-side arithmetic
     val inv: Seq[(String, Double, Seq[Long])] = queries.toSeq
@@ -523,7 +521,7 @@ object Transforms {
       }
     val qoffs = inv.scanLeft(0)((acc, e) => acc + e._3.length)
     val zeroD = lit(java.math.BigDecimal.ZERO).cast("decimal(38,18)")
-    val probe = call_function("graft_bm25_probe",
+    val probe = GraftFunctions.call("graft_bm25_probe",
       graft.functions.TextFns.tokens(col("text")),
       typedLit(inv.map(_._1)), typedLit(inv.map(_._2)),
       typedLit(qoffs), typedLit(inv.flatMap(_._3)),
@@ -605,11 +603,10 @@ object Transforms {
         .withColumn("matched_phrases", array().cast("array<long>"))
         .withColumn("contaminated", lit(false))
     }
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     // CSR phrase registry, pid-sorted for deterministic construction
     val ordered = nonEmpty.toSeq.sortBy(_._1)
     val poffs = ordered.scanLeft(0)((acc, p) => acc + p._2.length)
-    val hits = call_function("graft_phrase_probe",
+    val hits = GraftFunctions.call("graft_phrase_probe",
       graft.functions.TextFns.tokens(col("text")),
       typedLit(ordered.map(_._1)), typedLit(poffs),
       typedLit(ordered.flatMap(_._2)))
@@ -648,13 +645,12 @@ object Transforms {
     * state, no shuffle, any throughput. */
   def ivfRoute(vectors: DataFrame, sb: Array[Double], cb: Array[Double],
       probes: Int, vecCol: String = "embedding"): DataFrame = {
-    graft.plans.GraftFunctions.register(vectors.sparkSession)
     vectors
       .withColumn("_nrm", graft.functions.VecFns.l2norm(col(vecCol)))
       // nrm = 0 → -1 (quarantine); nrm null (null embedding) → null;
       // both read as routed = false below
       .withColumn("cell",
-        when(col("_nrm") > 0, call_function("graft_ivf_assign",
+        when(col("_nrm") > 0, GraftFunctions.call("graft_ivf_assign",
           col(vecCol), col("_nrm"), lit(sb), lit(cb), lit(probes)))
         .when(col("_nrm").isNotNull, lit(-1L)))
       .withColumn("routed", coalesce(col("cell") >= 0, lit(false)))
@@ -705,7 +701,6 @@ object Transforms {
     * stateless (pure projection), so it composes with any watermark or
     * downstream gate. */
   def bpeTokens(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession) // graft_bpe_fuse
     val tk = graft.functions.TextFns.tokens(col("text"))
     docs
       .withColumn("pieces", flatten(transform(tk,
@@ -731,8 +726,7 @@ object Transforms {
   def scriptGate(docs: DataFrame, maxBadShare: Double = 0.05): DataFrame = {
     require(maxBadShare >= 0.0 && maxBadShare <= 1.0,
       s"maxBadShare must be in [0, 1] (got $maxBadShare)")
-    graft.plans.GraftFunctions.register(docs.sparkSession) // graft_script_census
-    val cen = call_function("graft_script_census", col("text"))
+    val cen = GraftFunctions.call("graft_script_census", col("text"))
     // bad = slot 9 of the census (ScriptCensus.SlotNames)
     docs.withColumn("_cen", cen)
       .filter(coalesce(element_at(col("_cen"), 1), lit(0L)) === 0 ||
@@ -912,18 +906,16 @@ object Transforms {
     // scheme and its filters would silently never match the probe
     val numBits = math.ceil(
       -expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    graft.plans.GraftFunctions.register(historical.sparkSession)
     historical
       .select(xxhash64(contentHash).as("h"))
-      .agg(call_function("graft_bloom_agg", col("h"),
+      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
         lit(expectedItems), lit(numBits)).as("bf"))
       .head().getAs[Array[Byte]](0)
   }
 
   /** Apply a built/loaded filter as the stateless ingest predicate. */
   def bloomGate(docs: DataFrame, filter: Array[Byte]): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
-    docs.filter(!call_function("graft_bloom_contains", lit(filter), xxhash64(contentHash)))
+    docs.filter(!GraftFunctions.call("graft_bloom_contains", lit(filter), xxhash64(contentHash)))
   }
 
   /** Persist / restore the serialized filter through the Hadoop
@@ -981,12 +973,11 @@ object Transforms {
     val perShard = math.max(1L, math.ceil(expectedItems.toDouble / shards).toLong)
     val numBits = math.ceil(
       -perShard * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    graft.plans.GraftFunctions.register(historical.sparkSession)
     historical
       .select(xxhash64(contentHash).as("h"))
       .withColumn("shard", pmod(col("h"), lit(shards.toLong)).cast("int"))
       .groupBy("shard")
-      .agg(call_function("graft_bloom_agg", col("h"),
+      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
         lit(perShard), lit(numBits)).as("filter"))
       .withColumn("num_shards", lit(shards))
   }
@@ -1008,7 +999,6 @@ object Transforms {
     * gate reads `num_shards` from it up front, and an unpersisted
     * build-side frame would recompute the whole build for that lookup. */
   def bloomGateSharded(docs: DataFrame, filters: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val ns = filters.select(col("num_shards")).distinct().collect()
     require(ns.length == 1,
       s"filters frame must carry one num_shards value; got ${ns.length}")
@@ -1021,7 +1011,7 @@ object Transforms {
       .withColumn(sCol, pmod(col(hCol), lit(shards.toLong)).cast("int"))
       .join(filters.select(col("shard").as(sCol), col("filter").as(fCol)),
         Seq(sCol), "left")
-      .filter(!call_function("graft_bloom_probe", col(sCol), col(fCol), col(hCol)))
+      .filter(!GraftFunctions.call("graft_bloom_probe", col(sCol), col(fCol), col(hCol)))
       .drop(sCol, hCol, fCol)
   }
 
@@ -1198,23 +1188,21 @@ object Transforms {
     val perProbeFpp = fpp / graft.operators.Dedup.NumBands
     val numBits = math.ceil(
       -nKeys * math.log(perProbeFpp) / (math.log(2) * math.log(2))).toLong
-    graft.plans.GraftFunctions.register(historical.sparkSession)
     withSig(historical)
       .filter(sigPresent)
       .select(posexplode(array(
         graft.operators.Dedup.bandKeysOf(col(SigCol)): _*)).as(Seq("b", "bk")))
       .select(xxhash64(col("bk")).as("h"))
-      .agg(call_function("graft_bloom_agg", col("h"),
+      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
         lit(nKeys), lit(numBits)).as("bf"))
       .head().getAs[Array[Byte]](0)
   }
 
   /** Gate a batch frame or a stream through a built/loaded band filter. */
   def nearDupGate(docs: DataFrame, filter: Array[Byte]): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val staged = withSig(docs)
     val anyBandHit = graft.operators.Dedup.bandKeysOf(col(SigCol))
-      .map(bk => call_function("graft_bloom_contains", lit(filter), xxhash64(bk)))
+      .map(bk => GraftFunctions.call("graft_bloom_contains", lit(filter), xxhash64(bk)))
       .reduce(_ || _)
     staged.filter(!sigPresent || !anyBandHit).drop(SigCol)
   }
@@ -1251,12 +1239,11 @@ object Transforms {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1) (got $fpp)")
     val numBits = math.ceil(
       -expectedLines * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    graft.plans.GraftFunctions.register(historical.sparkSession)
     historical
       .select(explode(graft.functions.TextFns.lineSegments(col("text"),
         graft.operators.Dedup.LineDupWidth)).as("seg"))
       .select(xxhash64(col("seg")).as("h"))
-      .agg(call_function("graft_bloom_agg", col("h"),
+      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
         lit(expectedLines), lit(numBits)).as("bf"))
       .head().getAs[Array[Byte]](0)
   }
@@ -1279,13 +1266,12 @@ object Transforms {
       maxDupShare: Double = 0.3): DataFrame = {
     require(maxDupShare >= 0.0 && maxDupShare <= 1.0,
       s"maxDupShare must be in [0, 1] (got $maxDupShare)")
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val segs = graft.functions.TextFns.lineSegments(col("text"),
       graft.operators.Dedup.LineDupWidth)
     val nseg = size(segs) // -1 for null text
     // functions.filter qualified: the `filter` param (the bytes) shadows it
     val ndup = size(org.apache.spark.sql.functions.filter(segs, s =>
-      call_function("graft_bloom_contains", lit(filter), xxhash64(s))))
+      GraftFunctions.call("graft_bloom_contains", lit(filter), xxhash64(s))))
     // Boundary-exact drop rule for ANY practical share value (ADVICE
     // r11): the census removal flag compares in exact INTEGER
     // cross-multiplication (10·dup ≥ 3·n), and the float product
@@ -1328,11 +1314,10 @@ object Transforms {
     * history). The segment/kept arrays are each referenced a bounded
     * 2× per row (the lineDupGate constant-factor contract). */
   def lineTrim(docs: DataFrame, filter: Array[Byte]): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val segs = graft.functions.TextFns.lineSegments(col("text"),
       graft.operators.Dedup.LineDupWidth)
     val kept = org.apache.spark.sql.functions.filter(segs, s =>
-      !call_function("graft_bloom_contains", lit(filter), xxhash64(s)))
+      !GraftFunctions.call("graft_bloom_contains", lit(filter), xxhash64(s)))
     val nseg = coalesce(size(segs), lit(-1)) // -1 for null text
     docs
       .withColumn("n_lines", greatest(nseg, lit(0)).cast("long"))
@@ -1358,12 +1343,11 @@ object Transforms {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1) (got $fpp)")
     val numBits = math.ceil(
       -expectedGrams * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    graft.plans.GraftFunctions.register(historical.sparkSession)
     historical
-      .select(explode(call_function("graft_gram_buckets",
+      .select(explode(GraftFunctions.call("graft_gram_buckets",
         graft.functions.TextFns.tokens(col("text")),
         lit(8), lit(8), lit(0))).as("h"))
-      .agg(call_function("graft_bloom_agg", col("h"),
+      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
         lit(expectedGrams), lit(numBits)).as("bf"))
       .head().getAs[Array[Byte]](0)
   }
@@ -1390,12 +1374,11 @@ object Transforms {
     * StreamingSpec pins cleaned-text equality against `dd_span_trim`
     * on a corpus whose duplicated grams are all in the history. */
   def spanTrim(docs: DataFrame, filter: Array[Byte]): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val tk = graft.functions.TextFns.tokens(col("text"))
     val flags = transform(
-      call_function("graft_gram_buckets", tk, lit(8), lit(8), lit(0)),
-      h => call_function("graft_bloom_contains", lit(filter), h))
-    val kept = call_function("graft_span_trim", tk, flags,
+      GraftFunctions.call("graft_gram_buckets", tk, lit(8), lit(8), lit(0)),
+      h => GraftFunctions.call("graft_bloom_contains", lit(filter), h))
+    val kept = GraftFunctions.call("graft_span_trim", tk, flags,
       lit(8), lit(graft.operators.Dedup.SpanTrimTokens))
     val ntk = coalesce(size(tk), lit(-1)) // -1 for null text
     docs
@@ -1420,7 +1403,7 @@ object Transforms {
     * no shingles, so every signature slot is null — [[sigPresent]] is
     * the presence test. */
   private def withSig(docs: DataFrame): DataFrame =
-    docs.withColumn(SigCol, call_function("graft_minhash_tokens",
+    docs.withColumn(SigCol, GraftFunctions.call("graft_minhash_tokens",
       graft.functions.TextFns.tokens(col("text"))))
 
   /** A doc has a signature iff it has ≥1 shingle (first slot non-null). */

@@ -4,9 +4,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal bridge into Spark's `private[sql]` surface, needed to build a
-  * DataFrame from graft's custom logical nodes (plans/TopKPerGroup.scala)
-  * and to extract expressions/plans from the public Column/Dataset API.
-  * Kept to three one-liners so the internal-API exposure is auditable.
+  * DataFrame from graft's custom logical nodes (plans/TopKPerGroup.scala),
+  * to extract expressions/plans from the public Column/Dataset API, and to
+  * wrap graft's native expressions as Columns (plans/GraftFunctions.scala).
+  * Kept to one-liners so the internal-API exposure is auditable.
   */
 object GraftShim {
 
@@ -15,6 +16,8 @@ object GraftShim {
 
   def expression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node) // eager: no lazy ColumnNode wrappers survive into physical plans
+
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def logicalPlan(df: Dataset[_]): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan

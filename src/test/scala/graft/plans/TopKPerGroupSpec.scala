@@ -106,4 +106,39 @@ class TopKPerGroupSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll 
     physical should not include "Window"
     physical should not include "Sort"
   }
+
+  it should "install its strategy once when 8 threads transform a fresh session at once" in {
+    // a new session starts with no extra strategies; every thread's
+    // transform installs on use, so all 8 race the check-then-append
+    val fresh = spark.newSession()
+    val frame = fresh.range(0, 2000)
+      .selectExpr("id % 7 AS g", "(id * 2654435761) % 100003 AS v", "id")
+    def viaWindow(k: Int): Set[(Long, Long)] = {
+      val w = Window.partitionBy(col("g")).orderBy(col("v").desc, col("id"))
+      frame.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+        .select(col("g"), col("id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val viaHeap = try {
+      val futures = (1 to 8).map { k =>
+        pool.submit(new java.util.concurrent.Callable[Set[(Long, Long)]] {
+          override def call(): Set[(Long, Long)] = {
+            start.await()
+            TopKPerGroup.transform(frame, Seq(col("g")), Seq(col("v").desc, col("id").asc), k)
+              .select(col("g"), col("id"))
+              .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          }
+        })
+      }
+      start.countDown()
+      futures.map(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+    fresh.experimental.extraStrategies.count(_ eq GraftStrategy) shouldBe 1
+    for (k <- 1 to 8) withClue(s"k=$k: ") {
+      viaHeap(k - 1) shouldBe viaWindow(k)
+      viaHeap(k - 1).size shouldBe 7 * k
+    }
+  }
 }
