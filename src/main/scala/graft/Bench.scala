@@ -11,15 +11,9 @@ object Bench {
       s""""host_factor":${fmt(hostFactor)},"total_sec_hostnorm":${fmt(total / hostFactor)}"""
     else """"host_factor":null,"total_sec_hostnorm":null"""
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
-    // Timing harness: planning-time lint analysis off, same as Verify —
-    // warn-mode PlanLint would run on every re-planned timed query,
-    // adding planning overhead and log noise to headline timings (and a
-    // comparability skew vs pre-r9 artifacts benched without it).
-    spark.conf.set("spark.graft.lint", "off")
+    // lint off (see Dev.session): warn-mode PlanLint would also skew the
+    // comparison with pre-r9 artifacts, benched without it
+    val (spark, sfDir) = tools.Dev.session()
     // Host-load calibration (r10 adjudication gap): a FIXED, seeded,
     // CPU-bound workload — 8 threads each filling and sorting a 1M-long
     // array 4 times from a xorshift stream — timed at bench START and

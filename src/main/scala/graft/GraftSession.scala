@@ -18,8 +18,18 @@ import graft.util.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
   */
 object GraftSession extends Logging {
 
+  /** Local file I/O without a process per file: with no libhadoop on
+    * the classpath, Hadoop's local FS spawns `chmod` for every file it
+    * creates (twice, with the `.crc`) and every directory it makes, and
+    * FileContext (Spark's checkpoint logs) spawns `readlink` per path.
+    * These classes set the same permissions through java.nio. Only
+    * file:// changes; a later `.config(...)` of either key wins. */
+  private[graft] val LocalFsConf: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    SparkSession.builder()
+    LocalFsConf.foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .master(master)
       .config("spark.sql.session.timeZone", "UTC")
       // INT96 (the Spark default) is deprecated and reads back as ns in
@@ -41,14 +51,6 @@ object GraftSession extends Logging {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")
-      // Local file I/O without a process per file: with no libhadoop on
-      // the classpath, Hadoop's local FS spawns `chmod` for every file it
-      // creates (twice, with the `.crc`) and every directory it makes, and
-      // FileContext (Spark's checkpoint logs) spawns `readlink` per path.
-      // These classes set the same permissions through java.nio. Only
-      // file:// changes; a later `.config(...)` of either key wins.
-      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   /** Build the session. The builder's extension carries graft's planner
     * strategy and SQL functions; registering the functions at runtime as

@@ -24,7 +24,7 @@ object SparkEntry {
     * queries above amortize, as (name, evict, build). Bench evicts,
     * times the build and reports `<name>_sec` for each, in this order,
     * so the queries' own timings read as marginal costs and the shared
-    * cost never silently vanishes from the artifact; SharedBuildProfile
+    * cost never silently vanishes from the artifact; `tools.Dev build`
     * looks builds up here by name. A build forces its artifact to
     * materialize (a count on pinned frames). An explicit list, not
     * self-registration: operator objects initialise lazily, so a

@@ -31,14 +31,11 @@ object Verify {
       System.err.println(s"[verify] unknown query ids: ${unknown.mkString(", ")}")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
-    // The dump below coalesce(1)s every (aggregate-sized) result into one
-    // file for the driver's single-file DuckDB read — an intentional
-    // harness contract, not a user query; skip the factory's warn-mode
-    // lint so the one screen-positive doesn't read as an operator hazard.
-    spark.conf.set("spark.graft.lint", "off")
+    // lint off (see Dev.session): the dump below coalesce(1)s every
+    // (aggregate-sized) result into one file for the single-file DuckDB
+    // read of the oracle check, a harness contract the warn-mode screen
+    // would flag
+    val (spark, _) = tools.Dev.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

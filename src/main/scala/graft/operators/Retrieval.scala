@@ -301,7 +301,7 @@ object Retrieval {
       truthFrameBy(s, d, tk => shingles3(tk)).localCheckpoint(false))
 
   /** Plan-evidence hooks (round 16): the UNPINNED truth-build frames,
-    * so PlanDebug can dump the bloom-bounded join plan the memo hides
+    * so `tools.Dev plan` can dump the bloom-bounded join plan the memo hides
     * behind a checkpoint scan. */
   private[graft] def truthBuildPlan(s: SparkSession, d: String,
       shingle: Boolean): DataFrame =

@@ -16,7 +16,7 @@ class GraftLintException(msg: String) extends RuntimeException(msg)
   * repo registers and CI-lints — for the [[PlanLint]] shapes that stall
   * a 1000-executor cluster (partition-less corpus windows, unhinted
   * cartesians, repartition(1) funnels). This is the fleet-wide version
-  * of the `tools/Lint` CLI and PlanLintSpec: the CLI gates this repo's
+  * of `tools.Dev lint` and PlanLintSpec: the CLI gates this repo's
   * queries; the rule gates a USER's ad-hoc ones at planning time, where
   * a 100 TB mistake is cheapest to catch.
   *

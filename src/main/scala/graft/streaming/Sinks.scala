@@ -311,45 +311,43 @@ object Sinks {
       val spark = batchRaw.sparkSession
       if (committedBatchIds(spark).contains(batchId)) return // replay → skip
       val batch = batchRaw.persist()
-      // Integrity gate BEFORE phase 2: a refused epoch publishes
-      // NOTHING — no visible data dir, no marker — and fails the query
-      // loudly (never a silent drop; the epoch re-delivers after the
-      // defect is fixed upstream)
-      for (g <- epochGate; reason <- g(batch)) {
-        batch.unpersist()
-        throw new IllegalStateException(
-          s"two-phase commit REFUSED epoch $batchId: $reason")
-      }
-      val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // Phases 1+2: stage, then one atomic rename (shared protocol)
-      publish(fs, outDir, s"batch=$batchId") { staging =>
-        batch.write.mode("overwrite").parquet(staging.toString)
-      }
-      // Commit: marker `_commits/<id>` with `partition=min..max,...;rows=n`.
-      // Range endpoints come from (event_type, event_id) when the schema
-      // carries them — the sink itself is schema-agnostic (the
-      // SnapshotTableSink rule), so non-event epochs (e.g. a gated
-      // shard-manifest stream) commit rows-only markers. The row count
-      // rides in the range aggregate, so an event epoch costs one job
-      val hasEv = batch.columns.contains("event_type") &&
-        batch.columns.contains("event_id")
-      val (ranges, rows) =
-        if (!hasEv) ("", batch.count())
-        else {
-          val groups = batch.groupBy(col("event_type"))
-            .agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"), count(lit(1)).as("n"))
-            .collect()
-            .sortBy(_.getString(0))
-          (groups.map(r => s"${r.getString(0)}=${r.getLong(1)}..${r.getLong(2)}").mkString(","),
-            groups.map(_.getLong(3)).sum)
+      try {
+        // Integrity gate BEFORE phase 2: a refused epoch publishes
+        // NOTHING — no visible data dir, no marker — and fails the query
+        // loudly (never a silent drop; the epoch re-delivers after the
+        // defect is fixed upstream)
+        for (g <- epochGate; reason <- g(batch))
+          throw new IllegalStateException(s"two-phase commit REFUSED epoch $batchId: $reason")
+        val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // Phases 1+2: stage, then one atomic rename (shared protocol)
+        publish(fs, outDir, s"batch=$batchId") { staging =>
+          batch.write.mode("overwrite").parquet(staging.toString)
         }
-      val commits = new Path(outDir, "_commits")
-      fs.mkdirs(commits)
-      val tmpMarker = new Path(commits, s".tmp.$batchId")
-      val out = fs.create(tmpMarker, true)
-      out.write(s"$ranges;rows=$rows\n".getBytes("UTF-8")); out.close()
-      renameOrThrow(fs, tmpMarker, new Path(commits, batchId.toString))
-      batch.unpersist()
+        // Commit: marker `_commits/<id>` with `partition=min..max,...;rows=n`.
+        // Range endpoints come from (event_type, event_id) when the schema
+        // carries them — the sink itself is schema-agnostic (the
+        // SnapshotTableSink rule), so non-event epochs (e.g. a gated
+        // shard-manifest stream) commit rows-only markers. The row count
+        // rides in the range aggregate, so an event epoch costs one job
+        val hasEv = batch.columns.contains("event_type") &&
+          batch.columns.contains("event_id")
+        val (ranges, rows) =
+          if (!hasEv) ("", batch.count())
+          else {
+            val groups = batch.groupBy(col("event_type"))
+              .agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"), count(lit(1)).as("n"))
+              .collect()
+              .sortBy(_.getString(0))
+            (groups.map(r => s"${r.getString(0)}=${r.getLong(1)}..${r.getLong(2)}").mkString(","),
+              groups.map(_.getLong(3)).sum)
+          }
+        val commits = new Path(outDir, "_commits")
+        fs.mkdirs(commits)
+        val tmpMarker = new Path(commits, s".tmp.$batchId")
+        val out = fs.create(tmpMarker, true)
+        out.write(s"$ranges;rows=$rows\n".getBytes("UTF-8")); out.close()
+        renameOrThrow(fs, tmpMarker, new Path(commits, batchId.toString))
+      } finally batch.unpersist()
     }
   }
 

@@ -310,24 +310,25 @@ class SnapshotTableSink(tableDir: String,
     if (prev.exists(_.committed.contains(batchId))) return // replayed epoch
     // cache: the write and the ranges agg would otherwise each re-read the source
     val batch = batchRaw.persist()
-    // data files (distributed write; optionally cell/partition-pruned).
-    // An EMPTY epoch writes unpartitioned: partitionBy of zero rows
-    // emits no files at all and the dir becomes unreadable (schema
-    // inference fails); the unpartitioned empty write keeps a
-    // schema-bearing file, and readDirs null-fills the partition column
-    val w = batch.write.mode("overwrite")
-    if (partitionCols.nonEmpty) writePartTypes(spark, batch.schema)
-    (if (partitionCols.nonEmpty && !batch.isEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(s"$tableDir/data/batch=$batchId")
-    // consumed ranges recorded with the commit (StreamRange analog); the
-    // range endpoints come from event_id when the schema carries one —
-    // the sink itself is schema-agnostic, so other tables get rows-only
-    val hasEventId = batch.columns.contains("event_id")
-    val loHi =
-      if (hasEventId) Seq(min(col("event_id")), max(col("event_id")))
-      else Seq(lit(null), lit(null))
-    val ranges = batch.agg(loHi.head, (loHi.tail :+ count(lit(1))): _*).collect()(0)
-    batch.unpersist()
+    val ranges = try {
+      // data files (distributed write; optionally cell/partition-pruned).
+      // An EMPTY epoch writes unpartitioned: partitionBy of zero rows
+      // emits no files at all and the dir becomes unreadable (schema
+      // inference fails); the unpartitioned empty write keeps a
+      // schema-bearing file, and readDirs null-fills the partition column
+      val w = batch.write.mode("overwrite")
+      if (partitionCols.nonEmpty) writePartTypes(spark, batch.schema)
+      (if (partitionCols.nonEmpty && !batch.isEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(s"$tableDir/data/batch=$batchId")
+      // consumed ranges recorded with the commit (StreamRange analog); the
+      // range endpoints come from event_id when the schema carries one —
+      // the sink itself is schema-agnostic, so other tables get rows-only
+      val hasEventId = batch.columns.contains("event_id")
+      val loHi =
+        if (hasEventId) Seq(min(col("event_id")), max(col("event_id")))
+        else Seq(lit(null), lit(null))
+      batch.agg(loHi.head, (loHi.tail :+ count(lit(1))): _*).collect()(0)
+    } finally batch.unpersist()
     val committed = prev.map(_.committed).getOrElse(Seq.empty) :+ batchId
     val live = prev.map(_.live).getOrElse(Seq.empty) :+ s"batch=$batchId"
     publishSnapshot(spark,

@@ -113,7 +113,7 @@ private[graft] object SessionMemo {
 
     /** Drop this session's entries and release the blocks behind them,
       * so a timed call prices the computation the consumers amortize.
-      * QUIESCENT PATHS ONLY — Bench, SharedBuildProfile and perfbench's
+      * QUIESCENT PATHS ONLY — Bench, `tools.Dev build` and perfbench's
       * traced pricing, each single-threaded between queries: a consumer
       * still reading an evicted localCheckpoint frame fails with
       * "checkpoint block not found". */

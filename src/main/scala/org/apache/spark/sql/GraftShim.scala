@@ -1,12 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal bridge into Spark's `private[sql]` surface, needed to build a
   * DataFrame from graft's custom logical nodes (plans/TopKPerGroup.scala),
   * to extract expressions/plans from the public Column/Dataset API, and to
-  * wrap graft's native expressions as Columns (plans/GraftFunctions.scala).
+  * wrap graft's native expressions as Columns (plans/GraftFunctions.scala),
+  * and to drain the listener bus before reading a listener (tools/Dev.scala).
   * Kept to one-liners so the internal-API exposure is auditable.
   */
 object GraftShim {
@@ -18,6 +20,9 @@ object GraftShim {
     classic.ColumnNodeToExpressionConverter(c.node) // eager: no lazy ColumnNode wrappers survive into physical plans
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** Block until every queued listener event has been delivered. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   def logicalPlan(df: Dataset[_]): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan

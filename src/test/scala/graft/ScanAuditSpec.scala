@@ -8,7 +8,7 @@ import org.scalatest.matchers.should.Matchers
 /** CI enforcement of the repeated-scan audit (PLANS.md "Repeated-scan
   * audit"): each same-table parquet scan beyond the first in a query's
   * POST-EXECUTION plan is a repeated full corpus pass at 100 TB. The
-  * audit used to live only as a dev tool (tools/ScanAudit) + prose,
+  * audit used to live only as a dev tool (`tools.Dev scans`) + prose,
   * which let any refactor silently re-introduce a duplicate pass — this
   * spec pins every audited query's scan count as a CEILING, measured
   * from the plan AQE actually ran (ReuseExchange dedups identical
@@ -35,10 +35,8 @@ class ScanAuditSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def scans(name: String): Int = {
-    val plan = TestPlans.finalPlan(SparkEntry.queries(name)(spark, sf))
-    "FileScan parquet|Scan parquet".r.findAllIn(plan).length
-  }
+  private def scans(name: String): Int =
+    tools.Dev.parquetScans(tools.Dev.finalPlan(SparkEntry.queries(name)(spark, sf)))
 
   // query -> audited ceiling (sf0.001, round 6). Grouped by corpus table
   // so a failure names the family whose scan discipline broke.
@@ -209,7 +207,7 @@ class ScanAuditSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
   // Window — the doc-keyed island merge, bounded by doc length).
   it should "keep dd_substring Window-free and dd_dup_span at one doc-keyed window" in {
     val winCount = (name: String) =>
-      "\\bWindow\\b".r.findAllIn(TestPlans.finalPlan(SparkEntry.queries(name)(spark, sf))).length
+      "\\bWindow\\b".r.findAllIn(tools.Dev.finalPlan(SparkEntry.queries(name)(spark, sf))).length
     winCount("dd_substring") shouldBe 0
     winCount("dd_dup_span") should be <= 1
     winCount("dd_line_dup") shouldBe 0

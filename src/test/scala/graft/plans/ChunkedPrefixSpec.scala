@@ -318,7 +318,7 @@ class ChunkedPrefixSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll
       "pipe_interleave" -> graft.operators.Pipeline.pipeInterleave,
       "pipe_budget_mix" -> graft.operators.Pipeline.pipeBudgetMix)
     targets.foreach { case (name, q) =>
-      val plan = graft.TestPlans.finalPlan(q(spark, sf))
+      val plan = graft.tools.Dev.finalPlan(q(spark, sf))
       withClue(s"$name executed plan: ") {
         plan should include("__gp_chunk")
       }

@@ -131,7 +131,7 @@ class DistributedRankSpec extends AnyFlatSpec with Matchers with BeforeAndAfterA
       "q_window_dist" -> Relational.qWindowDist,
       "ta_zipf" -> graft.operators.TextAnalysis.taZipf)
     targets.foreach { case (name, q) =>
-      val plan = graft.TestPlans.finalPlan(q(spark, sf))
+      val plan = graft.tools.Dev.finalPlan(q(spark, sf))
       withClue(s"$name executed plan: ") {
         plan should not include "Window ["
       }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.Eventually
 import org.scalatest.flatspec.AnyFlatSpec
@@ -28,6 +29,16 @@ class SnapshotSinkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll 
   private def tmp(): String = Files.createTempDirectory("graft-snap").toString
 
   behavior of "SnapshotTableSink"
+
+  it should "release the cached epoch when the data write fails" in {
+    import spark.implicits._
+    val table = tmp()
+    // a regular file where the data directory must go
+    new java.io.File(table, "data").createNewFile() shouldBe true
+    val epoch = Seq(Ev(0, ts(1), 1, "click", 1.0, "{}")).toDF()
+    an[Exception] should be thrownBy new SnapshotTableSink(table).writeBatch(epoch, 0L)
+    epoch.storageLevel shouldBe StorageLevel.NONE
+  }
 
   it should "commit epochs as snapshots, read committed data, skip replays" in {
     import spark.implicits._

@@ -3,28 +3,40 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
+
+import graft.GraftSession
+import graft.util.NioRawLocalFileSystem
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double, props: String)
 
 class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-streaming-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // The sinks' local file I/O goes through the same spawn-free file
+  // system every GraftSession gets. Hadoop caches file systems by scheme
+  // and user, so the cache an earlier suite in this JVM filled is closed
+  // first, and this suite's is closed after it.
+  lazy val spark: SparkSession = {
+    FileSystem.closeAll()
+    GraftSession.LocalFsConf.foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .master("local[2]")
+      .appName("graft-streaming-spec")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+  }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = { spark.stop(); FileSystem.closeAll() }
 
   private def ts(min: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 ${min / 60}%02d:${min % 60}%02d:00")
 
@@ -69,6 +81,7 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     // two runs armors one-off host hiccups further. A real regression
     // of the kind this guards (per-row UDF, lost batching) costs an
     // order of magnitude, not 3x.
+    FileSystem.getLocal(spark.sparkContext.hadoopConfiguration).getRaw shouldBe a[NioRawLocalFileSystem]
     val sfDir = "/root/testdata/sf0.01"
     val tmpRoot = tmp()
     val src = s"$tmpRoot/src"
@@ -269,6 +282,16 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
       .toDF("doc_id", "shard", "n_bytes", "rec_idx", "offset")
     sink.writeBatch(subset, 2L)
     sink.committedBatchIds(spark).sorted shouldBe Seq(0L, 2L)
+  }
+
+  it should "release the cached epoch when the publish fails" in {
+    import spark.implicits._
+    val out = tmp()
+    // a regular file where the staging directory must go
+    new java.io.File(out, "_staging").createNewFile() shouldBe true
+    val epoch = Seq(Ev(0, ts(1), 1, "click", 1.0, "{}")).toDF()
+    an[Exception] should be thrownBy new Sinks.TwoPhaseCommitSink(out).writeBatch(epoch, 0L)
+    epoch.storageLevel shouldBe StorageLevel.NONE
   }
 
   behavior of "InDataOffsetSink"
