@@ -61,22 +61,9 @@ case class VerticaNativeEncode(child: Expression, spec: String = "") extends Una
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val row = input.asInstanceOf[InternalRow]
-    val body = new ByteArrayOutputStream(64)
-    val nullBits = new Array[Byte]((fields.length + 7) / 8)
-    var i = 0
-    while (i < fields.length) {
-      if (row.isNullAt(i)) {
-        nullBits(i / 8) = (nullBits(i / 8) | (1 << (8 - (i % 8) - 1))).toByte
-      } else {
-        VerticaNativeEncode.writeValue(body, fields(i).dataType, row, i, directives(i))
-      }
-      i += 1
-    }
-    val out = new ByteArrayOutputStream(body.size() + nullBits.length + 4)
-    VerticaNativeEncode.writeLE(out, body.size().toLong, 4)
-    out.write(nullBits, 0, nullBits.length)
-    body.writeTo(out)
+    val out = new ByteArrayOutputStream(80)
+    VerticaNativeEncode.writeRecord(out, new ByteArrayOutputStream(64),
+      input.asInstanceOf[InternalRow], fields, directives)
     out.toByteArray
   }
 
@@ -160,8 +147,28 @@ object VerticaNativeEncode {
     out.toByteArray
   }
 
-  def writeValue(out: ByteArrayOutputStream, t: DataType, row: InternalRow, i: Int): Unit =
-    writeValue(out, t, row, i, Default)
+  /** Appends one framed record to `out`: int32 body size, MSB-first null
+    * bitmap over ALL columns, then the non-null values; `body` is scratch
+    * space for the values. The interpreted expression and the file
+    * connector both frame rows here; the expression's `doGenCode` emits
+    * the same layout. */
+  def writeRecord(out: ByteArrayOutputStream, body: ByteArrayOutputStream, row: InternalRow,
+      fields: Array[StructField], directives: Array[FieldDirective]): Unit = {
+    body.reset()
+    val nullBits = new Array[Byte]((fields.length + 7) / 8)
+    var i = 0
+    while (i < fields.length) {
+      if (row.isNullAt(i)) {
+        nullBits(i / 8) = (nullBits(i / 8) | (1 << (8 - (i % 8) - 1))).toByte
+      } else {
+        writeValue(body, fields(i).dataType, row, i, directives(i))
+      }
+      i += 1
+    }
+    writeLE(out, body.size().toLong, 4)
+    out.write(nullBits, 0, nullBits.length)
+    body.writeTo(out)
+  }
 
   def writeValue(out: ByteArrayOutputStream, t: DataType, row: InternalRow, i: Int,
       d: FieldDirective): Unit = (t, d) match {

@@ -1,21 +1,16 @@
 package graft.sources
 
+import java.io.{InputStream, OutputStream}
 import java.nio.ByteBuffer
-import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.{Schema, SchemaBuilder}
+import org.apache.avro.Schema
 import org.apache.avro.file.{CodecFactory, DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,13 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Unlike RowBinary, Avro container files CARRY their writer schema, so
   * reads infer it from the first data file's header (an explicit
-  * `.schema(...)` still overrides, e.g. to prune or widen). Each task
-  * writes one `.avro` file and each file is one input partition — the
-  * same read-parallelism-equals-write-parallelism contract as the other
-  * graft file connectors. (Container blocks ARE sync-marked and
-  * therefore splittable; per-file partitioning is chosen for symmetry
-  * with the loader's one-file-per-task layout, where files are already
-  * write-sized.)
+  * `.schema(...)` still overrides, e.g. to prune or widen). Container
+  * blocks ARE sync-marked and therefore splittable; [[FileConnector]]'s
+  * one input partition per file is kept for symmetry with the loader's
+  * one-file-per-task layout, where files are already write-sized.
   *
   * Type mapping (both directions): long↔long, int↔int, double↔double,
   * float↔float, boolean↔boolean, string↔string, binary↔bytes,
@@ -49,90 +41,39 @@ import org.apache.spark.unsafe.types.UTF8String
   * date); nullable fields map to union(null, T). `compression=deflate`
   * writes deflate-coded blocks (default null codec).
   */
-class AvroContainerSource extends TableProvider {
-  override def supportsExternalMetadata(): Boolean = true
+class AvroContainerSource extends FileConnector("graft-avro", ".avro") {
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    firstFileSchema(options) { in =>
+      AvroContainer.toStructType(
+        new DataFileStream[GenericRecord](in, new GenericDatumReader[GenericRecord]()).getSchema)
+    }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = options.get("path")
-    require(path != null, "graft-avro requires a path")
-    val conf = ConnectorFiles.restoreConf(ConnectorFiles.captureConf())
-    val files = ConnectorFiles.listDataFiles(path, conf, ".avro")
-    require(files.nonEmpty,
-      s"graft-avro: no .avro files under $path to infer a schema from; pass .schema(...)")
-    val in = new DataFileStream[GenericRecord](
-      files.head.getFileSystem(conf).open(files.head), new GenericDatumReader[GenericRecord]())
-    try AvroContainer.toStructType(in.getSchema) finally in.close()
-  }
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new AvroContainerTable(schema, properties.get("path"),
-      ConnectorFiles.optionIgnoreCase(properties, "compression").getOrElse(""))
+  override private[sources] def codec(schema: StructType,
+      option: String => Option[String]): FileCodec =
+    new AvroCodec(schema, option("compression").getOrElse(""))
 }
 
-private[sources] class AvroContainerTable(tableSchema: StructType, path: String,
-    compression: String)
-    extends Table with SupportsRead with SupportsWrite {
-
-  require(path != null, "graft-avro requires a path")
+private[sources] class AvroCodec(val schema: StructType, compression: String)
+    extends FileCodec {
   // fail at plan time, not mid-write on an executor
-  AvroContainer.toAvroSchema(tableSchema)
+  AvroContainer.toAvroSchema(schema)
   require(compression.isEmpty || compression == "deflate" || compression == "null",
     s"graft-avro: unsupported compression '$compression' (use deflate)")
 
-  override def name(): String = s"graft-avro:$path"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
-      override def readSchema(): StructType = tableSchema
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] =
-        ConnectorFiles.listDataFiles(path,
-            ConnectorFiles.restoreConf(ConnectorFiles.captureConf()), ".avro")
-          .map(f => AvroPartition(f.toString): InputPartition).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new AvroReaderFactory(tableSchema, ConnectorFiles.captureConf())
-    }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with Write with BatchWrite {
-      override def build(): Write = this
-      override def toBatch: BatchWrite = this
-      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-        new AvroWriterFactory(path, tableSchema, compression, ConnectorFiles.captureConf())
-      override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-      override def abort(messages: Array[WriterCommitMessage]): Unit =
-        ConnectorFiles.deleteCommitted(
-          messages.collect { case AvroCommit(f) => f },
-          ConnectorFiles.restoreConf(ConnectorFiles.captureConf()))
-    }
-}
-
-private[sources] case class AvroPartition(file: String) extends InputPartition
-
-private[sources] class AvroReaderFactory(schema: StructType,
-    confProps: Array[(String, String)]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new AvroReader(partition.asInstanceOf[AvroPartition].file, schema,
-      ConnectorFiles.restoreConf(confProps))
+  override def reader(in: InputStream, file: String): PartitionReader[InternalRow] =
+    new AvroReader(in, file, schema)
+  override def writer(out: OutputStream): RowWriter = new AvroWriter(out, schema, compression)
 }
 
 /** Streams GenericRecords out of one container file; the READ schema
   * (this table's StructType, as an Avro schema) drives Avro's standard
   * writer→reader resolution, so pruned/reordered columns resolve by
   * field name. */
-private[sources] class AvroReader(file: String, schema: StructType,
-    conf: Configuration) extends PartitionReader[InternalRow] {
+private[sources] class AvroReader(stream: InputStream, file: String, schema: StructType)
+    extends PartitionReader[InternalRow] {
 
-  private val in = {
-    val p = new Path(file)
-    new DataFileStream[GenericRecord](p.getFileSystem(conf).open(p),
-      new GenericDatumReader[GenericRecord](null, AvroContainer.toAvroSchema(schema)))
-  }
+  private val in = new DataFileStream[GenericRecord](stream,
+    new GenericDatumReader[GenericRecord](null, AvroContainer.toAvroSchema(schema)))
   private val fields = schema.fields
   private var current: InternalRow = _
 
@@ -153,32 +94,18 @@ private[sources] class AvroReader(file: String, schema: StructType,
   override def close(): Unit = in.close()
 }
 
-private[sources] class AvroWriterFactory(path: String, schema: StructType,
-    compression: String, confProps: Array[(String, String)]) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new AvroWriter(path, schema, compression, partitionId,
-      ConnectorFiles.restoreConf(confProps))
-}
-
-private[sources] case class AvroCommit(file: String) extends WriterCommitMessage
-
-/** One `.avro` container file per task, streamed through DataFileWriter
+/** Streams a `.avro` container file through DataFileWriter
   * (block-buffered with sync markers — the standard container layout any
   * Avro tool can read back). */
-private[sources] class AvroWriter(path: String, schema: StructType,
-    compression: String, partitionId: Int,
-    conf: Configuration) extends DataWriter[InternalRow] {
+private[sources] class AvroWriter(stream: OutputStream, schema: StructType,
+    compression: String) extends RowWriter {
 
   private val avroSchema = AvroContainer.toAvroSchema(schema)
-  private val file = new Path(path, f"part-$partitionId%05d-${UUID.randomUUID()}.avro")
-  private val fs = file.getFileSystem(conf)
   private val fields = schema.fields
-  private var opened = false
-  private lazy val out = {
-    opened = true
+  private val out = {
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avroSchema))
     if (compression == "deflate") w.setCodec(CodecFactory.deflateCodec(6))
-    w.create(avroSchema, fs.create(file, false))
+    w.create(avroSchema, stream)
   }
 
   override def write(row: InternalRow): Unit = {
@@ -193,17 +120,7 @@ private[sources] class AvroWriter(path: String, schema: StructType,
     ()
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (opened) out.close()
-    AvroCommit(file.toString)
-  }
-
-  override def abort(): Unit = {
-    if (opened) { try out.close() catch { case _: java.io.IOException => () } }
-    if (fs.exists(file)) fs.delete(file, false)
-    ()
-  }
-  override def close(): Unit = ()
+  override def close(): Unit = out.close()
 }
 
 private[sources] object AvroContainer {

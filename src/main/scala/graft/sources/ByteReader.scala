@@ -3,8 +3,8 @@ package graft.sources
 import java.io.{BufferedInputStream, EOFException, InputStream}
 
 /** Little-endian byte-stream reader shared by the binary-format
-  * connectors (RowBinary, Vertica native). One probe-aware EOF model:
-  * callers probe the first byte of a record with [[readByteOrEof]] and
+  * connectors (RowBinary, Vertica native, proto). One probe-aware EOF
+  * model: callers probe the first byte of a record with [[readByteOrEof]] and
   * feed it back through the `first` parameters. */
 private[sources] class ByteReader(raw: InputStream, val source: String) {
 
@@ -82,58 +82,4 @@ private[sources] class ByteReader(raw: InputStream, val source: String) {
 private[sources] object ByteReader {
   /** Upper bound for any single length-prefixed payload (256 MiB). */
   final val MaxPayloadBytes: Int = 256 * 1024 * 1024
-}
-
-/** Driver-captured, task-serializable Hadoop configuration plus the file
-  * scaffolding both binary connectors share (recursive listing with
-  * `_`/`.` staging names invisible, job-abort cleanup of task files). */
-private[sources] object ConnectorFiles {
-  import scala.jdk.CollectionConverters._
-  import org.apache.hadoop.conf.Configuration
-  import org.apache.hadoop.fs.Path
-
-  /** Capture the session's Hadoop conf (spark.hadoop.* included) as a
-    * serializable property array — `new Configuration()` on an executor
-    * would drop credentials/HA settings the session carries. */
-  def captureConf(): Array[(String, String)] =
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
-      .asScala.map(e => (e.getKey, e.getValue)).toArray
-
-  def restoreConf(props: Array[(String, String)]): Configuration = {
-    val c = new Configuration(false)
-    props.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
-  /** Option lookup over the provider's properties map — `getTable`
-    * receives the ORIGINAL-case option keys (asCaseSensitiveMap), so a
-    * user's `.option("fieldSpec", …)` must match case-insensitively. */
-  def optionIgnoreCase(props: java.util.Map[String, String], key: String): Option[String] =
-    props.asScala.collectFirst { case (k, v) if k.equalsIgnoreCase(key) => v }
-
-  /** All data files with `ext` under `path`, recursive, staging hidden. */
-  def listDataFiles(path: String, conf: Configuration, ext: String): Seq[Path] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    def list(p: Path): Seq[Path] =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
-        .flatMap { s =>
-          if (s.isDirectory) list(s.getPath)
-          else if (s.getPath.getName.endsWith(ext)) Seq(s.getPath)
-          else Seq.empty
-        }
-    list(root).sortBy(_.toString)
-  }
-
-  /** Job-level abort: remove files that tasks already committed (their
-    * names travel in the commit messages) so a failed write leaves no
-    * partial output behind. */
-  def deleteCommitted(files: Seq[String], conf: Configuration): Unit =
-    files.foreach { f =>
-      val p = new Path(f)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
 }

@@ -1,17 +1,9 @@
 package graft.sources
 
-import java.io.BufferedOutputStream
-import java.util.UUID
+import java.io.{BufferedOutputStream, InputStream, OutputStream}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -35,27 +27,17 @@ import graft.functions.ProtoWire
   * explicit schema — field names/types by field-number order, exactly
   * `graft_proto_decode`'s DDL contract; unknown field numbers in the data
   * are skipped (forward compatibility), absent fields read as null.
-  * Files are not splittable (no sync markers): each file is one input
-  * partition, and the writer's one-file-per-task layout keeps read
-  * parallelism equal to write parallelism — the same contract as the
-  * RowBinary/Vertica connectors.
   */
-class ProtoFileSource extends TableProvider {
-  override def supportsExternalMetadata(): Boolean = true
-
+class ProtoFileSource extends FileConnector("graft-proto", ".pb") {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     throw new IllegalArgumentException(
       "graft-proto is schema-less on the wire: pass an explicit schema via .schema(...)")
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new ProtoFileTable(schema, properties.get("path"))
+  override private[sources] def codec(schema: StructType,
+      option: String => Option[String]): FileCodec = new ProtoCodec(schema)
 }
 
-private[sources] class ProtoFileTable(userSchema: StructType, path: String)
-    extends Table with SupportsRead with SupportsWrite {
-
-  require(path != null, "graft-proto requires a path")
+private[sources] class ProtoCodec(userSchema: StructType) extends FileCodec {
   private val unsupported =
     userSchema.fields.filterNot(f => ProtoWire.supported(f.dataType))
   if (unsupported.nonEmpty) throw new IllegalArgumentException(
@@ -65,60 +47,20 @@ private[sources] class ProtoFileTable(userSchema: StructType, path: String)
     * to null, so every column must advertise nullable — planning against
     * a user-declared NOT NULL column would constant-fold `IS NULL` away
     * and mis-codegen reads of the null slot. */
-  private val tableSchema = StructType(userSchema.fields.map(_.copy(nullable = true)))
+  val schema: StructType = StructType(userSchema.fields.map(_.copy(nullable = true)))
 
-  override def name(): String = s"graft-proto:$path"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
-      override def readSchema(): StructType = tableSchema
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] =
-        ConnectorFiles.listDataFiles(path,
-            ConnectorFiles.restoreConf(ConnectorFiles.captureConf()), ".pb")
-          .map(f => ProtoFilePartition(f.toString): InputPartition).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new ProtoFileReaderFactory(tableSchema, ConnectorFiles.captureConf())
-    }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with Write with BatchWrite {
-      override def build(): Write = this
-      override def toBatch: BatchWrite = this
-      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-        new ProtoFileWriterFactory(path, tableSchema, ConnectorFiles.captureConf())
-      override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-      override def abort(messages: Array[WriterCommitMessage]): Unit =
-        ConnectorFiles.deleteCommitted(
-          messages.collect { case ProtoFileCommit(f) => f },
-          ConnectorFiles.restoreConf(ConnectorFiles.captureConf()))
-    }
-}
-
-private[sources] case class ProtoFilePartition(file: String) extends InputPartition
-
-private[sources] class ProtoFileReaderFactory(schema: StructType,
-    confProps: Array[(String, String)]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ProtoFileReader(partition.asInstanceOf[ProtoFilePartition].file, schema,
-      ConnectorFiles.restoreConf(confProps))
+  override def reader(in: InputStream, file: String): PartitionReader[InternalRow] =
+    new ProtoFileReader(in, file, schema)
+  override def writer(out: OutputStream): RowWriter = new ProtoFileWriter(out, schema)
 }
 
 /** Streaming reader: varint length prefix, then one message decoded by
-  * the shared [[ProtoWire]] kernel. The output schema is normalized
-  * all-nullable (absent proto fields are null by construction). */
-private[sources] class ProtoFileReader(file: String, schema: StructType,
-    conf: Configuration) extends PartitionReader[InternalRow] {
+  * the shared [[ProtoWire]] kernel into the codec's all-nullable schema
+  * (absent proto fields are null by construction). */
+private[sources] class ProtoFileReader(stream: InputStream, file: String,
+    readSchema: StructType) extends PartitionReader[InternalRow] {
 
-  private val in = {
-    val p = new Path(file)
-    new ByteReader(p.getFileSystem(conf).open(p), file)
-  }
-  private val readSchema = StructType(schema.fields.map(_.copy(nullable = true)))
+  private val in = new ByteReader(stream, file)
   private var current: InternalRow = _
 
   override def next(): Boolean = {
@@ -135,29 +77,16 @@ private[sources] class ProtoFileReader(file: String, schema: StructType,
   override def close(): Unit = in.close()
 }
 
-private[sources] class ProtoFileWriterFactory(path: String, schema: StructType,
-    confProps: Array[(String, String)]) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ProtoFileWriter(path, schema, partitionId,
-      ConnectorFiles.restoreConf(confProps))
-}
+/** Streams a `.pb` file; records framed as varint length + message,
+  * encoded by the shared [[ProtoWire]] kernel. */
+private[sources] class ProtoFileWriter(stream: OutputStream, schema: StructType)
+    extends RowWriter {
 
-private[sources] case class ProtoFileCommit(file: String) extends WriterCommitMessage
-
-/** One `.pb` file per task, streamed; records framed as varint length +
-  * message, encoded by the shared [[ProtoWire]] kernel. */
-private[sources] class ProtoFileWriter(path: String, schema: StructType,
-    partitionId: Int, conf: Configuration) extends DataWriter[InternalRow] {
-
-  private val file = new Path(path, f"part-$partitionId%05d-${UUID.randomUUID()}.pb")
-  private val fs = file.getFileSystem(conf)
-  private lazy val out = new BufferedOutputStream(fs.create(file, false), 1 << 16)
+  private val out = new BufferedOutputStream(stream, 1 << 16)
   private val lenBuf = new java.io.ByteArrayOutputStream(8)
   private val fields = schema.fields
-  private var opened = false
 
   override def write(row: InternalRow): Unit = {
-    opened = true
     val msg = ProtoWire.encodeRow(row, fields)
     lenBuf.reset()
     ProtoWire.writeVarint(lenBuf, msg.length.toLong)
@@ -165,14 +94,5 @@ private[sources] class ProtoFileWriter(path: String, schema: StructType,
     out.write(msg, 0, msg.length)
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (opened) out.close()
-    ProtoFileCommit(file.toString)
-  }
-
-  override def abort(): Unit = {
-    if (opened) { try out.close() catch { case _: java.io.IOException => () } }
-    if (fs.exists(file)) fs.delete(file, false)
-  }
-  override def close(): Unit = ()
+  override def close(): Unit = out.close()
 }

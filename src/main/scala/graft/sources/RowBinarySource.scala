@@ -1,18 +1,11 @@
 package graft.sources
 
-import java.io.BufferedOutputStream
+import java.io.{BufferedOutputStream, InputStream, OutputStream}
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,11 +25,8 @@ import graft.functions.{FieldDirective, FieldSpec, RowBinaryEncode}
   * }}}
   *
   * RowBinary is schema-less on the wire, so reads REQUIRE an explicit
-  * schema (`supportsExternalMetadata`). Files are not splittable (no
-  * sync markers), so each file is one input partition — at 100 TB the
-  * writer's one-file-per-task layout keeps read parallelism equal to
-  * write parallelism, the same contract the reference's per-partition
-  * file sinks provide. DateTime round-trips at second precision (the
+  * schema. Files carry no sync markers; [[FileConnector]] reads each as
+  * one input partition. DateTime round-trips at second precision (the
   * ClickHouse wire type is int32 epoch seconds).
   *
   * Wire contract: every column maps to ClickHouse `Nullable(T)` — a
@@ -47,79 +37,31 @@ import graft.functions.{FieldDirective, FieldSpec, RowBinaryEncode}
   * both directions agree on. The `graft_rowbinary` EXPRESSION remains
   * the schema-exact encoder for non-Nullable ClickHouse columns.)
   */
-class RowBinarySource extends TableProvider {
-  override def supportsExternalMetadata(): Boolean = true
-
+class RowBinarySource extends FileConnector("graft-rowbinary", ".rowbinary") {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     throw new IllegalArgumentException(
       "graft-rowbinary is schema-less on the wire: pass an explicit schema via .schema(...)")
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new RowBinaryTable(schema, properties.get("path"),
-      ConnectorFiles.optionIgnoreCase(properties, "fieldspec").getOrElse(""))
+  override private[sources] def codec(schema: StructType,
+      option: String => Option[String]): FileCodec =
+    new RowBinaryCodec(schema, option("fieldspec").getOrElse(""))
 }
 
-private[sources] class RowBinaryTable(tableSchema: StructType, path: String,
-    fieldSpec: String)
-    extends Table with SupportsRead with SupportsWrite {
-
-  require(path != null, "graft-rowbinary requires a path")
-  FieldSpec.check(tableSchema, FieldSpec.parse(fieldSpec))
+private[sources] class RowBinaryCodec(val schema: StructType, fieldSpec: String)
+    extends FileCodec {
+  FieldSpec.check(schema, FieldSpec.parse(fieldSpec))
     .foreach(m => throw new IllegalArgumentException(s"graft-rowbinary: $m"))
 
-  override def name(): String = s"graft-rowbinary:$path"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
-      override def readSchema(): StructType = tableSchema
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] =
-        // recursive listing so per-epoch subdirectory layouts (loader
-        // sinks) read transparently; _/.-prefixed names are invisible
-        // (staging convention shared with the file sinks)
-        ConnectorFiles.listDataFiles(path,
-            ConnectorFiles.restoreConf(ConnectorFiles.captureConf()), ".rowbinary")
-          .map(f => RowBinaryPartition(f.toString): InputPartition).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new RowBinaryReaderFactory(tableSchema, fieldSpec, ConnectorFiles.captureConf())
-    }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with Write with BatchWrite {
-      override def build(): Write = this
-      override def toBatch: BatchWrite = this
-      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-        new RowBinaryWriterFactory(path, tableSchema, fieldSpec, ConnectorFiles.captureConf())
-      override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-      override def abort(messages: Array[WriterCommitMessage]): Unit =
-        ConnectorFiles.deleteCommitted(
-          messages.collect { case RowBinaryCommit(f) => f },
-          ConnectorFiles.restoreConf(ConnectorFiles.captureConf()))
-    }
-}
-
-private[sources] case class RowBinaryPartition(file: String) extends InputPartition
-
-private[sources] class RowBinaryReaderFactory(schema: StructType, fieldSpec: String,
-    confProps: Array[(String, String)]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new RowBinaryReader(partition.asInstanceOf[RowBinaryPartition].file, schema,
-      fieldSpec, ConnectorFiles.restoreConf(confProps))
+  override def reader(in: InputStream, file: String): PartitionReader[InternalRow] =
+    new RowBinaryReader(in, file, schema, fieldSpec)
+  override def writer(out: OutputStream): RowWriter = new RowBinaryWriter(out, schema, fieldSpec)
 }
 
 /** Streaming decoder — the byte-level inverse of RowBinaryEncode. */
-private[sources] class RowBinaryReader(file: String, schema: StructType,
-    fieldSpec: String, conf: Configuration) extends PartitionReader[InternalRow] {
+private[sources] class RowBinaryReader(stream: InputStream, file: String, schema: StructType,
+    fieldSpec: String) extends PartitionReader[InternalRow] {
 
-  private val in = {
-    val p = new Path(file)
-    new ByteReader(p.getFileSystem(conf).open(p), file)
-  }
+  private val in = new ByteReader(stream, file)
   private val fields = schema.fields
   private val directives = FieldSpec.resolve(schema, FieldSpec.parse(fieldSpec))
   private var current: InternalRow = _
@@ -184,34 +126,19 @@ private[sources] object RowBinaryReader {
   }
 }
 
-private[sources] class RowBinaryWriterFactory(path: String, schema: StructType,
-    fieldSpec: String, confProps: Array[(String, String)]) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new RowBinaryWriter(path, schema, fieldSpec, partitionId,
-      ConnectorFiles.restoreConf(confProps))
-}
-
-private[sources] case class RowBinaryCommit(file: String) extends WriterCommitMessage
-
-/** One `.rowbinary` file per task, streamed (no whole-partition
-  * buffering), encoded with the SAME byte helpers as the
-  * `graft_rowbinary` expression — single source of truth for the
-  * format. */
-private[sources] class RowBinaryWriter(path: String, schema: StructType,
-    fieldSpec: String, partitionId: Int,
-    conf: Configuration) extends DataWriter[InternalRow] {
+/** Streams a `.rowbinary` file (no whole-partition buffering), encoded
+  * with the SAME byte helpers as the `graft_rowbinary` expression —
+  * single source of truth for the format. */
+private[sources] class RowBinaryWriter(stream: OutputStream, schema: StructType,
+    fieldSpec: String) extends RowWriter {
 
   private val directives = FieldSpec.resolve(schema, FieldSpec.parse(fieldSpec))
 
-  private val file = new Path(path, f"part-$partitionId%05d-${UUID.randomUUID()}.rowbinary")
-  private val fs = file.getFileSystem(conf)
-  private lazy val out = new BufferedOutputStream(fs.create(file, false), 1 << 16)
+  private val out = new BufferedOutputStream(stream, 1 << 16)
   private val rowBuf = new java.io.ByteArrayOutputStream(256)
   private val fields = schema.fields
-  private var opened = false
 
   override def write(row: InternalRow): Unit = {
-    opened = true
     rowBuf.reset()
     var i = 0
     while (i < fields.length) {
@@ -222,18 +149,5 @@ private[sources] class RowBinaryWriter(path: String, schema: StructType,
     rowBuf.writeTo(out)
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (opened) out.close()
-    RowBinaryCommit(file.toString)
-  }
-
-  override def abort(): Unit = {
-    // close() flushes, and on an already-broken stream that flush throws
-    // the same error that triggered the abort — the delete below must
-    // still run or the truncated file survives in the FINAL output dir
-    // (files are written in place, there is no _temporary staging)
-    if (opened) { try out.close() catch { case _: java.io.IOException => () } }
-    if (fs.exists(file)) fs.delete(file, false)
-  }
-  override def close(): Unit = ()
+  override def close(): Unit = out.close()
 }

@@ -1,18 +1,10 @@
 package graft.sources
 
-import java.io.BufferedOutputStream
-import java.util.UUID
+import java.io.{BufferedOutputStream, ByteArrayOutputStream, InputStream, OutputStream}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,78 +18,33 @@ import graft.functions.{FieldDirective, FieldSpec, VerticaNativeEncode}
   * 2000-epoch timestamps). The reference ships this INTO Vertica COPY;
   * this connector also reads it back. The null bitmap always covers
   * every column, so the wire format is nullability-independent — no
-  * flag-presence ambiguity. Reads require an explicit schema; files are
-  * unsplittable (one input partition per file). */
-class VerticaNativeSource extends TableProvider {
-  override def supportsExternalMetadata(): Boolean = true
-
+  * flag-presence ambiguity. Reads require an explicit schema. */
+class VerticaNativeSource extends FileConnector("graft-vertica-native", ".vnative") {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     throw new IllegalArgumentException(
       "graft-vertica-native requires an explicit read schema via .schema(...)")
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new VerticaNativeTable(schema, properties.get("path"),
-      ConnectorFiles.optionIgnoreCase(properties, "fieldspec").getOrElse(""))
+  override private[sources] def codec(schema: StructType,
+      option: String => Option[String]): FileCodec =
+    new VerticaNativeCodec(schema, option("fieldspec").getOrElse(""))
 }
 
-private[sources] class VerticaNativeTable(tableSchema: StructType, path: String,
-    fieldSpec: String)
-    extends Table with SupportsRead with SupportsWrite {
-
-  require(path != null, "graft-vertica-native requires a path")
-  FieldSpec.check(tableSchema, FieldSpec.parse(fieldSpec))
+private[sources] class VerticaNativeCodec(val schema: StructType, fieldSpec: String)
+    extends FileCodec {
+  FieldSpec.check(schema, FieldSpec.parse(fieldSpec))
     .foreach(m => throw new IllegalArgumentException(s"graft-vertica-native: $m"))
 
-  override def name(): String = s"graft-vertica-native:$path"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
-      override def readSchema(): StructType = tableSchema
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] =
-        ConnectorFiles.listDataFiles(path,
-            ConnectorFiles.restoreConf(ConnectorFiles.captureConf()), ".vnative")
-          .map(f => VerticaNativePartition(f.toString): InputPartition).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new VerticaNativeReaderFactory(tableSchema, fieldSpec, ConnectorFiles.captureConf())
-    }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with Write with BatchWrite {
-      override def build(): Write = this
-      override def toBatch: BatchWrite = this
-      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-        new VerticaNativeWriterFactory(path, tableSchema, fieldSpec, ConnectorFiles.captureConf())
-      override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-      override def abort(messages: Array[WriterCommitMessage]): Unit =
-        ConnectorFiles.deleteCommitted(
-          messages.collect { case VerticaNativeCommit(f) => f },
-          ConnectorFiles.restoreConf(ConnectorFiles.captureConf()))
-    }
-}
-
-private[sources] case class VerticaNativePartition(file: String) extends InputPartition
-
-private[sources] class VerticaNativeReaderFactory(schema: StructType, fieldSpec: String,
-    confProps: Array[(String, String)]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new VerticaNativeReader(partition.asInstanceOf[VerticaNativePartition].file, schema,
-      fieldSpec, ConnectorFiles.restoreConf(confProps))
+  override def reader(in: InputStream, file: String): PartitionReader[InternalRow] =
+    new VerticaNativeReader(in, file, schema, fieldSpec)
+  override def writer(out: OutputStream): RowWriter =
+    new VerticaNativeWriter(out, schema, fieldSpec)
 }
 
 /** Streaming decoder — the inverse of VerticaNativeEncode's framing. */
-private[sources] class VerticaNativeReader(file: String, schema: StructType,
-    fieldSpec: String, conf: Configuration) extends PartitionReader[InternalRow] {
+private[sources] class VerticaNativeReader(stream: InputStream, file: String,
+    schema: StructType, fieldSpec: String) extends PartitionReader[InternalRow] {
 
-  private val in = {
-    val p = new Path(file)
-    new ByteReader(p.getFileSystem(conf).open(p), file)
-  }
+  private val in = new ByteReader(stream, file)
   private val fields = schema.fields
   private val directives = FieldSpec.resolve(schema, FieldSpec.parse(fieldSpec))
   private val nBitBytes = (fields.length + 7) / 8
@@ -181,64 +128,24 @@ private[sources] class VerticaNativeReader(file: String, schema: StructType,
   override def close(): Unit = in.close()
 }
 
-private[sources] class VerticaNativeWriterFactory(path: String, schema: StructType,
-    fieldSpec: String, confProps: Array[(String, String)]) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new VerticaNativeWriter(path, schema, fieldSpec, partitionId,
-      ConnectorFiles.restoreConf(confProps))
-}
+/** Streams a `.vnative` file: header once, then records framed by
+  * [[VerticaNativeEncode.writeRecord]], as the `graft_verticarow`
+  * expression frames them. */
+private[sources] class VerticaNativeWriter(stream: OutputStream, schema: StructType,
+    fieldSpec: String) extends RowWriter {
 
-private[sources] case class VerticaNativeCommit(file: String) extends WriterCommitMessage
-
-/** One `.vnative` file per task: header once, then framed rows encoded
-  * with the SAME writers as the `graft_verticarow` expression. */
-private[sources] class VerticaNativeWriter(path: String, schema: StructType,
-    fieldSpec: String, partitionId: Int,
-    conf: Configuration) extends DataWriter[InternalRow] {
-
-  private val directives = FieldSpec.resolve(schema, FieldSpec.parse(fieldSpec))
-
-  private val file = new Path(path, f"part-$partitionId%05d-${UUID.randomUUID()}.vnative")
-  private val fs = file.getFileSystem(conf)
-  private lazy val out = {
-    val os = new BufferedOutputStream(fs.create(file, false), 1 << 16)
-    os.write(VerticaNativeEncode.fileHeader(schema, fieldSpec))
-    os
-  }
-  private val bodyBuf = new java.io.ByteArrayOutputStream(256)
-  private val headBuf = new java.io.ByteArrayOutputStream(16)
   private val fields = schema.fields
-  private val nBitBytes = (fields.length + 7) / 8
-  private var opened = false
+  private val directives = FieldSpec.resolve(schema, FieldSpec.parse(fieldSpec))
+  private val out = new BufferedOutputStream(stream, 1 << 16)
+  out.write(VerticaNativeEncode.fileHeader(schema, fieldSpec))
+  private val recordBuf = new ByteArrayOutputStream(256)
+  private val bodyBuf = new ByteArrayOutputStream(256)
 
   override def write(row: InternalRow): Unit = {
-    opened = true
-    bodyBuf.reset(); headBuf.reset()
-    val bits = new Array[Byte](nBitBytes)
-    var i = 0
-    while (i < fields.length) {
-      if (row.isNullAt(i)) bits(i / 8) = (bits(i / 8) | (1 << (8 - (i % 8) - 1))).toByte
-      else VerticaNativeEncode.writeValue(bodyBuf, fields(i).dataType, row, i, directives(i))
-      i += 1
-    }
-    graft.functions.BinaryRowWriters.writeLE(headBuf, bodyBuf.size().toLong, 4)
-    headBuf.write(bits, 0, nBitBytes)
-    headBuf.writeTo(out)
-    bodyBuf.writeTo(out)
+    recordBuf.reset()
+    VerticaNativeEncode.writeRecord(recordBuf, bodyBuf, row, fields, directives)
+    recordBuf.writeTo(out)
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (opened) out.close()
-    VerticaNativeCommit(file.toString)
-  }
-
-  override def abort(): Unit = {
-    // close() flushes, and on an already-broken stream that flush throws
-    // the same error that triggered the abort — the delete below must
-    // still run or the truncated file survives in the FINAL output dir
-    // (files are written in place, there is no _temporary staging)
-    if (opened) { try out.close() catch { case _: java.io.IOException => () } }
-    if (fs.exists(file)) fs.delete(file, false)
-  }
-  override def close(): Unit = ()
+  override def close(): Unit = out.close()
 }

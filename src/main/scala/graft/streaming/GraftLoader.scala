@@ -187,11 +187,11 @@ object GraftLoader {
         case InDataOffsets(dir) => new Sinks.InDataOffsetSink(dir).attach(events, cp)
         case SnapshotTable(dir) => new SnapshotTableSink(dir).attach(events, cp)
         case RowBinaryFiles(dir) =>
-          connectorFileSink(events, cp, dir, "graft.sources.RowBinarySource")
+          connectorFileSink(events, cp, dir, classOf[graft.sources.RowBinarySource].getName)
         case AvroFiles(dir) =>
-          connectorFileSink(events, cp, dir, "graft.sources.AvroContainerSource")
+          connectorFileSink(events, cp, dir, classOf[graft.sources.AvroContainerSource].getName)
         case ProtoFiles(dir) =>
-          connectorFileSink(events, cp, dir, "graft.sources.ProtoFileSource")
+          connectorFileSink(events, cp, dir, classOf[graft.sources.ProtoFileSource].getName)
         case BudgetedFiles(dir, maxBytes, maxRecords, jitter) =>
           Sinks.multiFileBatchingSink(events, dir, cp,
             MultiFileCommit.Total(ReachedAnyOf(maxBytes = maxBytes, maxRecords = maxRecords)),

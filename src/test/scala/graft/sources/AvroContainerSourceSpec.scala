@@ -87,25 +87,4 @@ class AvroContainerSourceSpec extends AnyFlatSpec with Matchers with BeforeAndAf
       arr.write.format(fmt).mode("append").save(tmp())
     }
   }
-
-  it should "serve as a GraftLoader sink with epoch-published exactly-once dirs" in {
-    import graft.streaming.GraftLoader
-    val srcDir = tmp(); val outDir = tmp(); val cpDir = tmp()
-    graft.Tables.events(spark, "/root/testdata/sf0.001")
-      .limit(500).coalesce(1).write.mode("overwrite").parquet(srcDir)
-    val q = GraftLoader.builder()
-      .source(GraftLoader.FileSource(srcDir, maxFilesPerTrigger = 4))
-      .sink(GraftLoader.AvroFiles(outDir))
-      .checkpoint(cpDir)
-      .start(spark)
-    q.awaitTermination()
-    // published epoch dirs only (no staging leftovers), readable back
-    val epochs = java.nio.file.Files.list(java.nio.file.Paths.get(outDir)).toArray
-      .map(_.toString.split("/").last)
-    epochs.count(_.startsWith("epoch=")) should be > 0
-    epochs.exists(_.startsWith("_")) shouldBe false
-    val back = spark.read.format(fmt)
-      .schema(graft.streaming.EventSource.schema).load(outDir)
-    back.count() shouldBe 500
-  }
 }

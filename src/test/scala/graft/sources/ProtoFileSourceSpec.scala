@@ -8,6 +8,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
+import graft.plans.GraftFunctions
+
 /** Round-trip spec for the graft-proto DataSource V2 connector: varint
   * length framing + ProtoWire messages; the reader must be the exact
   * inverse of the writer, and the framed bytes must be decodable by the
@@ -98,6 +100,29 @@ class ProtoFileSourceSpec extends AnyFlatSpec with Matchers with BeforeAndAfterA
         expr(s"graft_proto_decode(unhex('${msg.map("%02X".format(_)).mkString}'), 'a BIGINT, b STRING') AS rec"))
       .collect()(0).getStruct(0)
     (r.getLong(0), r.getString(1)) shouldBe ((42L, "x"))
+  }
+
+  it should "frame each row as varint(length) + its graft_proto bytes, in order" in {
+    import spark.implicits._
+    val df = Seq(
+      (1L, Some("alpha"), Some(Seq(1.0f, -2.5f))),
+      (2L, None, None),
+      (3L, Some("long " * 40), Some(Seq.empty[Float]))) // a 2-byte length varint
+      .toDF("id", "name", "vec").coalesce(1)
+    val dir = tmp()
+    df.write.format(fmt).mode("append").save(dir)
+    val frames = df.select(GraftFunctions.call("graft_proto", struct(df.columns.map(col): _*)))
+      .collect().map { r =>
+        val msg = r.getAs[Array[Byte]](0)
+        val frame = new java.io.ByteArrayOutputStream()
+        graft.functions.ProtoWire.writeVarint(frame, msg.length.toLong)
+        frame.write(msg)
+        frame.toByteArray
+      }
+    frames.exists(_.length > 129) shouldBe true
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".pb"))
+    files.length shouldBe 1
+    Files.readAllBytes(files.head.toPath) shouldBe frames.flatten
   }
 
   it should "reject reads without a schema and unsupported field types" in {

@@ -4,10 +4,11 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
+
+import graft.plans.GraftFunctions
 
 /** Round-trip spec for the graft-rowbinary DataSource V2 connector: the
   * reader must be the exact byte-level inverse of the writer (and of the
@@ -85,19 +86,21 @@ class RowBinarySourceSpec extends AnyFlatSpec with Matchers with BeforeAndAfterA
     a shouldBe b
   }
 
-  it should "parallelize reads one partition per written file" in {
+  it should "write each row's graft_rowbinary bytes, in order, for an all-nullable schema" in {
     import spark.implicits._
+    val df = Seq(
+      (Some(1L), Some("alpha"), Some(1.5), Some(true)),
+      (None, Some("βeta✓" * 40), None, Some(false)),
+      (Some(3L), None, Some(-2.25), None))
+      .toDF("id", "name", "score", "flag").coalesce(1)
+    df.schema.fields.forall(_.nullable) shouldBe true
     val dir = tmp()
-    (1 to 100).map(i => (i.toLong, s"row$i")).toDF("id", "s")
-      .repartition(4)
-      .write.format(fmt).mode("append").save(dir)
-    new java.io.File(dir).listFiles().count(_.getName.endsWith(".rowbinary")) shouldBe 4
-    val back = spark.read.format(fmt)
-      .schema(StructType(Seq(StructField("id", LongType, nullable = false),
-        StructField("s", StringType, nullable = true))))
-      .load(dir)
-    back.rdd.getNumPartitions shouldBe 4
-    back.agg(sum("id")).collect()(0).getLong(0) shouldBe (1 to 100).sum.toLong
+    df.write.format(fmt).mode("append").save(dir)
+    val encoded = df.select(GraftFunctions.call("graft_rowbinary", struct(df.columns.map(col): _*)))
+      .collect().map(_.getAs[Array[Byte]](0))
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".rowbinary"))
+    files.length shouldBe 1
+    Files.readAllBytes(files.head.toPath) shouldBe encoded.flatten
   }
 
   it should "refuse to read without an explicit schema" in {

@@ -8,6 +8,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
+import graft.functions.VerticaNativeEncode
+import graft.plans.GraftFunctions
+
 /** Round-trip spec for the graft-vertica-native DataSource V2 connector:
   * header validation + reader as the framing inverse of the writer. */
 class VerticaNativeSourceSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
@@ -58,6 +61,25 @@ class VerticaNativeSourceSpec extends AnyFlatSpec with Matchers with BeforeAndAf
     intercept[Throwable] {
       spark.read.format(fmt).schema(df.schema).load(dir).collect()
     }
+  }
+
+  it should "write fileHeader then each row's graft_verticarow bytes, in order" in {
+    import spark.implicits._
+    val df = Seq(
+      (1L, Some("ab"), Some("00112233-4455-6677-8899-aabbccddeeff"), Some(1.5)),
+      (2L, None, Some("ffeeddcc-bbaa-9988-7766-554433221100"), None),
+      (3L, Some("wxyz"), None, Some(-2.25)))
+      .toDF("id", "code", "uid", "score").coalesce(1)
+    val spec = "code:fixed(6), uid:uuid"
+    val dir = tmp()
+    df.write.format(fmt).option("fieldSpec", spec).mode("append").save(dir)
+    val encoded = df.select(GraftFunctions.call("graft_verticarow",
+        struct(df.columns.map(col): _*), lit(spec)))
+      .collect().map(_.getAs[Array[Byte]](0))
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".vnative"))
+    files.length shouldBe 1
+    Files.readAllBytes(files.head.toPath) shouldBe
+      VerticaNativeEncode.fileHeader(df.schema, spec) ++ encoded.flatten
   }
 
   it should "round-trip the events table at full microsecond precision" in {

@@ -695,60 +695,37 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     decoded.select("event_id").as[Long].collect() shouldBe Array(7L)
   }
 
-  it should "load a stream into ClickHouse-RowBinary files end to end" in {
+  it should "load a stream into each connector file sink end to end" in {
     import spark.implicits._
     val src = tmp()
     Seq(Ev(0, ts(1), 1, "click", 1.0, "{}"), Ev(1, ts(2), 2, "view", 2.0, "{}"))
       .toDF().write.mode("overwrite").parquet(src)
-    val out = tmp()
-    GraftLoader.builder()
-      .source(GraftLoader.FileSource(src, maxFilesPerTrigger = 4))
-      .sink(GraftLoader.RowBinaryFiles(out))
-      .checkpoint(tmp())
-      .start(spark)
-      .awaitTermination()
-    val back = spark.read.format("graft.sources.RowBinarySource")
-      .schema(EventSource.schema).load(out)
-    back.count() shouldBe 2
-    back.select("event_id").collect().map(_.getLong(0)).sorted shouldBe Array(0L, 1L)
-    // restart from the same checkpoint: published epochs are not re-written
-    GraftLoader.builder()
-      .source(GraftLoader.FileSource(src, maxFilesPerTrigger = 4))
-      .sink(GraftLoader.RowBinaryFiles(out))
-      .checkpoint(tmp()) // fresh checkpoint → epoch 0 REPLAYS, must be skipped
-      .start(spark)
-      .awaitTermination()
-    spark.read.format("graft.sources.RowBinarySource")
-      .schema(EventSource.schema).load(out).count() shouldBe 2
-  }
-
-  it should "load a stream into proto record files end to end" in {
-    import spark.implicits._
-    val src = tmp()
-    Seq(Ev(0, ts(1), 1, "click", 1.0, "{}"), Ev(1, ts(2), 2, "view", 2.0, "{}"))
-      .toDF().write.mode("overwrite").parquet(src)
-    val out = tmp()
-    GraftLoader.builder()
-      .source(GraftLoader.FileSource(src, maxFilesPerTrigger = 4))
-      .sink(GraftLoader.ProtoFiles(out))
-      .checkpoint(tmp())
-      .start(spark)
-      .awaitTermination()
-    val back = spark.read.format("graft.sources.ProtoFileSource")
-      .schema(EventSource.schema).load(out)
-    back.count() shouldBe 2
-    back.orderBy("event_id").select("event_id", "event_type").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq shouldBe
-      Seq((0L, "click"), (1L, "view"))
-    // replay from a fresh checkpoint: the published epoch must be skipped
-    GraftLoader.builder()
-      .source(GraftLoader.FileSource(src, maxFilesPerTrigger = 4))
-      .sink(GraftLoader.ProtoFiles(out))
-      .checkpoint(tmp())
-      .start(spark)
-      .awaitTermination()
-    spark.read.format("graft.sources.ProtoFileSource")
-      .schema(EventSource.schema).load(out).count() shouldBe 2
+    val sinks = Seq[(String => GraftLoader.Sink, String)](
+      (GraftLoader.RowBinaryFiles(_), classOf[graft.sources.RowBinarySource].getName),
+      (GraftLoader.AvroFiles(_), classOf[graft.sources.AvroContainerSource].getName),
+      (GraftLoader.ProtoFiles(_), classOf[graft.sources.ProtoFileSource].getName))
+    for ((sink, format) <- sinks) withClue(s"$format: ") {
+      val out = tmp()
+      def load(): Unit = GraftLoader.builder()
+        .source(GraftLoader.FileSource(src, maxFilesPerTrigger = 4))
+        .sink(sink(out))
+        .checkpoint(tmp()) // a fresh checkpoint on reload → epoch 0 REPLAYS
+        .start(spark)
+        .awaitTermination()
+      def back() = spark.read.format(format).schema(EventSource.schema).load(out)
+      load()
+      back().count() shouldBe 2
+      back().orderBy("event_id").select("event_id", "event_type").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq shouldBe
+        Seq((0L, "click"), (1L, "view"))
+      // published epoch dirs only, no staging leftovers
+      val entries = new java.io.File(out).list().toSeq
+      entries.count(_.startsWith("epoch=")) should be > 0
+      entries.exists(_.startsWith("_")) shouldBe false
+      // the replayed epoch is already published and must be skipped
+      load()
+      back().count() shouldBe 2
+    }
   }
 
   behavior of "Transforms"
