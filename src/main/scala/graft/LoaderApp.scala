@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{EventSource, Sinks}
+import graft.streaming.GraftLoader
 import graft.util.GraftMetrics
 
 /** Standalone loader entrypoint — the `StreamLoader` analog
@@ -29,46 +29,39 @@ object LoaderApp {
   private val usage =
     "usage: LoaderApp <srcDir> <outDir> <checkpointDir> [files|2pc|indata|snapshot|rowbinary] [lookback]"
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3, usage)
-    val Array(srcDir, outDir, checkpointDir) = args.take(3)
-    val sinkKind = args.lift(3).getOrElse("files")
+  private val sinks: Map[String, String => GraftLoader.Sink] = Map(
+    "files" -> (GraftLoader.PartitionedFiles(_)),
+    "2pc" -> (GraftLoader.TwoPhaseCommit(_)),
+    "indata" -> (GraftLoader.InDataOffsets(_)),
+    "snapshot" -> (GraftLoader.SnapshotTable(_)),
+    "rowbinary" -> (GraftLoader.RowBinaryFiles(_)))
+
+  /** The loader sink a command-line sink name selects, writing to `outDir`. */
+  private[graft] def sink(kind: String, outDir: String): GraftLoader.Sink = {
     // an explicit whitelist: a TYPO'd sink name must not silently fall
     // through to the default file sink — it would commit data in the
     // wrong layout before anyone notices
-    require(Set("files", "2pc", "indata", "snapshot", "rowbinary")(sinkKind),
-      s"unknown sink '$sinkKind'; $usage")
+    require(sinks.contains(kind), s"unknown sink '$kind'; $usage")
+    sinks(kind)(outDir)
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 3, usage)
+    val Array(srcDir, outDir, checkpointDir) = args.take(3)
+    val loaderSink = sink(args.lift(3).getOrElse("files"), outDir)
     val lookback = args.lift(4).map(parseLookback)
       .getOrElse(streaming.StreamInterval.Current)
-    require(lookback == streaming.StreamInterval.Current || sinkKind == "indata",
-      "lookback requires the indata sink (epoch-addressed replay)")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val metrics = GraftMetrics.install(spark)
-    // only the sinks that attach to a pre-built stream need it; the
-    // GraftLoader builder paths construct their own FileSource
-    def events = EventSource.fileStream(spark, srcDir, maxFilesPerTrigger = 64)
-    val query = sinkKind match {
-      case "2pc" => new Sinks.TwoPhaseCommitSink(outDir).attach(events, checkpointDir)
-      case "indata" =>
-        streaming.GraftLoader.builder()
-          .source(streaming.GraftLoader.FileSource(srcDir, maxFilesPerTrigger = 64))
-          .sink(streaming.GraftLoader.InDataOffsets(outDir))
-          .checkpoint(checkpointDir)
-          .lookback(lookback)
-          .start(spark)
-      case "snapshot" => new streaming.SnapshotTableSink(outDir).attach(events, checkpointDir)
-      case "rowbinary" =>
-        // exactly-once RowBinary epochs via the DSv2 connector (see
-        // GraftLoader.RowBinaryFiles for the staged-epoch protocol)
-        streaming.GraftLoader.builder()
-          .source(streaming.GraftLoader.FileSource(srcDir, maxFilesPerTrigger = 64))
-          .sink(streaming.GraftLoader.RowBinaryFiles(outDir))
-          .checkpoint(checkpointDir)
-          .start(spark)
-      case "files" => Sinks.recordBatchingSink(events, outDir, checkpointDir).start()
-    }
+    // a lookback needs the indata sink: the builder rejects any other
+    val query = GraftLoader.builder()
+      .source(GraftLoader.FileSource(srcDir, maxFilesPerTrigger = 64))
+      .sink(loaderSink)
+      .checkpoint(checkpointDir)
+      .lookback(lookback)
+      .start(spark)
     sys.addShutdownHook { query.stop() }
     query.awaitTermination()
     // count from the query's own progress objects, not the metrics

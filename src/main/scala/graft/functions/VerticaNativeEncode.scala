@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   *  - primitive encodings: vertica/file/native/NativeVerticaPrimitiveTypeWriter.scala:22
   *
   * `VerticaNativeEncode.fileHeader` supplies the file-level magic/header so
-  * a foreachBatch sink can assemble complete native files per partition.
+  * an epoch sink can assemble complete native files per partition.
   * Participates in whole-stage codegen: per-field writes are specialized
   * at compile time (see RowBinaryEncode for the rationale).
   *

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 /** Composable loader builder — the reference's user-facing API shape
   * (`StreamLoader` + builders: source, formatter, batcher, storage),
@@ -180,47 +180,32 @@ object GraftLoader {
           .option("path", q.dir)
           .start()
       }
-      val main = snk match {
+      // every sink but Spark's own partitioned file sink is an EpochSink
+      val writer: Either[DataStreamWriter[Row], EpochSink] = snk match {
         case PartitionedFiles(dir, fmt, comp, maxRec) =>
-          Sinks.recordBatchingSink(events, dir, cp, maxRec, fmt, comp).start()
-        case TwoPhaseCommit(dir) => new Sinks.TwoPhaseCommitSink(dir).attach(events, cp)
-        case InDataOffsets(dir) => new Sinks.InDataOffsetSink(dir).attach(events, cp)
-        case SnapshotTable(dir) => new SnapshotTableSink(dir).attach(events, cp)
+          Left(Sinks.recordBatchingSink(events, dir, cp, maxRec, fmt, comp))
+        case TwoPhaseCommit(dir) => Right(new Sinks.TwoPhaseCommitSink(dir))
+        case InDataOffsets(dir) => Right(new Sinks.InDataOffsetSink(dir))
+        case SnapshotTable(dir) => Right(new SnapshotTableSink(dir))
         case RowBinaryFiles(dir) =>
-          connectorFileSink(events, cp, dir, classOf[graft.sources.RowBinarySource].getName)
+          Right(connectorFileSink(dir, classOf[graft.sources.RowBinarySource].getName))
         case AvroFiles(dir) =>
-          connectorFileSink(events, cp, dir, classOf[graft.sources.AvroContainerSource].getName)
+          Right(connectorFileSink(dir, classOf[graft.sources.AvroContainerSource].getName))
         case ProtoFiles(dir) =>
-          connectorFileSink(events, cp, dir, classOf[graft.sources.ProtoFileSource].getName)
+          Right(connectorFileSink(dir, classOf[graft.sources.ProtoFileSource].getName))
         case BudgetedFiles(dir, maxBytes, maxRecords, jitter) =>
-          Sinks.multiFileBatchingSink(events, dir, cp,
-            MultiFileCommit.Total(ReachedAnyOf(maxBytes = maxBytes, maxRecords = maxRecords)),
-            jitter).start()
+          Right(Sinks.multiFileBatchingSink(dir,
+            MultiFileCommit.Total(ReachedAnyOf(maxBytes = maxBytes, maxRecords = maxRecords)), jitter))
       }
-      main +: deadLetters.toList
+      writer.fold(_.start(), _.attach(events, cp)) +: deadLetters.toList
     }
 
-    /** Shared epoch-published sink over a graft DSv2 file connector:
-      * exactly-once via stage + one atomic rename (the Sinks.publish
-      * protocol) — a replayed or half-written epoch is re-staged. */
-    private def connectorFileSink(events: DataFrame, cp: String, dir: String,
-        format: String): StreamingQuery = {
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      events.writeStream
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val fs = new Path(dir).getFileSystem(
-            batch.sparkSession.sparkContext.hadoopConfiguration)
-          if (!fs.exists(new Path(dir, s"epoch=$id"))) {
-            Sinks.publish(fs, dir, s"epoch=$id")(staging =>
-              batch.write.format(format).mode("append").save(staging.toString))
-          }
-          () // foreachBatch wants a Unit-returning function
-        }
-        .start()
-    }
+    /** Epoch-published sink over a graft DSv2 file connector: one
+      * `epoch=<id>` dir per epoch (the [[EpochSink.publishOnce]] protocol). */
+    private def connectorFileSink(dir: String, format: String): EpochSink =
+      EpochSink.publishOnce(dir, "epoch=") { (batch, staging) =>
+        batch.write.format(format).mode("append").save(staging.toString)
+      }
 
     /** Reference rewind (StreamInterval): re-consume the rewound window
       * from the SOURCE (not the sink's already-transformed rows),

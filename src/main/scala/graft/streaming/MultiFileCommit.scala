@@ -127,37 +127,18 @@ object MultiFileCommit {
     * [[Sinks.multiFileBatchingSink]] runs per partition group: a batch
     * accumulates until its OWN totals reach the budget (the crossing
     * record stays), then the counters reset. Factored pure so specs can
-    * property-check the semantics independently of Spark. */
-  final class TotalFold(maxBytes: Option[Long], maxRecords: Option[Long]) extends Serializable {
-    require(maxBytes.nonEmpty || maxRecords.nonEmpty, "TotalFold needs a budget")
-    private var commit = 0L
-    private var accBytes = 0L
-    private var accRecords = 0L
-
-    /** Restart numbering (a new partition group). */
-    def reset(): Unit = { commit = 0L; accBytes = 0L; accRecords = 0L }
-
-    /** Commit index for the next record of `bytes` encoded bytes. */
-    def next(bytes: Long): Long = {
-      accBytes += bytes
-      accRecords += 1
-      val c = commit
-      if (maxBytes.exists(accBytes >= _) || maxRecords.exists(accRecords >= _)) {
-        commit += 1L; accBytes = 0L; accRecords = 0L
-      }
-      c
-    }
-  }
-
-  /** [[TotalFold]] with [[FuzzyReachedAnyOf]]-style jitter executed
-    * DISTRIBUTED: each commit batch's byte/record budget is a fresh
-    * Gaussian draw, so the files a fleet of writers publishes stop
-    * sharing one exact size — de-synchronized storage load without any
-    * coordination. Replay-deterministic by construction: the RNG
-    * re-seeds per partition group from (seed, groupSeed) and draws
-    * sequentially along the group's pinned fold order, so a re-executed
-    * epoch reproduces the identical commit assignment — the property
-    * the exactly-once publish depends on. Budgets floor at 1 (a low
+    * property-check the semantics independently of Spark.
+    *
+    * Each commit batch's byte/record budget is a fresh Gaussian draw
+    * ([[FuzzyReachedAnyOf]]-style jitter executed DISTRIBUTED), so the
+    * files a fleet of writers publishes stop sharing one exact size —
+    * de-synchronized storage load without any coordination. A zero
+    * spread draws every budget as exactly its mean: the fixed-budget
+    * fold. Replay-deterministic by construction: the RNG re-seeds per
+    * partition group from (seed, groupSeed) and draws sequentially
+    * along the group's pinned fold order, so a re-executed epoch
+    * reproduces the identical commit assignment — the property the
+    * exactly-once publish depends on. Budgets floor at 1 (a low
     * Gaussian tail must jitter, not degenerate to per-record commits). */
   final class FuzzyTotalFold(
       bytes: Option[(Long, Long)],

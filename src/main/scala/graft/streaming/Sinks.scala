@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
 /** Storage sinks with the reference's delivery guarantees, re-expressed on
@@ -86,11 +86,9 @@ object Sinks {
     * Duration limits are trigger-owned in Spark (see [[ReachedAnyOf]]);
     * configure the trigger interval for wall-clock flushing. */
   def multiFileBatchingSink(
-      events: DataFrame,
       outDir: String,
-      checkpointDir: String,
       strategy: MultiFileCommit.Total,
-      jitter: Option[(Double, Long)] = None): DataStreamWriter[Row] = {
+      jitter: Option[(Double, Long)] = None): EpochSink = {
     val maxBytes = strategy.single.maxBytes
     val maxRecords = strategy.single.maxRecords
     require(maxBytes.nonEmpty || maxRecords.nonEmpty,
@@ -98,58 +96,45 @@ object Sinks {
     jitter.foreach { case (rel, _) =>
       require(rel > 0.0 && rel < 1.0,
         s"jitter relative stdDev must be in (0, 1) (got $rel)") }
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val dest = new Path(outDir, s"epoch_$epochId")
-        if (!fs.exists(dest)) { // replayed epochs were already published atomically
-          val line = concat_ws(",", batch.columns.map(c => col(c).cast("string")): _*)
-          val sized = batch
-            .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
-            .withColumn("_bytes", (octet_length(line) + lit(1)).cast("long"))
-            .repartition(col("event_type"))
-            .sortWithinPartitions(col("event_type"), col("event_id"))
-          val outSchema = sized.schema.add("commit", org.apache.spark.sql.types.LongType)
-          val groupIdx = sized.schema.fieldIndex("event_type")
-          val bytesIdx = sized.schema.fieldIndex("_bytes")
-          val maxB = maxBytes; val maxR = maxRecords; val jit = jitter
-          val withCommit = sized.mapPartitions { it =>
-            // reset-per-commit fold (MultiFileCommit.TotalFold); state
-            // restarts on group change (a partition may hold several
-            // hash-co-located groups). With jitter, budgets re-draw per
-            // commit (FuzzyTotalFold) — replay-deterministic because the
-            // RNG re-seeds from (seed, group) and the fold order is
-            // pinned by the sortWithinPartitions above.
-            val fold = jit match {
-              case Some((rel, seed)) => Right(new MultiFileCommit.FuzzyTotalFold(
-                maxB.map(b => (b, math.max(1L, math.round(b * rel)))),
-                maxR.map(r => (r, math.max(1L, math.round(r * rel)))), seed))
-              case None => Left(new MultiFileCommit.TotalFold(maxB, maxR))
-            }
-            var group: String = null
-            it.map { row =>
-              val g = row.getString(groupIdx)
-              if (g != group) {
-                group = g
-                fold.fold(_.reset(), _.reset(g.##.toLong))
-              }
-              val commit = fold.fold(_.next(row.getLong(bytesIdx)), _.next(row.getLong(bytesIdx)))
-              Row.fromSeq(row.toSeq :+ commit)
-            }
-          }(org.apache.spark.sql.Encoders.row(outSchema))
-            .drop("_bytes")
-            .withColumnRenamed("event_type", "group")
-          publish(fs, outDir, s"epoch_$epochId") { staging =>
-            withCommit
-              .write.partitionBy("group", "commit", "dt")
-              .mode("overwrite").parquet(staging.toString)
+    // without jitter every budget is drawn with zero spread: exactly its mean
+    def spread(mean: Long): Long =
+      jitter.fold(0L) { case (rel, _) => math.max(1L, math.round(mean * rel)) }
+    val bytes = maxBytes.map(b => (b, spread(b)))
+    val records = maxRecords.map(r => (r, spread(r)))
+    val seed = jitter.fold(0L)(_._2)
+    EpochSink.publishOnce(outDir, "epoch_") { (batch, staging) =>
+      val line = concat_ws(",", batch.columns.map(c => col(c).cast("string")): _*)
+      val sized = batch
+        .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
+        .withColumn("_bytes", (octet_length(line) + lit(1)).cast("long"))
+        .repartition(col("event_type"))
+        .sortWithinPartitions(col("event_type"), col("event_id"))
+      val outSchema = sized.schema.add("commit", org.apache.spark.sql.types.LongType)
+      val groupIdx = sized.schema.fieldIndex("event_type")
+      val bytesIdx = sized.schema.fieldIndex("_bytes")
+      val withCommit = sized.mapPartitions { it =>
+        // reset-per-commit fold; state restarts on group change (a
+        // partition may hold several hash-co-located groups). Budgets
+        // re-draw per commit — replay-deterministic because the RNG
+        // re-seeds from (seed, group) and the fold order is pinned by the
+        // sortWithinPartitions above.
+        val fold = new MultiFileCommit.FuzzyTotalFold(bytes, records, seed)
+        var group: String = null
+        it.map { row =>
+          val g = row.getString(groupIdx)
+          if (g != group) {
+            group = g
+            fold.reset(g.##.toLong)
           }
+          Row.fromSeq(row.toSeq :+ fold.next(row.getLong(bytesIdx)))
         }
-        ()
-      }
+      }(org.apache.spark.sql.Encoders.row(outSchema))
+        .drop("_bytes")
+        .withColumnRenamed("event_type", "group")
+      withCommit
+        .write.partitionBy("group", "commit", "dt")
+        .mode("overwrite").parquet(staging.toString)
+    }
   }
 
   /** Rename that FAILS LOUDLY: Hadoop `FileSystem.rename` reports most
@@ -260,9 +245,7 @@ object Sinks {
     * would corrupt every later parse of the shared file. A marker
     * becomes visible by one atomic create+rename, a torn tmp marker is
     * invisible to recovery (the epoch just re-delivers, idempotently),
-    * and no commit ever rewrites another commit's record. A legacy
-    * `_manifest` file from the append-era layout is still honored
-    * read-only, tolerating a torn final line.
+    * and no commit ever rewrites another commit's record.
     *
     * @param epochGate optional pre-publish integrity gate (round 14,
     *   r13 verdict item 6): runs against the staged epoch frame BEFORE
@@ -273,45 +256,23 @@ object Sinks {
     *   epoch's integrity, not just its atomicity.
     *   [[Transforms.manifestEpochGate]] is the shard-manifest instance. */
   class TwoPhaseCommitSink(outDir: String,
-      epochGate: Option[DataFrame => Option[String]] = None) extends Serializable {
-
-    def attach(events: DataFrame, checkpointDir: String): StreamingQuery =
-      events.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(writeBatch _)
-        .start()
+      epochGate: Option[DataFrame => Option[String]] = None) extends EpochSink {
 
     def committedBatchIds(spark: org.apache.spark.sql.SparkSession): Seq[Long] = {
       val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val commits = new Path(outDir, "_commits")
-      val markers =
-        if (!fs.exists(commits)) Seq.empty
-        else fs.listStatus(commits).toSeq
-          .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
-      val manifest = new Path(outDir, "_manifest") // legacy append-era layout
-      val legacy =
-        if (!fs.exists(manifest)) Seq.empty
-        else {
-          val in = fs.open(manifest)
-          // a crash mid-append can tear the final line; an unparseable id
-          // means that commit never completed — treat as uncommitted (the
-          // epoch re-delivers and re-publishes idempotently)
-          val lines = scala.io.Source.fromInputStream(in).getLines()
-            .flatMap(l => scala.util.Try(l.split(":")(0).toLong).toOption).toList
-          in.close(); lines
-        }
-      (markers ++ legacy).distinct
+      if (!fs.exists(commits)) Seq.empty
+      else fs.listStatus(commits).toSeq
+        .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
     }
 
-    /** Idempotent epoch write (the two phases + marker commit). The
-      * epoch is cached: foreachBatch re-executes the source scan for every
-      * action otherwise (write + ranges + count = 3 source reads). */
-    def writeBatch(batchRaw: DataFrame, batchId: Long): Unit = {
-      val spark = batchRaw.sparkSession
+    /** Idempotent epoch write (the two phases + marker commit), over the
+      * cached epoch: write + ranges + count would otherwise be 3 source
+      * reads. */
+    def writeBatch(batch: DataFrame, batchId: Long): Unit = {
+      val spark = batch.sparkSession
       if (committedBatchIds(spark).contains(batchId)) return // replay → skip
-      val batch = batchRaw.persist()
-      try {
+      EpochSink.cached(batch) {
         // Integrity gate BEFORE phase 2: a refused epoch publishes
         // NOTHING — no visible data dir, no marker — and fails the query
         // loudly (never a silent drop; the epoch re-delivers after the
@@ -347,7 +308,7 @@ object Sinks {
         val out = fs.create(tmpMarker, true)
         out.write(s"$ranges;rows=$rows\n".getBytes("UTF-8")); out.close()
         renameOrThrow(fs, tmpMarker, new Path(commits, batchId.toString))
-      } finally batch.unpersist()
+      }
     }
   }
 
@@ -365,14 +326,7 @@ object Sinks {
     * half-staged epoch is simply re-written. (Directory rename is atomic
     * on HDFS/POSIX; on S3 front this with the committer's staging layer,
     * exactly as the reference does with S3MultiFileStaging.) */
-  class InDataOffsetSink(outDir: String) extends Serializable {
-
-    def attach(events: DataFrame, checkpointDir: String): StreamingQuery =
-      events.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(writeBatch _)
-        .start()
+  class InDataOffsetSink(outDir: String) extends EpochSink {
 
     /** All committed (= atomically published) rows across epochs.
       * `mergeSchema` makes epochs written under an EVOLVED schema (a

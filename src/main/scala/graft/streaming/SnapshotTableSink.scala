@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Iceberg-style snapshot table sink (reference:
   * iceberg/IcebergRecordBatchStorage.scala — offsets committed atomically
@@ -32,14 +31,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   (dirs, commits and replay guards are untouched; parquet partition
   *   discovery restores the column on read). */
 class SnapshotTableSink(tableDir: String,
-    partitionCols: Seq[String] = Nil) extends Serializable {
-
-  def attach(events: DataFrame, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(writeBatch _)
-      .start()
+    partitionCols: Seq[String] = Nil) extends EpochSink {
 
   private def fs(spark: SparkSession) =
     new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -304,13 +296,12 @@ class SnapshotTableSink(tableDir: String,
     orphans.map(_.getPath.toString)
   }
 
-  def writeBatch(batchRaw: DataFrame, batchId: Long): Unit = {
-    val spark = batchRaw.sparkSession
+  def writeBatch(batch: DataFrame, batchId: Long): Unit = {
+    val spark = batch.sparkSession
     val prev = latestSnap(spark)
     if (prev.exists(_.committed.contains(batchId))) return // replayed epoch
-    // cache: the write and the ranges agg would otherwise each re-read the source
-    val batch = batchRaw.persist()
-    val ranges = try {
+    // cached: the write and the ranges agg would otherwise each re-read the source
+    val ranges = EpochSink.cached(batch) {
       // data files (distributed write; optionally cell/partition-pruned).
       // An EMPTY epoch writes unpartitioned: partitionBy of zero rows
       // emits no files at all and the dir becomes unreadable (schema
@@ -328,7 +319,7 @@ class SnapshotTableSink(tableDir: String,
         if (hasEventId) Seq(min(col("event_id")), max(col("event_id")))
         else Seq(lit(null), lit(null))
       batch.agg(loHi.head, (loHi.tail :+ count(lit(1))): _*).collect()(0)
-    } finally batch.unpersist()
+    }
     val committed = prev.map(_.committed).getOrElse(Seq.empty) :+ batchId
     val live = prev.map(_.live).getOrElse(Seq.empty) :+ s"batch=$batchId"
     publishSnapshot(spark,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** End-to-end standing-query document loader (round 14) — the
   * [[VectorStoreLoader]] composition discipline (reference:
@@ -51,22 +51,19 @@ object StandingQueryLoader {
     val quarantine = new SnapshotTableSink(quarantineDir,
       partitionCols = Seq("query_id"))
     val clean = new SnapshotTableSink(cleanDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val b = batch.persist() // split consumers: quarantine + clean
-        val hits = Transforms.bm25Score(b, queries, df, nDocs, avgdl)
-          .filter(col("score") >= minScore)
-          .persist() // consumers: quarantine write + hit-id anti-join
-        quarantine.writeBatch(hits, epochId)
-        clean.writeBatch(
-          b.join(hits.select(col("doc_id")).distinct(),
-            Seq("doc_id"), "left_anti"), epochId)
-        hits.unpersist(); b.unpersist()
-        ()
-      }
-      .start()
+    new EpochSink {
+      def writeBatch(batch: DataFrame, epochId: Long): Unit =
+        EpochSink.cached(batch) { // split consumers: quarantine + clean
+          val hits = Transforms.bm25Score(batch, queries, df, nDocs, avgdl)
+            .filter(col("score") >= minScore)
+          EpochSink.cached(hits) { // consumers: quarantine write + hit-id anti-join
+            quarantine.writeBatch(hits, epochId)
+            clean.writeBatch(
+              batch.join(hits.select(col("doc_id")).distinct(),
+                Seq("doc_id"), "left_anti"), epochId)
+          }
+        }
+    }.attach(docs, checkpointDir)
   }
 
   /** A reviewer's queue for one standing query — read from the

@@ -206,9 +206,9 @@ class PropertySpec extends AnyFlatSpec with Matchers {
       pqExpr.nullSafeEval(new GenericArrayData(Array.fill[Any](100)(0.0)),
         new GenericArrayData(Array[Any](0L, 1L, 2L, 3L, 4L, 5L, 6L, 7L)))
   }
-  behavior of "MultiFileCommit.TotalFold"
+  behavior of "MultiFileCommit.FuzzyTotalFold"
 
-  it should "close every batch exactly when its own budget is reached" in {
+  it should "close every batch exactly when its own budget is reached, at zero spread" in {
     import graft.streaming.MultiFileCommit
     val caseGen = for {
       maxB <- Gen.option(Gen.chooseNum(1L, 500L))
@@ -217,7 +217,8 @@ class PropertySpec extends AnyFlatSpec with Matchers {
       sizes <- Gen.nonEmptyListOf(Gen.chooseNum(1L, 400L))
     } yield (maxB, maxR, sizes)
     samples(caseGen, 300).foreach { case (maxB, maxR, sizes) =>
-      val fold = new MultiFileCommit.TotalFold(maxB, maxR)
+      val fold = new MultiFileCommit.FuzzyTotalFold(maxB.map((_, 0L)), maxR.map((_, 0L)), 0L)
+      fold.reset(0L)
       val ids = sizes.map(fold.next)
       // consecutive numbering from zero, advancing by at most one
       ids.head shouldBe 0L
@@ -234,7 +235,7 @@ class PropertySpec extends AnyFlatSpec with Matchers {
       val last = batches.last
       maxR.foreach(r => last.length.toLong should be <= r)
       // reset() restarts numbering for a new partition group
-      fold.reset()
+      fold.reset(1L)
       fold.next(1L) shouldBe 0L
     }
   }

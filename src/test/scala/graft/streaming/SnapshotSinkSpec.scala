@@ -40,6 +40,14 @@ class SnapshotSinkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll 
     epoch.storageLevel shouldBe StorageLevel.NONE
   }
 
+  it should "leave an epoch its caller cached as it was" in {
+    import spark.implicits._
+    val epoch = Seq(Ev(0, ts(1), 1, "click", 1.0, "{}")).toDF().persist()
+    new SnapshotTableSink(tmp()).writeBatch(epoch, 0L)
+    epoch.storageLevel shouldBe StorageLevel.MEMORY_AND_DISK
+    epoch.unpersist()
+  }
+
   it should "commit epochs as snapshots, read committed data, skip replays" in {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -212,22 +212,6 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     spark.read.parquet(s"$out/batch=1").collect()(0).getLong(0) shouldBe 1L
   }
 
-  it should "honor a legacy _manifest and tolerate a torn final line" in {
-    import spark.implicits._
-    val out = tmp()
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val o = fs.create(new org.apache.hadoop.fs.Path(out, "_manifest"), true)
-    // epoch 0 committed cleanly; a crash tore the line for epoch 1 —
-    // an unparseable id means that commit never completed
-    o.write("0:click=0..0;rows=1\n1garbage".getBytes("UTF-8")); o.close()
-    val sink = new Sinks.TwoPhaseCommitSink(out)
-    sink.committedBatchIds(spark) shouldBe Seq(0L)
-    // new epochs commit as markers alongside the legacy file
-    sink.writeBatch(Seq(Ev(1, ts(2), 2, "view", 2.0, "{}")).toDF(), 1L)
-    sink.committedBatchIds(spark).sorted shouldBe Seq(0L, 1L)
-  }
-
   it should "re-commit an epoch that crashed between publish and manifest write" in {
     import spark.implicits._
     val out = tmp()
@@ -292,6 +276,14 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     val epoch = Seq(Ev(0, ts(1), 1, "click", 1.0, "{}")).toDF()
     an[Exception] should be thrownBy new Sinks.TwoPhaseCommitSink(out).writeBatch(epoch, 0L)
     epoch.storageLevel shouldBe StorageLevel.NONE
+  }
+
+  it should "leave an epoch its caller cached as it was" in {
+    import spark.implicits._
+    val epoch = Seq(Ev(0, ts(1), 1, "click", 1.0, "{}")).toDF().persist()
+    new Sinks.TwoPhaseCommitSink(tmp()).writeBatch(epoch, 0L)
+    epoch.storageLevel shouldBe StorageLevel.MEMORY_AND_DISK
+    epoch.unpersist()
   }
 
   behavior of "InDataOffsetSink"
@@ -473,12 +465,11 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     val src = tmp(); val out = tmp() + "/table"; val cp = tmp()
     (0L until 40L).map(i => Ev(i, ts(i.toInt + 1), 1, "click", 1.0, "x" * 20))
       .toDF().write.mode("overwrite").parquet(src)
-    Sinks.multiFileBatchingSink(
-      EventSource.fileStream(spark, src, maxFilesPerTrigger = 8),
-      out, cp,
+    Sinks.multiFileBatchingSink(out,
       MultiFileCommit.Total(ReachedAnyOf(maxRecords = Some(8L))),
       jitter = Some((0.3, 42L)))
-      .start().awaitTermination()
+      .attach(EventSource.fileStream(spark, src, maxFilesPerTrigger = 8), cp)
+      .awaitTermination()
     val all = spark.read.parquet(s"$out/epoch_0")
     all.count() shouldBe 40
     val perCommit = all.groupBy(col("commit")).count()
@@ -514,11 +505,10 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     // reset — overshoot never carries into the next batch)
     (0L until 6L).map(i => Ev(i, ts(10 * i.toInt + 1), 1, "click", 1.0, "x" * 100))
       .toDF().write.mode("overwrite").parquet(src)
-    Sinks.multiFileBatchingSink(
-      EventSource.fileStream(spark, src, maxFilesPerTrigger = 8),
-      out, cp,
+    Sinks.multiFileBatchingSink(out,
       MultiFileCommit.Total(ReachedAnyOf(maxBytes = Some(300L))))
-      .start().awaitTermination()
+      .attach(EventSource.fileStream(spark, src, maxFilesPerTrigger = 8), cp)
+      .awaitTermination()
     val all = spark.read.parquet(s"$out/epoch_0")
     all.count() shouldBe 6
     all.groupBy("commit").count().collect()
@@ -536,11 +526,10 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
       }
     }
     // fresh checkpoint replays epoch 0: the published epoch must not change
-    Sinks.multiFileBatchingSink(
-      EventSource.fileStream(spark, src, maxFilesPerTrigger = 8),
-      out, tmp(),
+    Sinks.multiFileBatchingSink(out,
       MultiFileCommit.Total(ReachedAnyOf(maxBytes = Some(300L))))
-      .start().awaitTermination()
+      .attach(EventSource.fileStream(spark, src, maxFilesPerTrigger = 8), tmp())
+      .awaitTermination()
     spark.read.parquet(s"$out/epoch_0").count() shouldBe 6
   }
 
@@ -553,11 +542,10 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     val rows = (0L until 6L).map(i => Ev(i, ts(10 * i.toInt + 1), 1, "click", 1.0, "x" * 100)) ++
       (6L until 10L).map(i => Ev(i, ts(10 * i.toInt + 1), 2, "view", 1.0, "x" * 100))
     rows.toDF().write.mode("overwrite").parquet(src)
-    Sinks.multiFileBatchingSink(
-      EventSource.fileStream(spark, src, maxFilesPerTrigger = 8),
-      out, cp,
+    Sinks.multiFileBatchingSink(out,
       MultiFileCommit.Total(ReachedAnyOf(maxRecords = Some(3L))))
-      .start().awaitTermination()
+      .attach(EventSource.fileStream(spark, src, maxFilesPerTrigger = 8), cp)
+      .awaitTermination()
     val all = spark.read.parquet(s"$out/epoch_0")
     // click: 6 records → commits 0,1 of 3 each; view: 4 records → 3 + 1,
     // numbering restarting at 0 for the second group
@@ -2332,5 +2320,67 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     spark.table("attrib_win").collect()
       .map(r => (r.getLong(1), r.getString(2))).toSet shouldBe
       Set((1L, "click"), (2L, "none"))
+  }
+
+  behavior of "EpochSink"
+
+  it should "be the only foreachBatch and one of three checkpointed writers in src/main" in {
+    val root = new java.io.File("src/main/scala")
+    withClue(s"run from the repository root (${root.getAbsolutePath}): ") {
+      root.isDirectory shouldBe true
+    }
+    def sources(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq.flatMap { f =>
+      if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+    val text = sources(root).map { f =>
+      val s = scala.io.Source.fromFile(f, "UTF-8")
+      try f.getName -> s.mkString finally s.close()
+    }
+    def count(needle: String): Map[String, Int] = text
+      .map { case (f, src) => f -> java.util.regex.Pattern.quote(needle).r.findAllIn(src).size }
+      .filter(_._2 > 0).toMap
+    count("foreachBatch").keySet shouldBe Set("EpochSink.scala")
+    count(".foreachBatch(") shouldBe Map("EpochSink.scala" -> 1)
+    // EpochSink.attach, Sinks.recordBatchingSink, GraftLoader's quarantine query
+    count(""".option("checkpointLocation"""") shouldBe
+      Map("EpochSink.scala" -> 1, "Sinks.scala" -> 1, "GraftLoader.scala" -> 1)
+  }
+
+  /** Entries in the session's cache registry: persisted and not released. */
+  private def cachedEntries(): Boolean =
+    !spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager.isEmpty
+
+  behavior of "VectorStoreLoader"
+
+  it should "leave no epoch cached when its write fails" in {
+    import spark.implicits._
+    val src = tmp(); val table = tmp(); val dlq = tmp(); val cp = tmp()
+    Seq((1L, Array.fill(4)(0.5f))).toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(src)
+    // a regular file where the table's data directory must go
+    new java.io.File(table, "data").createNewFile() shouldBe true
+    spark.catalog.clearCache()
+    val q = VectorStoreLoader.attach(
+      spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
+      Array.empty[Double], Array.empty[Double], 0, table, dlq, cp)
+    an[Exception] should be thrownBy q.awaitTermination()
+    cachedEntries() shouldBe false
+  }
+
+  behavior of "StandingQueryLoader"
+
+  it should "leave no epoch cached when its write fails" in {
+    import spark.implicits._
+    val src = tmp(); val clean = tmp(); val quar = tmp(); val cp = tmp()
+    Seq((1L, "alpha beta"), (2L, "gamma")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(src)
+    // a regular file where the quarantine table's data directory must go
+    new java.io.File(quar, "data").createNewFile() shouldBe true
+    spark.catalog.clearCache()
+    val q = StandingQueryLoader.attach(
+      spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
+      Map(1L -> Seq("alpha")), Map("alpha" -> 1L), 2L, 1.5, 0.0, clean, quar, cp)
+    an[Exception] should be thrownBy q.awaitTermination()
+    cachedEntries() shouldBe false
   }
 }
