@@ -9,8 +9,8 @@ import graft.util.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
 
 /** Session factory with graft's recommended configuration: UTC session
   * time, AQE with skew handling, shuffle parallelism sized to the
-  * environment, and all graft extensions (native functions + planner
-  * strategy) installed.
+  * environment, all graft extensions (native functions + planner
+  * strategy) installed, and generated code shared across sessions.
   *
   * At cluster scale the same settings apply — only `master` and the
   * shuffle-partition count change (rule of thumb: 2–3× total cores, or
@@ -51,6 +51,22 @@ object GraftSession extends Logging {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")
+      // Generated code compiles once per JVM, not once per session.
+      // Spark caches compiled classes by (context class loader, source),
+      // and artifact isolation gives every session its own class loader:
+      // each streaming query's cloned session and each newSession() then
+      // recompiles byte-identical code (38–44 Janino compiles per six-sink
+      // drain pass, ~100 per 4-query fresh-session pass). graft adds no
+      // session artifacts (no addArtifact, no ADD JAR), so sessions can
+      // share the application's class loader.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // Static: sizes the JVM-wide compiled-class LRU (Spark's default is
+      // 100). A 4-query pass compiles about 100 distinct classes, so 100
+      // thrashes; the 223-query registry compiles 3,437 distinct classes
+      // at sf0.001, which fit here. Memory retained, measured at the end
+      // of that registry pass: Metaspace 216 MB in use, against 200 MB
+      // with Spark's defaults (which compiled 5,800 classes).
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
 
   /** Build the session. The builder's extension carries graft's planner
     * strategy and SQL functions; registering the functions at runtime as

@@ -103,15 +103,24 @@ object Sinks {
     val records = maxRecords.map(r => (r, spread(r)))
     val seed = jitter.fold(0L)(_._2)
     EpochSink.publishOnce(outDir, "epoch_") { (batch, staging) =>
-      val line = concat_ws(",", batch.columns.map(c => col(c).cast("string")): _*)
-      val sized = batch
-        .withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
-        .withColumn("_bytes", (octet_length(line) + lit(1)).cast("long"))
-        .repartition(col("event_type"))
+      val dated = batch.withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
+      // the encoded size is read only by a byte budget
+      val withBytes =
+        if (maxBytes.isEmpty) dated
+        else {
+          val line = concat_ws(",", batch.columns.map(c => col(c).cast("string")): _*)
+          dated.withColumn("_bytes", (octet_length(line) + lit(1)).cast("long"))
+        }
+      // An explicit partition count: AQE coalesces a count-less
+      // repartition of a few thousand rows into one task, which then
+      // sorts, folds and writes the whole epoch alone.
+      val writers = batch.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      val sized = withBytes
+        .repartition(writers, col("event_type"))
         .sortWithinPartitions(col("event_type"), col("event_id"))
       val outSchema = sized.schema.add("commit", org.apache.spark.sql.types.LongType)
       val groupIdx = sized.schema.fieldIndex("event_type")
-      val bytesIdx = sized.schema.fieldIndex("_bytes")
+      val bytesIdx = if (maxBytes.isEmpty) -1 else sized.schema.fieldIndex("_bytes")
       val withCommit = sized.mapPartitions { it =>
         // reset-per-commit fold; state restarts on group change (a
         // partition may hold several hash-co-located groups). Budgets
@@ -126,7 +135,7 @@ object Sinks {
             group = g
             fold.reset(g.##.toLong)
           }
-          Row.fromSeq(row.toSeq :+ fold.next(row.getLong(bytesIdx)))
+          Row.fromSeq(row.toSeq :+ fold.next(if (bytesIdx < 0) 0L else row.getLong(bytesIdx)))
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))
         .drop("_bytes")

@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -17,8 +18,8 @@ import graft.plans.PlanLint
 /** The dev tool, `runMain graft.tools.Dev <mode> [name...]`, on
   * [[session]]:
   *  - `profile <query...>`: the cold wall, then one timed run's Spark
-  *    jobs, stages, tasks and summed task time (compute vs per-job
-  *    overhead) and its 8 longest stages;
+  *    jobs, stages, tasks, summed task time (compute vs per-job
+  *    overhead) and Janino compiles, and its 8 longest stages;
   *  - `build <build...>`: evict and rebuild a [[SparkEntry.SharedBuilds]]
   *    entry, 1 warm and 3 timed runs, with the last run's 10 longest stages;
   *  - `plan <query|build:ir_truth|build:ir_truth_shingle...>`: the
@@ -96,10 +97,11 @@ object Dev {
           val fn = queries(name)
           var rows = 0L
           val cold = profile.measure { rows = fn(spark, sfDir).count() } // also fills session memos
-          println(f"COLDRUN $name%-22s wall=$cold%7.3f s rows=$rows")
+          println(f"COLDRUN $name%-22s wall=$cold%7.3f s rows=$rows compiles=${profile.compiles.get}")
           val wall = profile.measure(fn(spark, sfDir).count())
           println(f"JOBPROFILE $name%-22s wall=$wall%7.3f s jobs=${profile.jobs.get}%3d " +
-            f"stages=${profile.stages.get}%4d tasks=${profile.tasks.get}%5d taskTime=${profile.taskMs.get / 1e3}%8.2f s")
+            f"stages=${profile.stages.get}%4d tasks=${profile.tasks.get}%5d taskTime=${profile.taskMs.get / 1e3}%8.2f s " +
+            f"compiles=${profile.compiles.get}%4d")
           profile.printStages(8)
         }
         0
@@ -163,10 +165,11 @@ object Dev {
     } finally spark.sparkContext.removeSparkListener(profile)
   }
 
-  /** Counts the Spark jobs, stages and tasks, executor task time and
-    * per-stage walls of the actions run inside [[measure]]. */
+  /** Counts the Spark jobs, stages and tasks, executor task time,
+    * per-stage walls and Janino compiles (JVM-wide, so a concurrent
+    * action's compiles count too) of the actions run inside [[measure]]. */
   private final class Profile(spark: SparkSession) extends SparkListener {
-    val jobs, stages, tasks, taskMs = new AtomicLong
+    val jobs, stages, tasks, taskMs, compiles = new AtomicLong
     private val stageRows = new ConcurrentLinkedQueue[(Long, Int, String)]
 
     override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -186,9 +189,11 @@ object Dev {
       GraftShim.drainListenerBus(spark.sparkContext)
       Seq(jobs, stages, tasks, taskMs).foreach(_.set(0))
       stageRows.clear()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       body
       val wall = (System.nanoTime() - t0) / 1e9
+      compiles.set(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled)
       GraftShim.drainListenerBus(spark.sparkContext)
       wall
     }

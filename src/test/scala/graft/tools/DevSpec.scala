@@ -51,10 +51,14 @@ class DevSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
   it should "profile a query's jobs, stages and tasks" in {
     val (rc, out, _) = dev("profile", "q1_pricing")
     rc shouldBe 0
-    out should include ("COLDRUN q1_pricing")
+    out should include regex """COLDRUN q1_pricing\s+wall=.* compiles=\d+"""
     val jobs = """JOBPROFILE q1_pricing\s+wall=\s*[\d.]+ s jobs=\s*(\d+) stages=""".r
       .findFirstMatchIn(out).map(_.group(1).toInt)
     withClue(out) { jobs.exists(_ >= 1) shouldBe true }
+    // the timed run repeats the cold run's plans in the same session
+    val compiles = """JOBPROFILE q1_pricing .* compiles=\s*(\d+)""".r
+      .findFirstMatchIn(out).map(_.group(1).toInt)
+    withClue(out) { compiles shouldBe Some(0) }
   }
 
   it should "evict and rebuild a shared build" in {
