@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.util.Listing
 
 /** Loaders for the driver-generated testdata tables (see TESTDATA.md).
   *
@@ -13,8 +16,46 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Reads `$sfDir/$name.parquet` with its schema inferred once per JVM.
+    * A schema-less parquet read runs one Spark job to read a footer (Spark
+    * infers through a parallel job even for a single file), so every read
+    * in a fresh session paid one: 7 of the 34 jobs of a perfbench
+    * `query_mix` pass.
+    *
+    * The cache is keyed by the qualified path and the session's confs
+    * that inference reads (`inferTimestampNTZ` decides whether a
+    * TIMESTAMP column infers as NTZ; [[events]]' child session reads
+    * nanos as long). Each entry stores the path's [[Listing.fingerprint]]
+    * next to the schema, so a rewritten table replaces its entry. A miss
+    * infers exactly as a plain read does, so an absent path fails with a
+    * plain read's error; a failed inference is not cached. A path that
+    * lists a directory (partitions, nesting) is read plainly: a listing of
+    * its first level can miss a rewrite below it. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val listing = Listing(spark, path)
+    if (listing.entries.exists(_.isDirectory)) spark.read.parquet(path)
+    else {
+      val key = (listing.path.toString, spark.conf.getAll.filter { case (k, _) =>
+        InferenceConfs.exists(k.startsWith) }.toSeq.sorted)
+      val fp = listing.fingerprint
+      val schema = schemas.get(key) match {
+        case (`fp`, cached) => cached
+        case _ =>
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(key, (fp, inferred))
+          inferred
+      }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  // conf prefixes parquet schema inference reads
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.", "spark.sql.legacy.parquet.", "spark.sql.files.ignoreCorruptFiles")
+  // (qualified path, inference confs) -> (listing fingerprint, schema)
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, String)]), (String, StructType)]()
 
   /** Widen a NARROW scan ahead of kernel-heavy record-local work (the
     * [[graft.operators.Similarity]] balanceNarrow discipline, shared —

@@ -277,14 +277,12 @@ object GraftLoader {
                 // contract is sizing, not semantics) — count the raw source
                 // rather than executing the full committed-join pipeline once
                 // per rewind restart: for files that is a metadata-only
-                // parquet footer count; for kafka one batch count of the
-                // topic (no footer shortcut exists — a restart-path cost).
+                // parquet footer count (read in the event schema, so no
+                // schema-inference job either); for kafka one batch count of
+                // the topic (no footer shortcut exists — a restart-path cost).
                 // The unfiltered count upper-bounds the committed count, so
                 // chunks err wider, never narrower than optimal.
-                val sizingRows = src2 match {
-                  case FileSource(srcDir, _) => spark.read.parquet(srcDir).count()
-                  case _ => rawSource().count()
-                }
+                val sizingRows = rawSource().count()
                 graft.plans.ChunkedPrefix.rowNumber(upToCommitted,
                     keys = Seq("event_type"), order = Seq(col("event_id")),
                     chunk = graft.plans.ChunkedPrefix.idChunks(col("event_id"),

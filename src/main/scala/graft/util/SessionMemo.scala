@@ -22,11 +22,8 @@ import org.apache.spark.sql.SparkSession
   *    baked into the key), so a refreshed corpus under the same dir
   *    REPLACES the stale entry instead of stranding it for the session
   *    lifetime — the bounded-cache behavior a long-lived session needs;
-  *  - the fingerprint is the FULL listing string (name:len:mtime per
-  *    file, sorted), never a hashCode of it — two corpus states
-  *    colliding on a 32-bit hash would silently reuse a stale artifact,
-  *    the exact hazard the fingerprint exists to close (driver-side and
-  *    tiny, so the long key costs nothing);
+  *  - the fingerprint is the FULL listing string of
+  *    `$dir/$table.parquet` ([[Listing.fingerprint]]), never a hash;
   *  - a superseded value is NOT released: a consumer on another thread
   *    may still be reading its localCheckpoint frame, and local
   *    checkpoints have no lineage to recompute from. The ContextCleaner
@@ -42,10 +39,6 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] final class SessionMemo[V](table: String) {
   private val keyed = new SessionMemo.Keyed[String, V](table)
-
-  /** Listing fingerprint of `$dir/$table.parquet` ("" when absent). */
-  def fingerprint(s: SparkSession, dir: String): String =
-    keyed.fingerprint(s, dir)
 
   /** Cached value for `dir` if its fingerprint still matches, else
     * `compute` (stored with the fresh fingerprint). */
@@ -66,15 +59,6 @@ private[graft] object SessionMemo {
       new java.util.WeakHashMap[SparkSession,
         scala.collection.mutable.Map[K, (String, Promise[V])]]())
 
-    def fingerprint(s: SparkSession, dir: String): String = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) ""
-      else fs.listStatus(p).map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString(",")
-    }
-
     private def perSession(s: SparkSession) = cache.synchronized {
       var m = cache.get(s)
       if (m == null) {
@@ -87,7 +71,7 @@ private[graft] object SessionMemo {
     @annotation.tailrec
     def getOrCompute(s: SparkSession, dir: String, key: K)(compute: => V): V = {
       val m = perSession(s)
-      val fp = fingerprint(s, dir)
+      val fp = Listing(s, s"$dir/$table.parquet").fingerprint
       val (slot, owner) = m.synchronized {
         m.get(key) match {
           case Some((cachedFp, p)) if cachedFp == fp => (p, false)
