@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.util.Listing
@@ -28,9 +28,13 @@ object Tables {
     * nanos as long). Each entry stores the path's [[Listing.fingerprint]]
     * next to the schema, so a rewritten table replaces its entry. A miss
     * infers exactly as a plain read does, so an absent path fails with a
-    * plain read's error; a failed inference is not cached. A path that
-    * lists a directory (partitions, nesting) is read plainly: a listing of
-    * its first level can miss a rewrite below it. */
+    * plain read's error. Of the failed inferences only the rejection of a
+    * TIMESTAMP(NANOS) footer (`PARQUET_TYPE_ILLEGAL`) is remembered and
+    * rethrown, so [[events]] goes straight to its nanosAsLong session
+    * instead of re-running a failing footer job on every call; any other
+    * failure (a transient IO error) is not cached. A path that lists a
+    * directory (partitions, nesting) is read plainly: a listing of its
+    * first level can miss a rewrite below it. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val listing = Listing(spark, path)
@@ -42,20 +46,25 @@ object Tables {
       val schema = schemas.get(key) match {
         case (`fp`, cached) => cached
         case _ =>
-          val inferred = spark.read.parquet(path).schema
+          val inferred =
+            try Right(spark.read.parquet(path).schema)
+            catch {
+              case e: AnalysisException if e.getCondition == "PARQUET_TYPE_ILLEGAL" => Left(e)
+            }
           schemas.put(key, (fp, inferred))
           inferred
       }
-      spark.read.schema(schema).parquet(path)
+      schema.fold(e => throw e, spark.read.schema(_).parquet(path))
     }
   }
 
   // conf prefixes parquet schema inference reads
   private val InferenceConfs = Seq(
     "spark.sql.parquet.", "spark.sql.legacy.parquet.", "spark.sql.files.ignoreCorruptFiles")
-  // (qualified path, inference confs) -> (listing fingerprint, schema)
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, String)]), (String, StructType)]()
+  // (qualified path, inference confs) -> (listing fingerprint, schema or
+  // the footer's TIMESTAMP(NANOS) rejection)
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[(String, String)]), (String, Either[AnalysisException, StructType])]()
 
   /** Widen a NARROW scan ahead of kernel-heavy record-local work (the
     * [[graft.operators.Similarity]] balanceNarrow discipline, shared —

@@ -146,22 +146,18 @@ object MultiFileCommit {
       seed: Long) extends Serializable {
     require(bytes.nonEmpty || records.nonEmpty, "FuzzyTotalFold needs a budget distribution")
 
-    private var rand = new scala.util.Random(seed)
+    // the budget is FuzzyReachedAnyOf's draw (bytes, then records,
+    // re-drawn only on commit) over this group's totals
+    private var budget: FuzzyReachedAnyOf = _
     private var commit = 0L
     private var accBytes = 0L
     private var accRecords = 0L
-    private var curBytes: Option[Long] = None
-    private var curRecords: Option[Long] = None
-
-    private def draw(p: (Long, Long)): Long =
-      math.max(1L, math.round(p._1 + rand.nextGaussian() * p._2))
-    private def roll(): Unit = { curBytes = bytes.map(draw); curRecords = records.map(draw) }
+    reset(0L)
 
     /** Restart numbering and re-seed for a new partition group. */
     def reset(groupSeed: Long): Unit = {
-      rand = new scala.util.Random(seed ^ groupSeed)
+      budget = new FuzzyReachedAnyOf(None, bytes, records, 1L, seed ^ groupSeed)
       commit = 0L; accBytes = 0L; accRecords = 0L
-      roll()
     }
 
     /** Commit index for the next record of `bytes` encoded bytes. */
@@ -169,9 +165,8 @@ object MultiFileCommit {
       accBytes += nBytes
       accRecords += 1
       val c = commit
-      if (curBytes.exists(accBytes >= _) || curRecords.exists(accRecords >= _)) {
+      if (budget.shouldCommit(Duration.ZERO, accBytes, accRecords)) {
         commit += 1L; accBytes = 0L; accRecords = 0L
-        roll()
       }
       c
     }

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.plans.GraftFunctions
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupState
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming transforms (SURVEY.md §2h): watermarked windowed aggregation,
   * in-watermark dedup (the RewindingPartitionGroupSinker replay window),
@@ -18,6 +17,54 @@ object Transforms {
     * applied to N local copies). */
   private def us(t: java.sql.Timestamp): Long =
     t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
+
+  /** The keyed event-time fold every stateful operator below runs
+    * through: SURVEY §1's per-partition sinkers and hand-held keyed state
+    * as one `flatMapGroupsWithState` under the watermark-plus-timeout
+    * model of Structured Streaming (Armbrust et al., SIGMOD 2018). An
+    * operator states its rows, key, fold order, `step` and `deadline`;
+    * the policy they share is decided here once:
+    *
+    *  - eviction: with a `watermark` (the rows carry the `ts` event-time
+    *    column), rows later than the watermark are dropped before the
+    *    step, each key's timeout is armed at max(deadline, watermark + 1)
+    *    after every call (event-time timeouts must lie past the current
+    *    watermark), and a timed-out key goes to `onTimeout` — by default
+    *    removed with nothing emitted. With `None` there is no watermark
+    *    and no timeout: every delivered row is folded, however late, and
+    *    state never expires;
+    *  - fold order: a key's rows of one microbatch reach `step` sorted by
+    *    `order`, so a replayed epoch emits identical rows — the
+    *    determinism contract every graft sink assumes;
+    *  - state: `step` gets the key's state (None for a new key), its rows
+    *    and the current watermark (ms; Long.MinValue without eviction),
+    *    and returns the next state — None removes the key — with the rows
+    *    to emit (append output). */
+  private def keyedFold[R, K: Encoder, T: Ordering, S: Encoder, O: Encoder](
+      rows: Dataset[R], watermark: Option[String])(key: R => K, order: R => T)(
+      step: (K, Option[S], Seq[R], Long) => (Option[S], Seq[O]))(
+      deadline: (K, S) => Long = (_: K, _: S) => Long.MaxValue,
+      onTimeout: (K, S, Long) => (Option[S], Seq[O]) = (_: K, _: S, _: Long) => (None, Nil))
+      : Dataset[O] = {
+    val evict = watermark.isDefined
+    watermark.fold(rows)(rows.withWatermark("ts", _))
+      .groupByKey(key)
+      .flatMapGroupsWithState[S, O](OutputMode.Append,
+        if (evict) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
+        (k: K, it: Iterator[R], state: GroupState[S]) =>
+          val wm = if (evict) state.getCurrentWatermarkMs else Long.MinValue
+          val (next, out) =
+            if (state.hasTimedOut) onTimeout(k, state.get, wm)
+            else step(k, state.getOption, it.toSeq.sortBy(order), wm)
+          next match {
+            case Some(st) =>
+              state.update(st)
+              if (evict) state.setTimeoutTimestamp(math.max(deadline(k, st), wm + 1))
+            case None => if (state.exists) state.remove()
+          }
+          out.iterator
+      }
+  }
 
   /** Watermarked tumbling-window aggregation per event type. */
   def windowedAggregation(
@@ -144,7 +191,6 @@ object Transforms {
   def sessionizeOnClose(spark: SparkSession, events: DataFrame,
       watermark: String = "30 minutes", gapMs: Long = 1800000L): Dataset[ClosedSession] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
     // session_end = last event + gap: the session_window BOUNDARY, so the
     // emitted rows agree column-for-column with the batch twin
     // [[sessionize]] (which selects session_window.end) — a consumer
@@ -158,35 +204,22 @@ object Transforms {
             cur.n + nxt.n, cur.value + nxt.value) :: rest
         case (acc, nxt) => nxt :: acc
       }.reverse
-    def arm(state: GroupState[OpenSessions], open: List[OpenSession]): Unit =
-      if (open.isEmpty) state.remove()
-      else {
-        state.update(OpenSessions(open))
-        // earliest close time, kept ahead of the current watermark
-        state.setTimeoutTimestamp(
-          math.max(open.map(_.end + gapMs).min, state.getCurrentWatermarkMs + 1))
-      }
-    events
-      .withWatermark("ts", watermark)
-      // the watermarked ts column itself must reach the stateful operator
-      // (event-time timeout is refused if the projection drops it)
-      .selectExpr("user_id", "ts", "value")
-      .as[(Long, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[OpenSessions, ClosedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rowsIt: Iterator[(Long, java.sql.Timestamp, Double)],
-            state: GroupState[OpenSessions]) =>
-          val wm = state.getCurrentWatermarkMs
-          val existing = state.getOption.map(_.sessions).getOrElse(Nil)
-          val incoming = rowsIt.map(e => OpenSession(e._2.getTime, e._2.getTime, 1L, e._3)).toList
-          val merged = coalesce(existing ++ incoming)
-          // closed = watermark has passed end + gap: no admissible event
-          // (≥ watermark) can extend or bridge them anymore
-          val (done, open) = merged.partition(_.end + gapMs <= wm)
-          arm(state, open)
-          done.sortBy(_.start).map(s => close(user, s)).iterator
-      }
+    def fold(user: Long, prev: Option[OpenSessions], rows: Seq[(Long, java.sql.Timestamp, Double)],
+        wm: Long): (Option[OpenSessions], Seq[ClosedSession]) = {
+      val merged = coalesce(prev.fold(List.empty[OpenSession])(_.sessions) ++
+        rows.map(e => OpenSession(e._2.getTime, e._2.getTime, 1L, e._3)))
+      // closed = watermark has passed end + gap: no admissible event
+      // (≥ watermark) can extend or bridge them anymore
+      val (done, open) = merged.partition(_.end + gapMs <= wm)
+      (if (open.isEmpty) None else Some(OpenSessions(open)),
+        done.sortBy(_.start).map(close(user, _)))
+    }
+    keyedFold(events.selectExpr("user_id", "ts", "value").as[(Long, java.sql.Timestamp, Double)],
+        Some(watermark))(_._1, r => us(r._2))(fold)(
+      // earliest close time
+      (_, st) => st.sessions.map(_.end + gapMs).min,
+      // a timeout emits what the watermark closed and re-arms the rest
+      (user, st, wm) => fold(user, Some(st), Nil, wm))
   }
 
   case class UserTotal(user_id: Long, n_events: Long, total_value: Double)
@@ -212,13 +245,6 @@ object Transforms {
       }
   }
 
-  /** [[runningUserTotals]] with bounded state: a user idle past
-    * `idleMs` of EVENT time (watermark-driven, deterministic under
-    * replay — processing-time TTLs are not) emits a final total and
-    * leaves the store. At 100 TB the state then tracks ACTIVE users in
-    * the idle horizon, not every user ever seen; a returning user simply
-    * restarts from zero (downstream sums partials, the same contract as
-    * the reference's periodic sinker flushes). */
   case class UserTotalTtlState(total: UserTotal, lastSeenMs: Long)
 
   /** Online model inference on a stream: assign each incoming embedding
@@ -759,33 +785,26 @@ object Transforms {
   def anomalyAlerts(spark: SparkSession, events: DataFrame,
       minN: Long = 30L, zThresh: Double = 4.0): Dataset[AnomalyAlert] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    events
-      .selectExpr("event_type", "event_id", "value")
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[TypeMoments, AnomalyAlert](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (etype: String, rows: Iterator[(String, Long, Double)],
-            state: GroupState[TypeMoments]) =>
-          var st = state.getOption.getOrElse(TypeMoments(0L, 0.0, 0.0))
-          val alerts = Seq.newBuilder[AnomalyAlert]
-          rows.toSeq.sortBy(_._2).foreach { case (_, id, v) =>
-            if (st.n >= minN) {
-              val sd = math.sqrt(st.m2 / st.n)
-              if (sd > 0) {
-                val z = (v - st.mean) / sd
-                if (math.abs(z) > zThresh) alerts += AnomalyAlert(etype, id, v, z, st.n)
-              }
+    keyedFold(events.selectExpr("event_type", "event_id", "value").as[(String, Long, Double)],
+        None)(_._1, _._2) {
+      (etype: String, prev: Option[TypeMoments], rows: Seq[(String, Long, Double)], _: Long) =>
+        var st = prev.getOrElse(TypeMoments(0L, 0.0, 0.0))
+        val alerts = Seq.newBuilder[AnomalyAlert]
+        rows.foreach { case (_, id, v) =>
+          if (st.n >= minN) {
+            val sd = math.sqrt(st.m2 / st.n)
+            if (sd > 0) {
+              val z = (v - st.mean) / sd
+              if (math.abs(z) > zThresh) alerts += AnomalyAlert(etype, id, v, z, st.n)
             }
-            val n1 = st.n + 1
-            val delta = v - st.mean
-            val mean1 = st.mean + delta / n1
-            st = TypeMoments(n1, mean1, st.m2 + delta * (v - mean1))
           }
-          state.update(st)
-          alerts.result().iterator
-      }
+          val n1 = st.n + 1
+          val delta = v - st.mean
+          val mean1 = st.mean + delta / n1
+          st = TypeMoments(n1, mean1, st.m2 + delta * (v - mean1))
+        }
+        (Some(st), alerts.result())
+    }()
   }
 
   case class BotState(lastUs: Long, m: Long, mean: Double, m2: Double,
@@ -802,14 +821,16 @@ object Transforms {
     * alert per user (the `alerted` latch): a monitor pages once, the
     * batch census is where the full ranking lives.
     *
-    * Within a microbatch events fold in (event-time, event_id) order,
-    * so on in-order delivery the gap sequence — and therefore the alert
-    * point — is exactly the batch operator's (spec-pinned on a
-    * metronome/bursty fixture). A cross-batch arrival BEHIND the
-    * max-seen event time is not a forward step of the arrival process
-    * (its "gap" would be negative); it refreshes the TTL but is skipped
-    * by the gap statistics — the same first-delivery-wins realism as
-    * [[throttledEvents]].
+    * Within a microbatch events fold in (µs event time, event_id)
+    * order and gaps are integer micros, as in the batch operator, so on
+    * in-order delivery the gap sequence — and therefore the alert point
+    * — is exactly the batch operator's (spec-pinned on a metronome/bursty
+    * fixture and on a sub-millisecond metronome). A cross-batch arrival
+    * BEHIND the max-seen event time is not a forward step of the arrival
+    * process (its "gap" would be negative); it is skipped by the gap
+    * statistics — the same first-delivery-wins realism as
+    * [[throttledEvents]] — and the idle deadline runs from the max-seen
+    * event time.
     *
     * Scale: state is five numbers per ACTIVE user, evicted by
     * event-time TTL (the [[runningUserTotalsWithTtl]] discipline) —
@@ -820,51 +841,33 @@ object Transforms {
       minGaps: Long = 9L, cvThresh: Double = 0.3,
       watermark: String = "30 minutes", idleMs: Long = 3600000L): Dataset[BotAlert] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    events
-      .withWatermark("ts", watermark)
-      .selectExpr("user_id", "ts", "event_id")
-      .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[BotState, BotAlert](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long)],
-            state: GroupState[BotState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption
-              .getOrElse(BotState(Long.MinValue, 0L, 0.0, 0.0, alerted = false))
-            val alerts = Seq.newBuilder[BotAlert]
-            val batch = rows.toSeq.sortBy(r => (r._2.getTime, r._3))
-            batch.foreach { case (_, ts, _) =>
-              val us = ts.getTime * 1000L
-              if (st.lastUs == Long.MinValue) st = st.copy(lastUs = us)
-              else if (us >= st.lastUs) {
-                val g = (us - st.lastUs).toDouble
-                val m1 = st.m + 1
-                val d = g - st.mean
-                val mean1 = st.mean + d / m1
-                st = BotState(us, m1, mean1, st.m2 + d * (g - mean1), st.alerted)
-                if (!st.alerted && st.m >= minGaps && st.mean > 0) {
-                  val cv = math.sqrt(st.m2 / st.m) / st.mean
-                  if (cv < cvThresh) {
-                    alerts += BotAlert(user, st.m,
-                      math.floor(st.mean / 1e6 * 1e6 + 0.5) / 1e6,
-                      math.floor(cv * 1e6 + 0.5) / 1e6)
-                    st = st.copy(alerted = true)
-                  }
-                }
-              } // else: behind max-seen event time — TTL refresh only
+    keyedFold(events.selectExpr("user_id", "ts", "event_id").as[(Long, java.sql.Timestamp, Long)],
+        Some(watermark))(_._1, r => (us(r._2), r._3)) {
+      (user: Long, prev: Option[BotState], rows: Seq[(Long, java.sql.Timestamp, Long)], _: Long) =>
+        var st = prev.getOrElse(BotState(Long.MinValue, 0L, 0.0, 0.0, alerted = false))
+        val alerts = Seq.newBuilder[BotAlert]
+        rows.foreach { case (_, ts, _) =>
+          val t = us(ts)
+          if (st.lastUs == Long.MinValue) st = st.copy(lastUs = t)
+          else if (t >= st.lastUs) {
+            val g = (t - st.lastUs).toDouble
+            val m1 = st.m + 1
+            val d = g - st.mean
+            val mean1 = st.mean + d / m1
+            st = BotState(t, m1, mean1, st.m2 + d * (g - mean1), st.alerted)
+            if (!st.alerted && st.m >= minGaps && st.mean > 0) {
+              val cv = math.sqrt(st.m2 / st.m) / st.mean
+              if (cv < cvThresh) {
+                alerts += BotAlert(user, st.m,
+                  math.floor(st.mean / 1e6 * 1e6 + 0.5) / 1e6,
+                  math.floor(cv * 1e6 + 0.5) / 1e6)
+                st = st.copy(alerted = true)
+              }
             }
-            state.update(st)
-            val lastSeenMs = math.max(
-              if (st.lastUs == Long.MinValue) Long.MinValue else st.lastUs / 1000L,
-              batch.map(_._2.getTime).max)
-            state.setTimeoutTimestamp(math.max(
-              lastSeenMs + idleMs, state.getCurrentWatermarkMs + 1))
-            alerts.result().iterator
-          }
-      }
+          } // else: behind max-seen event time — no forward step
+        }
+        (Some(st), alerts.result())
+    }((_, st) => Math.floorDiv(st.lastUs, 1000L) + idleMs)
   }
 
   /** Historical-corpus dedup gate — the 100 TB form of "drop anything
@@ -1410,7 +1413,7 @@ object Transforms {
   private def sigPresent: org.apache.spark.sql.Column =
     element_at(col(SigCol), 1).isNotNull
 
-  case class PathTail(t1: Option[String], t2: Option[String])
+  case class PathTail(t1: Option[String], t2: Option[String], lastSeenMs: Long)
   case class PathHit(user_id: Long, path: String)
 
   /** Online 3-step path emitter — the streaming twin of the batch
@@ -1427,80 +1430,36 @@ object Transforms {
     * out-of-order arrivals splice in delivery order.
     *
     * Scale: state is two short strings per active user — the same O(users)
-    * class as the funnel tracker; [[pathTriplesWithTtl]] is the
-    * bounded-state variant for unbounded user spaces (idle tails evicted
-    * — a deliberate semantic choice, see its doc). */
-  def pathTriples(spark: SparkSession, events: DataFrame): Dataset[PathHit] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    events
-      .selectExpr("user_id", "ts", "event_type", "event_id")
-      .as[(Long, java.sql.Timestamp, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[PathTail, PathHit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, String, Long)],
-            state: GroupState[PathTail]) =>
-          var st = state.getOption.getOrElse(PathTail(None, None))
-          val out = Seq.newBuilder[PathHit]
-          rows.toSeq.sortBy(r => (us(r._2), r._4)).foreach { case (_, _, typ, _) =>
-            (st.t1, st.t2) match {
-              case (Some(a), Some(b)) => out += PathHit(user, s"$a>$b>$typ")
-              case _ => ()
-            }
-            st = PathTail(st.t2, Some(typ))
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  case class PathTailTtl(t1: Option[String], t2: Option[String], lastSeenMs: Long)
-
-  /** [[pathTriples]] with bounded state: a user idle past `idleMs` of
-    * EVENT time loses their two-event tail (the
-    * [[runningUserTotalsWithTtl]] discipline), so their next triple
-    * restarts from scratch. This is a SEMANTIC choice, not just an
-    * optimization — a path step spanning a month of inactivity is
-    * session noise, exactly what gap-based sessionization already
-    * drops — which is why it is a separate function rather than a
-    * default on the exact twin (whose batch-parity spec counts
-    * gap-spanning triples). Late in-watermark arrivals extend the
-    * deadline monotonically. */
-  def pathTriplesWithTtl(spark: SparkSession, events: DataFrame,
-      watermark: String = "30 minutes",
+    * class as the funnel tracker. With the default `watermark = None` it
+    * is the exact operator: every delivered event is folded and state
+    * never expires. With a watermark, a user idle past `idleMs` of EVENT
+    * time loses their two-event tail (the [[runningUserTotalsWithTtl]]
+    * discipline), so their next triple restarts from scratch. That is a
+    * SEMANTIC choice, not just an optimization — a path step spanning a
+    * month of inactivity is session noise, exactly what gap-based
+    * sessionization already drops — which is why eviction is opt-in
+    * rather than the default (the batch-parity spec counts gap-spanning
+    * triples). Late in-watermark arrivals extend the deadline
+    * monotonically. */
+  def pathTriples(spark: SparkSession, events: DataFrame,
+      watermark: Option[String] = None,
       idleMs: Long = 30L * 86400000L): Dataset[PathHit] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    events
-      .withWatermark("ts", watermark)
-      .selectExpr("user_id", "ts", "event_type", "event_id")
-      .as[(Long, java.sql.Timestamp, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[PathTailTtl, PathHit](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, String, Long)],
-            state: GroupState[PathTailTtl]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(PathTailTtl(None, None, Long.MinValue))
-            val out = Seq.newBuilder[PathHit]
-            val batch = rows.toSeq
-            batch.sortBy(r => (us(r._2), r._4)).foreach { case (_, _, typ, _) =>
-              (st.t1, st.t2) match {
-                case (Some(a), Some(b)) => out += PathHit(user, s"$a>$b>$typ")
-                case _ => ()
-              }
-              st = PathTailTtl(st.t2, Some(typ), st.lastSeenMs)
-            }
-            val next = st.copy(lastSeenMs =
-              math.max(st.lastSeenMs, batch.map(_._2.getTime).max))
-            state.update(next)
-            state.setTimeoutTimestamp(math.max(
-              next.lastSeenMs + idleMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
+    keyedFold(events.selectExpr("user_id", "ts", "event_type", "event_id")
+        .as[(Long, java.sql.Timestamp, String, Long)], watermark)(_._1, r => (us(r._2), r._4)) {
+      (user: Long, prev: Option[PathTail], rows: Seq[(Long, java.sql.Timestamp, String, Long)],
+          _: Long) =>
+        var st = prev.getOrElse(PathTail(None, None, Long.MinValue))
+        val out = Seq.newBuilder[PathHit]
+        rows.foreach { case (_, ts, typ, _) =>
+          (st.t1, st.t2) match {
+            case (Some(a), Some(b)) => out += PathHit(user, s"$a>$b>$typ")
+            case _ => ()
           }
-      }
+          st = PathTail(st.t2, Some(typ), math.max(st.lastSeenMs, ts.getTime))
+        }
+        (Some(st), out.result())
+    }((_, st) => st.lastSeenMs + idleMs)
   }
 
   case class FunnelProgress(view: Option[Long], click: Option[Long], done: Boolean)
@@ -1529,77 +1488,62 @@ object Transforms {
     * evict them and incomplete stragglers entirely). */
   def funnelConversions(spark: SparkSession, events: DataFrame): Dataset[FunnelConversion] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
     def ts(u: Long): java.sql.Timestamp = {
       val t = new java.sql.Timestamp(u / 1000L)
       t.setNanos(((u % 1000000L) * 1000L).toInt)
       t
     }
-    events
-      .selectExpr("user_id", "ts", "event_type", "event_id")
-      .as[(Long, java.sql.Timestamp, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelProgress, FunnelConversion](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, String, Long)],
-            state: GroupState[FunnelProgress]) =>
-          var st = state.getOption.getOrElse(FunnelProgress(None, None, done = false))
-          val out = Seq.newBuilder[FunnelConversion]
-          rows.toSeq.sortBy(r => (us(r._2), r._4)).foreach { case (_, t, typ, _) =>
-            val u = us(t)
-            if (!st.done) typ match {
-              case "view" if st.view.isEmpty =>
-                st = st.copy(view = Some(u))
-              case "click" if st.view.exists(_ <= u) && st.click.isEmpty =>
-                st = st.copy(click = Some(u))
-              case "purchase" if st.click.exists(_ <= u) =>
-                out += FunnelConversion(user, ts(st.view.get), ts(st.click.get),
-                  ts(u), (u - st.view.get) / 1e6)
-                st = st.copy(done = true)
-              case _ => ()
-            }
+    keyedFold(events.selectExpr("user_id", "ts", "event_type", "event_id")
+        .as[(Long, java.sql.Timestamp, String, Long)], None)(_._1, r => (us(r._2), r._4)) {
+      (user: Long, prev: Option[FunnelProgress], rows: Seq[(Long, java.sql.Timestamp, String, Long)],
+          _: Long) =>
+        var st = prev.getOrElse(FunnelProgress(None, None, done = false))
+        val out = Seq.newBuilder[FunnelConversion]
+        rows.foreach { case (_, t, typ, _) =>
+          val u = us(t)
+          if (!st.done) typ match {
+            case "view" if st.view.isEmpty =>
+              st = st.copy(view = Some(u))
+            case "click" if st.view.exists(_ <= u) && st.click.isEmpty =>
+              st = st.copy(click = Some(u))
+            case "purchase" if st.click.exists(_ <= u) =>
+              out += FunnelConversion(user, ts(st.view.get), ts(st.click.get),
+                ts(u), (u - st.view.get) / 1e6)
+              st = st.copy(done = true)
+            case _ => ()
           }
-          state.update(st)
-          out.result().iterator
-      }
+        }
+        (Some(st), out.result())
+    }()
   }
 
+  /** [[runningUserTotals]] with bounded state: a user idle past
+    * `idleMs` of EVENT time (watermark-driven, deterministic under
+    * replay — processing-time TTLs are not) emits a final total and
+    * leaves the store. At 100 TB the state then tracks ACTIVE users in
+    * the idle horizon, not every user ever seen; a returning user simply
+    * restarts from zero (downstream sums partials, the same contract as
+    * the reference's periodic sinker flushes). */
   def runningUserTotalsWithTtl(spark: SparkSession, events: DataFrame,
       watermark: String = "30 minutes", idleMs: Long = 3600000L): Dataset[UserTotal] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    events
-      .withWatermark("ts", watermark)
-      .selectExpr("user_id", "ts", "value")
-      .as[(Long, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[UserTotalTtlState, UserTotal](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Double)],
-            state: GroupState[UserTotalTtlState]) =>
-          if (state.hasTimedOut) {
-            // idle horizon passed: final emission, state evicted
-            val fin = state.get.total
-            state.remove()
-            Iterator.single(fin)
-          } else {
-            val prev = state.getOption
-              .getOrElse(UserTotalTtlState(UserTotal(user, 0L, 0.0), Long.MinValue))
-            val batch = rows.toSeq
-            val next = UserTotalTtlState(
-              UserTotal(user, prev.total.n_events + batch.size,
-                prev.total.total_value + batch.map(_._3).sum),
-              // last-seen lives in STATE, not just the current batch: a
-              // late (in-watermark) out-of-order arrival must never
-              // SHRINK the deadline, and the timeout must not depend on
-              // how events happened to split across microbatches
-              math.max(prev.lastSeenMs, batch.map(_._2.getTime).max))
-            state.update(next)
-            state.setTimeoutTimestamp(math.max(
-              next.lastSeenMs + idleMs, state.getCurrentWatermarkMs + 1))
-            Iterator.empty // totals surface on eviction (append output)
-          }
-      }
+    keyedFold(events.selectExpr("user_id", "ts", "value", "event_id")
+        .as[(Long, java.sql.Timestamp, Double, Long)], Some(watermark))(
+        _._1, r => (us(r._2), r._4)) {
+      (user: Long, prev: Option[UserTotalTtlState],
+          rows: Seq[(Long, java.sql.Timestamp, Double, Long)], _: Long) =>
+        val p = prev.getOrElse(UserTotalTtlState(UserTotal(user, 0L, 0.0), Long.MinValue))
+        (Some(UserTotalTtlState(
+          UserTotal(user, p.total.n_events + rows.size, p.total.total_value + rows.map(_._3).sum),
+          // last-seen lives in STATE, not just the current batch: a
+          // late (in-watermark) out-of-order arrival must never
+          // SHRINK the deadline, and the timeout must not depend on
+          // how events happened to split across microbatches
+          math.max(p.lastSeenMs, rows.map(_._2.getTime).max))),
+          Nil) // totals surface on eviction (append output)
+    }((_, st) => st.lastSeenMs + idleMs,
+      // idle horizon passed: final emission, state evicted
+      (_, st, _) => (None, Seq(st.total)))
   }
 
   case class ThrottledEvent(user_id: Long, event_id: Long, event_type: String,
@@ -1633,35 +1577,24 @@ object Transforms {
       cap: Int = 2,
       watermark: Option[String] = Some("30 minutes")): Dataset[ThrottledEvent] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    val ttl = watermark.isDefined
-    watermark.fold(events)(w => events.withWatermark("ts", w))
-      .withColumn("hour_start", date_trunc("hour", col("ts")))
-      .selectExpr("user_id", "cast(hour_start as long) as hour_s", "event_id",
-        "event_type", "ts")
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[Long, ThrottledEvent](
-        OutputMode.Append,
-        if (ttl) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
-        (key: (Long, Long), rows: Iterator[(Long, Long, Long, String, java.sql.Timestamp)],
-            state: GroupState[Long]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var seen = state.getOption.getOrElse(0L)
-            val out = Seq.newBuilder[ThrottledEvent]
-            rows.toSeq.sortBy(r => (us(r._5), r._3)).foreach { case (user, _, id, typ, ts) =>
-              seen += 1
-              if (seen <= cap) out += ThrottledEvent(user, id, typ, ts)
-            }
-            state.update(seen)
-            // dead once the watermark clears the hour: any event of this
-            // hour arriving after that is watermark-filtered upstream
-            if (ttl) state.setTimeoutTimestamp(math.max(
-              (key._2 + 3600L) * 1000L, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
-          }
-      }
+    keyedFold(events
+        .withColumn("hour_start", date_trunc("hour", col("ts")))
+        .selectExpr("user_id", "cast(hour_start as long) as hour_s", "event_id", "event_type", "ts")
+        .as[(Long, Long, Long, String, java.sql.Timestamp)], watermark)(
+        r => (r._1, r._2), r => (us(r._5), r._3)) {
+      (_: (Long, Long), prev: Option[Long],
+          rows: Seq[(Long, Long, Long, String, java.sql.Timestamp)], _: Long) =>
+        var seen = prev.getOrElse(0L)
+        val out = Seq.newBuilder[ThrottledEvent]
+        rows.foreach { case (user, _, id, typ, ts) =>
+          seen += 1
+          if (seen <= cap) out += ThrottledEvent(user, id, typ, ts)
+        }
+        (Some(seen), out.result())
+    }(
+      // dead once the watermark clears the hour: any event of this hour
+      // arriving after that is watermark-filtered upstream
+      (key, _) => (key._2 + 3600L) * 1000L)
   }
 
   case class LastTouch(us: Long, touch_type: String)
@@ -1693,122 +1626,67 @@ object Transforms {
       windowUs: Long = 86400000000L,
       watermark: Option[String] = Some("30 minutes")): Dataset[AttributionHit] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    val ttl = watermark.isDefined
-    watermark.fold(events)(w => events.withWatermark("ts", w))
-      .selectExpr("user_id", "ts", "event_type", "event_id")
-      .as[(Long, java.sql.Timestamp, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[LastTouch, AttributionHit](
-        OutputMode.Append,
-        if (ttl) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, String, Long)],
-            state: GroupState[LastTouch]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.orNull
-            val out = Seq.newBuilder[AttributionHit]
-            rows.toSeq.sortBy(r => (us(r._2), r._4)).foreach { case (_, ts, typ, id) =>
-              val t = us(ts)
-              typ match {
-                case "view" | "click" => st = LastTouch(t, typ)
-                case "purchase" =>
-                  val credit =
-                    if (st != null && st.us >= t - windowUs) st.touch_type else "none"
-                  out += AttributionHit(user, id, credit)
-                case _ => ()
-              }
-            }
-            if (st != null) {
-              state.update(st)
-              // dead once the window has passed the touch (watermark
-              // guard: event-time timeouts must be set past it)
-              if (ttl) state.setTimeoutTimestamp(math.max(
-                (st.us + windowUs) / 1000L, state.getCurrentWatermarkMs + 1))
-            }
-            out.result().iterator
+    keyedFold(events.selectExpr("user_id", "ts", "event_type", "event_id")
+        .as[(Long, java.sql.Timestamp, String, Long)], watermark)(_._1, r => (us(r._2), r._4)) {
+      (user: Long, prev: Option[LastTouch], rows: Seq[(Long, java.sql.Timestamp, String, Long)],
+          _: Long) =>
+        var st = prev
+        val out = Seq.newBuilder[AttributionHit]
+        rows.foreach { case (_, ts, typ, id) =>
+          val t = us(ts)
+          typ match {
+            case "view" | "click" => st = Some(LastTouch(t, typ))
+            case "purchase" =>
+              val credit = st.filter(_.us >= t - windowUs).fold("none")(_.touch_type)
+              out += AttributionHit(user, id, credit)
+            case _ => ()
           }
-      }
+        }
+        (st, out.result())
+    }(
+      // dead once the window has passed the touch
+      (_, st) => (st.us + windowUs) / 1000L)
   }
 
   case class NewUserHit(user_id: Long, event_id: Long, day: Long)
+  case class FirstSeen(day: Long, lastSeenMs: Long)
 
   /** First-seen detector — the streaming half of `ev_cumulative_users`:
-    * per-user keyed state is ONE boolean-shaped long (the first-seen
-    * day); a user's FIRST event emits a NewUserHit, everything after is
-    * silent. Downstream, growth curves are a plain per-day count over
-    * this (tiny) hit stream — the same first-seen trick that makes the
-    * batch running COUNT(DISTINCT) distributable makes the streaming
-    * state O(1) per user. Within a batch, events fold in (event-time,
-    * event_id) order so the credited first event is deterministic;
-    * cross-batch, first-delivery-wins (the only online option). Parity:
-    * per-day hit counts equal the batch operator's n_new_users on
-    * in-order delivery (spec-pinned). */
-  def newUserEvents(spark: SparkSession, events: DataFrame): Dataset[NewUserHit] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    events
-      .selectExpr("user_id", "ts", "event_id")
-      .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, NewUserHit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long)],
-            state: GroupState[Long]) =>
-          if (state.exists) Iterator.empty
-          else {
-            val first = rows.minBy(r => (us(r._2), r._3))
-            val day = us(first._2) / 86400000000L
-            state.update(day)
-            Iterator.single(NewUserHit(user, first._3, day))
-          }
-      }
-  }
-
-  case class FirstSeenTtlState(day: Long, lastSeenMs: Long)
-
-  /** [[newUserEvents]] with bounded state: a user idle past `idleMs` of
-    * EVENT time is evicted (the [[runningUserTotalsWithTtl]] discipline)
-    * and counts as new AGAIN on re-emergence. This is a DIFFERENT metric
-    * — "recurring-new within the idle horizon", the resurrection-aware
-    * growth curve — which is exactly why the TTL is a separate function
-    * rather than a default on the exact one: exact first-seen requires
-    * O(users ever seen) state by definition, and a pipeline must choose
-    * which contract it wants. Late in-watermark arrivals extend the
-    * deadline monotonically (max with stored last-seen, never shrink). */
-  def newUserEventsWithTtl(spark: SparkSession, events: DataFrame,
-      watermark: String = "30 minutes",
+    * per-user keyed state is the first-seen day (and the last-seen
+    * instant the idle horizon runs from); a user's FIRST event emits a
+    * NewUserHit, everything after is silent. Downstream, growth curves
+    * are a plain per-day count over this (tiny) hit stream — the same
+    * first-seen trick that makes the batch running COUNT(DISTINCT)
+    * distributable makes the streaming state O(1) per user. Within a
+    * batch, events fold in (event-time, event_id) order so the credited
+    * first event is deterministic; cross-batch, first-delivery-wins (the
+    * only online option). Parity: per-day hit counts equal the batch
+    * operator's n_new_users on in-order delivery (spec-pinned).
+    *
+    * With the default `watermark = None` it is the exact operator: exact
+    * first-seen requires O(users ever seen) state by definition. With a
+    * watermark, a user idle past `idleMs` of EVENT time is evicted (the
+    * [[runningUserTotalsWithTtl]] discipline) and counts as new AGAIN on
+    * re-emergence. That is a DIFFERENT metric — "recurring-new within
+    * the idle horizon", the resurrection-aware growth curve — so a
+    * pipeline chooses its contract by choosing the argument. Late
+    * in-watermark arrivals extend the deadline monotonically (max with
+    * stored last-seen, never shrink). */
+  def newUserEvents(spark: SparkSession, events: DataFrame,
+      watermark: Option[String] = None,
       idleMs: Long = 30L * 86400000L): Dataset[NewUserHit] = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    events
-      .withWatermark("ts", watermark)
-      .selectExpr("user_id", "ts", "event_id")
-      .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[FirstSeenTtlState, NewUserHit](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long)],
-            state: GroupState[FirstSeenTtlState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val batch = rows.toSeq
-            val batchMaxMs = batch.map(_._2.getTime).max
-            val (next, out) = state.getOption match {
-              case Some(st) =>
-                (st.copy(lastSeenMs = math.max(st.lastSeenMs, batchMaxMs)),
-                  Iterator.empty)
-              case None =>
-                val first = batch.minBy(r => (us(r._2), r._3))
-                val day = us(first._2) / 86400000000L
-                (FirstSeenTtlState(day, batchMaxMs),
-                  Iterator.single(NewUserHit(user, first._3, day)))
-            }
-            state.update(next)
-            state.setTimeoutTimestamp(math.max(
-              next.lastSeenMs + idleMs, state.getCurrentWatermarkMs + 1))
-            out
-          }
-      }
+    keyedFold(events.selectExpr("user_id", "ts", "event_id").as[(Long, java.sql.Timestamp, Long)],
+        watermark)(_._1, r => (us(r._2), r._3)) {
+      (user: Long, prev: Option[FirstSeen], rows: Seq[(Long, java.sql.Timestamp, Long)], _: Long) =>
+        val lastSeenMs = rows.map(_._2.getTime).max
+        prev match {
+          case Some(st) => (Some(st.copy(lastSeenMs = math.max(st.lastSeenMs, lastSeenMs))), Nil)
+          case None =>
+            val (_, t, id) = rows.head
+            val day = us(t) / 86400000000L
+            (Some(FirstSeen(day, lastSeenMs)), Seq(NewUserHit(user, id, day)))
+        }
+    }((_, st) => st.lastSeenMs + idleMs)
   }
 }

@@ -1,11 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, GraftShim, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
@@ -23,7 +25,8 @@ import org.scalatest.matchers.should.Matchers
   *    src/test/resources/fixtures) to identical TimestampType values;
   *  - every real testdata table's loaded schema is pinned field-by-field;
   *  - `Tables.load` infers a table's schema once per JVM, and re-infers
-  *    when the table is rewritten or the session's inference confs differ.
+  *    when the table is rewritten or the session's inference confs differ;
+  *    a TIMESTAMP(NANOS) footer's rejection is remembered the same way.
   */
 class TableSchemaSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 
@@ -125,6 +128,26 @@ class TableSchemaSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
   }
 
+  /** How many of the Spark jobs `body` runs on this thread end as failed. */
+  private def failedJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"table-schema-${System.nanoTime()}"
+    val ours = ConcurrentHashMap.newKeySet[Int]()
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          ours.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (ours.contains(e.jobId) && e.jobResult != JobSucceeded) n.incrementAndGet()
+    }
+    GraftShim.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group)
+    try { body; GraftShim.drainListenerBus(sc); n.get }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
+
   it should "infer a table's schema once per JVM, with the rows of a plain read" in {
     val dir = tmp()
     spark.read.parquet(s"$sf/lineitem.parquet").write.parquet(s"$dir/lineitem.parquet")
@@ -188,5 +211,13 @@ class TableSchemaSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     val got = intercept[AnalysisException](Tables.load(spark, dir, "absent"))
     got.getClass shouldBe plain.getClass
     got.getCondition shouldBe plain.getCondition
+  }
+
+  it should "run no failing job on a repeated TIMESTAMP(NANOS) load" in {
+    val dir = fixtureDir("events_ts_ns.parquet")
+    // the first load learns that the footer is rejected; the second, in a
+    // fresh session, reads through the nanosAsLong session directly
+    Tables.events(spark, dir)
+    failedJobs(Tables.events(spark.newSession(), dir).collect()) shouldBe 0
   }
 }

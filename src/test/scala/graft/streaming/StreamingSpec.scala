@@ -443,6 +443,27 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     h.shouldCommit(Duration.ofSeconds(1), 0L, 0L) shouldBe false
   }
 
+  it should "draw the pinned budget sequences" in {
+    // literal pins: BudgetedSinkSpec derives its expectation from
+    // FuzzyTotalFold itself, so only a literal catches a changed draw
+    def commits(bytes: Option[(Long, Long)], records: Option[(Long, Long)], seed: Long,
+        groupSeed: Long, recordBytes: Seq[Long]): Seq[Long] = {
+      val f = new MultiFileCommit.FuzzyTotalFold(bytes, records, seed)
+      f.reset(groupSeed)
+      recordBytes.map(f.next)
+    }
+    // the commit index of every record, given each commit's record count
+    def runs(sizes: Int*): Seq[Long] =
+      sizes.zipWithIndex.flatMap { case (n, c) => Seq.fill(n)(c.toLong) }
+    commits(None, Some((10L, 2L)), 7L, 1L, Seq.fill(200)(1L)) shouldBe
+      runs(13, 11, 11, 9, 8, 13, 10, 12, 12, 15, 10, 10, 14, 11, 8, 11, 6, 10, 6)
+    // bytes drawn before records, both budgets binding along the sequence
+    commits(Some((1000L, 300L)), Some((12L, 3L)), 5L, 3L,
+      (0 until 300).map(i => (i * 37L) % 200L + 1L)) shouldBe
+      runs(14, 11, 6, 11, 12, 10, 14, 7, 4, 9, 9, 10, 8, 8, 8, 8, 13, 11, 8, 8, 9, 12, 9, 9,
+        10, 11, 6, 8, 8, 4, 11, 10, 4)
+  }
+
   it should "jitter distributed commit budgets deterministically per group" in {
     // pure fold: same (seed, group) ⇒ identical assignment; budgets vary
     // across commits; different groups draw different sequences
@@ -1996,6 +2017,47 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     spark.table("botalerts").count() shouldBe 1
   }
 
+  it should "measure sub-millisecond gaps in integer micros, as ev_bot_census does" in {
+    // a 250 µs metronome: millisecond truncation would turn its gaps
+    // into {0, 1000} µs (cv ≈ 1.9, no alert)
+    val base = Timestamp.valueOf("2024-01-01 00:00:00")
+    def atUs(us: Long) = { val t = new Timestamp(base.getTime); t.setNanos((us * 1000L).toInt); t }
+    val (_, df) =
+      eventsStream((0 until 10).map(i => Ev(500L + i, atUs(250L * i), 7L, "view", 1.0, "{}")))
+    val q = Transforms.botAlerts(spark, df)
+      .writeStream.format("memory").queryName("botalerts_us").outputMode("append").start()
+    q.processAllAvailable(); q.stop()
+    val alerts = spark.table("botalerts_us").collect()
+    alerts.length shouldBe 1
+    alerts(0).getAs[Long]("user_id") shouldBe 7L
+    alerts(0).getAs[Long]("n_gaps") shouldBe 9L
+    alerts(0).getAs[Double]("cv_gap") shouldBe 0.0
+    alerts(0).getAs[Double]("mean_gap_s") shouldBe 0.00025
+  }
+
+  it should "evict an idle user and restart its gap statistics when it resurfaces" in {
+    // 5 metronome events (4 gaps, below minGaps), then 30 min of silence:
+    // with a 10-min idle horizon the user leaves the store, so its next
+    // 10 metronome events alert on their own 9 gaps — no gap spans the
+    // idle period (kept state would fold a 36-min gap and never alert)
+    val (ms, df) = eventsStream((0 until 5).map(i => Ev(600L + i, ts(i), 1L, "view", 1.0, "{}")))
+    val q = Transforms.botAlerts(spark, df, watermark = "1 minute", idleMs = 10 * 60 * 1000L)
+      .writeStream.format("memory").queryName("botalerts_idle").outputMode("append").start()
+    q.processAllAvailable()
+    ms.addData(Ev(700L, ts(30), 2L, "view", 1.0, "{}")) // watermark → :29 ⇒ evict user 1
+    q.processAllAvailable()
+    val stateRows = q.lastProgress.stateOperators(0).numRowsTotal
+    ms.addData((0 until 10).map(i => Ev(800L + i, ts(40 + i), 1L, "view", 1.0, "{}")): _*)
+    q.processAllAvailable(); q.stop()
+    stateRows shouldBe 1L // only user 2 survives the idle horizon
+    val alerts = spark.table("botalerts_idle").collect()
+    alerts.length shouldBe 1
+    alerts(0).getAs[Long]("user_id") shouldBe 1L
+    alerts(0).getAs[Long]("n_gaps") shouldBe 9L
+    alerts(0).getAs[Double]("cv_gap") shouldBe 0.0
+    alerts(0).getAs[Double]("mean_gap_s") shouldBe 60.0
+  }
+
   it should "fan out one source to independently-committed sinks" in {
     // PartitionGroupingSink analog: two sinks, separate checkpoints,
     // each commits its own progress over the same source.
@@ -2184,8 +2246,8 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     val (ms, df) = eventsStream(Seq(
       Ev(0, ts(1), 1, "view", 1.0, "{}"),
       Ev(1, ts(2), 1, "click", 1.0, "{}"))) // tail = (view, click)
-    val q = Transforms.pathTriplesWithTtl(spark, df,
-        watermark = "1 minute", idleMs = 10 * 60 * 1000L)
+    val q = Transforms.pathTriples(spark, df,
+        watermark = Some("1 minute"), idleMs = 10 * 60 * 1000L)
       .writeStream.format("memory").queryName("paths_ttl").outputMode("append").start()
     q.processAllAvailable()
     ms.addData(Ev(2, ts(30), 2, "view", 1.0, "{}")) // watermark → :29 ⇒ user 1 evicted
@@ -2279,8 +2341,8 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
   it should "re-emit a resurrected user under the TTL first-seen variant" in {
     val (ms, df) = eventsStream(Seq(Ev(0, ts(1), 1, "view", 1.0, "{}")))
     // 10-min idle horizon: user 1 evicted once watermark passes :11
-    val q = Transforms.newUserEventsWithTtl(spark, df,
-        watermark = "1 minute", idleMs = 10 * 60 * 1000L)
+    val q = Transforms.newUserEvents(spark, df,
+        watermark = Some("1 minute"), idleMs = 10 * 60 * 1000L)
       .writeStream.format("memory").queryName("newusers_ttl").outputMode("append").start()
     q.processAllAvailable()
     ms.addData(Ev(1, ts(30), 2, "view", 1.0, "{}")) // watermark → :29 ⇒ evict user 1
@@ -2365,6 +2427,37 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
       Array.empty[Double], Array.empty[Double], 0, table, dlq, cp)
     an[Exception] should be thrownBy q.awaitTermination()
     cachedEntries() shouldBe false
+  }
+
+  behavior of "src/main"
+
+  it should "keep keyed event-time state inside the one keyed fold of Transforms" in {
+    import java.io.File
+    val root = new File("src/main/scala")
+    withClue(s"run from the repository root (${root.getAbsolutePath}): ") {
+      root.isDirectory shouldBe true
+    }
+    def files(d: File): Seq[File] = d.listFiles().toSeq.flatMap { f =>
+      if (f.isDirectory) files(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+    // comments may name the API; only code counts
+    def code(f: File): String = {
+      val s = scala.io.Source.fromFile(f, "UTF-8")
+      try s.mkString.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+      finally s.close()
+    }
+    val helper = "(?s)\n  private def keyedFold\\[.*?\n  }\n".r
+    val offenders = for {
+      f <- files(root)
+      src = code(f)
+      rest = if (f.getName != "Transforms.scala") src else {
+        withClue("Transforms.keyedFold: ") { helper.findAllIn(src).size shouldBe 1 }
+        helper.replaceAllIn(src, "")
+      }
+      pattern <- Seq("flatMapGroupsWithState", "setTimeoutTimestamp",
+        "GroupStateTimeout.EventTimeTimeout") if rest.contains(pattern)
+    } yield s"${f.getPath}: $pattern"
+    offenders shouldBe empty
   }
 
   behavior of "StandingQueryLoader"
