@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.TextFns._
-import graft.plans.GraftFunctions
+import graft.streaming.Transforms.Bloom
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -321,8 +321,8 @@ object Retrieval {
     * itself), and the shuffle carries only the Θ(16·N)-bounded matching
     * stream instead of the full corpus feature explode. The filter is
     * built from the pinned qtok frame (one small job) and is
-    * metadata-sized by the [[QueryDocs]] budget — the same xxhash64
-    * build/probe pipeline as the streaming history gate.
+    * metadata-sized by the [[QueryDocs]] budget — built and probed by
+    * the streaming history gate's Bloom toolkit ([[truthFilter]]).
     *
     * Negative result, kept on purpose (§1.2 measure-first): replacing
     * the sizes explode+groupBy with a map-only `size(array_distinct(…))`
@@ -344,23 +344,12 @@ object Retrieval {
       .localCheckpoint(false)
     val qsizes = qtok.groupBy(col("query_id")).agg(count(lit(1)).as("nq"))
       .localCheckpoint(false)
-    // the count materializes the qtok pin (its first consumer would
-    // anyway) and sizes the filter; clamps respect Spark's
-    // BloomFilterAggregate caps (4M items / 64Mbit)
-    val nQtok = qtok.count()
-    val items = math.min(math.max(1L, nQtok), 4000000L)
-    val numBits = math.min(67108864L, math.max(64L, math.ceil(
-      -items * math.log(0.01) / (math.log(2) * math.log(2))).toLong))
-    val bfRow = qtok.select(xxhash64(col("t")).as("h"))
-      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
-        lit(items), lit(numBits)).as("bf"))
-      .head()
-    // empty query set → null aggregate → no pre-filter (the join below
+    // empty query set → null filter → no pre-filter (the join below
     // is empty either way; EmptyInputSpec's contract)
+    val bf = truthFilter(qtok)
     val dtkF =
-      if (bfRow.isNullAt(0)) dtk
-      else dtk.filter(GraftFunctions.call("graft_bloom_contains",
-        lit(bfRow.getAs[Array[Byte]](0)), xxhash64(col("t"))))
+      if (bf == null) dtk
+      else dtk.filter(Bloom.mightContain(bf, xxhash64(col("t"))))
     // shuffle-hash, not broadcast: qtok is bounded by the sampled docs'
     // VOCABULARY (unbounded per doc length), and the joined stream must
     // shuffle for the (query, doc) agg regardless — the hash build side
@@ -375,6 +364,17 @@ object Retrieval {
       .filter(col("doc_id") =!= col("query_id") &&
         lit(2) * col("ni") >= col("nq") + col("n") - col("ni"))
       .select(col("query_id"), col("doc_id"))
+  }
+
+  /** [[truthFrameBy]]'s pre-filter over the query features `t` of
+    * `qtok` (null for an empty query set), at fpp 1% under clamps that
+    * respect Spark's BloomFilterAggregate caps (4M items / 64Mbit). The
+    * count also materializes the qtok pin (its first consumer would
+    * anyway). */
+  private[graft] def truthFilter(qtok: DataFrame): Array[Byte] = {
+    val s = Bloom.sizing(math.min(math.max(1L, qtok.count()), 4000000L), 0.01)
+    Bloom.build(qtok, xxhash64(col("t")),
+      s.copy(bits = math.min(67108864L, math.max(64L, s.bits))))
   }
 
   /** The macro P@10 / recall@10 / MRR aggregate over one retriever's

@@ -1290,7 +1290,13 @@ object Similarity {
       col("cos")), 5)
   }
 
-  val annBeamSql: String = {
+  /** `sql` with every CTE materialized: DuckDB inlines a CTE at each
+    * reference, and each beam round reads the previous one twice, so the
+    * inlined chain grows per round until DuckDB runs out of memory. */
+  private def materialized(sql: String): String =
+    sql.replaceAll("\\b(\\w+) AS \\(", "$1 AS MATERIALIZED (")
+
+  val annBeamSql: String = materialized {
     def cosSql(qe: String, qn: String, e: String, n: String) =
       s"list_reduce(list_transform(generate_series(1, 64), i -> $qe[i] * $e[i]), (x, y) -> x + y) / ($qn * $n)"
     def round(r: Int): String = {
@@ -1801,7 +1807,7 @@ object Similarity {
       .orderBy(col("method"))
   }
 
-  val annRecallCardSql: String =
+  val annRecallCardSql: String = materialized(
     s"""WITH truth AS (
        |  SELECT query_id, neighbor_id FROM ($annBruteforceSql) WHERE rnk <= 5),
        |cand AS (
@@ -1826,7 +1832,7 @@ object Similarity {
             "CAST(coalesce(h.n_hits, 0) AS DOUBLE) / (5.0 * nq.n_queries)", 6)}
        |  END AS recall_at_5
        |FROM m LEFT JOIN cc USING (method) LEFT JOIN h USING (method)
-       |CROSS JOIN nq ORDER BY method""".stripMargin
+       |CROSS JOIN nq ORDER BY method""".stripMargin)
 
   /** Dimension-truncation retrieval card (round 11) — the
     * Matryoshka-style ADAPTIVE-RETRIEVAL evaluation: score candidates

@@ -226,9 +226,9 @@ object GraftFunctions {
       }),
     // Spark ships distributed Bloom build/probe as CATALYST expressions
     // (the runtime-filter machinery) but does not register them as SQL
-    // functions; graft exposes them for the ingest dedup gate
-    // (streaming.Transforms.bloomDedup). Build and probe share one hash
-    // pipeline: callers pass xxhash64(key) to both.
+    // functions; graft exposes them for the Bloom history-filter toolkit
+    // (streaming.Transforms.Bloom, their one caller), whose build and
+    // probe read each filter kind's one long key column.
     (new FunctionIdentifier("graft_bloom_agg"),
       new ExpressionInfo(
         classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,

@@ -173,6 +173,40 @@ object Sinks {
     try fs.delete(staging.getParent, false) catch { case _: java.io.IOException => () }
   }
 
+  /** Replace `path` (a file or a directory) by what `write` stages at
+    * `<path><suffix>.tmp`, never deleting the only complete copy: `path`
+    * moves aside to `<path><suffix>.old`, the staged copy is renamed in,
+    * and only then is the old copy dropped. A crash leaves either the old
+    * `path` (a stale `.tmp` is rewritten next time) or the `.old` copy,
+    * which [[restore]] puts back; every replace restores first. */
+  private[streaming] def replace(spark: org.apache.spark.sql.SparkSession, path: String,
+      suffix: String)(write: (org.apache.hadoop.fs.FileSystem, Path) => Unit): Unit = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    restore(spark, path, suffix)
+    val tmp = new Path(path + suffix + ".tmp")
+    val old = new Path(path + suffix + ".old")
+    fs.delete(tmp, true)
+    write(fs, tmp)
+    if (fs.exists(p)) renameOrThrow(fs, p, old)
+    renameOrThrow(fs, tmp, p)
+    fs.delete(old, true)
+  }
+
+  /** Repair a [[replace]] that crashed between its two renames: if
+    * `path` is missing but `<path><suffix>.old` survives, restore it; an
+    * `.old` copy beside a complete `path` is dropped. Idempotent. Returns
+    * true if a restore happened. */
+  private[streaming] def restore(spark: org.apache.spark.sql.SparkSession, path: String,
+      suffix: String): Boolean = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = new Path(path + suffix + ".old")
+    val restored = !fs.exists(p) && fs.exists(old)
+    if (restored) renameOrThrow(fs, old, p) else fs.delete(old, true)
+    restored
+  }
+
   /** Small-files compaction for file sinks: rewrite a (partition of a)
     * table into ~`targetFileBytes` files and swap directories.
     * Long-running loaders accumulate per-epoch small files (the reference
@@ -180,8 +214,8 @@ object Sinks {
     * compacts after the fact — same end state, and the rewrite is
     * distributed). Returns the number of files after compaction.
     *
-    * Crash safety: the swap is two renames (dir → .compact.old, then
-    * .compact.tmp → dir), so there is a window where `dir` does not exist
+    * Crash safety: the swap is [[replace]]'s two renames (dir → .compact.old,
+    * then .compact.tmp → dir), so there is a window where `dir` does not exist
     * and concurrent readers would fail. A crash inside that window is
     * repaired by [[recoverCompaction]], which every `compact` call runs
     * first — the original data is never deleted until the compacted copy
@@ -206,19 +240,13 @@ object Sinks {
         "pins the exact file list, so a compaction rewrite would make " +
         "committed history invisible to readers. Compact only rename-" +
         "published sink dirs (InDataOffset/multiFile/RowBinary) or plain tables.")
-    recoverCompaction(spark, dir)
-    val sizeBytes = fs.getContentSummary(new Path(dir)).getLength
-    val nFiles = math.max(1, math.ceil(sizeBytes.toDouble / targetFileBytes).toInt)
-    val tmp = new Path(dir + ".compact.tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    val w = spark.read.parquet(dir).repartition(nFiles).write
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(tmp.toString)
-    val old = new Path(dir + ".compact.old")
-    if (fs.exists(old)) fs.delete(old, true)
-    renameOrThrow(fs, new Path(dir), old)
-    renameOrThrow(fs, tmp, new Path(dir))
-    fs.delete(old, true)
+    replace(spark, dir, ".compact") { (_, tmp) =>
+      val sizeBytes = fs.getContentSummary(new Path(dir)).getLength
+      val nFiles = math.max(1, math.ceil(sizeBytes.toDouble / targetFileBytes).toInt)
+      val w = spark.read.parquet(dir).repartition(nFiles).write
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(tmp.toString)
+    }
     val it = fs.listFiles(new Path(dir), true) // recursive: partitioned layouts nest
     var n = 0
     while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
@@ -230,15 +258,8 @@ object Sinks {
     * restore the original; stray `.compact.tmp` staging is discarded
     * (recomputed on the next compact). Idempotent. Returns true if a
     * restore happened. */
-  def recoverCompaction(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(dir + ".compact.old")
-    val restored = if (!fs.exists(new Path(dir)) && fs.exists(old)) {
-      renameOrThrow(fs, old, new Path(dir)); true
-    } else false
-    if (fs.exists(new Path(dir)) && fs.exists(old)) fs.delete(old, true)
-    restored
-  }
+  def recoverCompaction(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
+    restore(spark, dir, ".compact")
 
   /** Two-phase commit storage: every epoch is (1) staged to a temp dir,
     * (2) renamed into place, (3) committed by creating a per-epoch

@@ -1,22 +1,27 @@
 package graft.streaming
 
 import graft.plans.GraftFunctions
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming transforms (SURVEY.md §2h): watermarked windowed aggregation,
   * in-watermark dedup (the RewindingPartitionGroupSinker replay window),
   * gap sessionization via the native session_window, and a
-  * mapGroupsWithState custom-state operator.
+  * mapGroupsWithState custom-state operator. Serializable (as the module
+  * proxy): a keyed fold's step may call the time helpers below on executors.
   */
-object Transforms {
+object Transforms extends Serializable {
 
   /** Event-time as epoch micros — the ONE Timestamp→Long conversion all
     * keyed-state transforms fold-order on (a precision fix must not be
     * applied to N local copies). */
   private def us(t: java.sql.Timestamp): Long =
     t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
+
+  private def fromUs(u: Long): java.sql.Timestamp =
+    java.sql.Timestamp.from(java.time.Instant.EPOCH.plus(u, java.time.temporal.ChronoUnit.MICROS))
 
   /** The keyed event-time fold every stateful operator below runs
     * through: SURVEY §1's per-partition sinkers and hand-held keyed state
@@ -169,6 +174,7 @@ object Transforms {
       .select(col("user_id"), col("click_id"), col("click_ts"), col("view_id"), col("view_ts"))
   }
 
+  /** An open session's first and last event time, in epoch micros. */
   case class OpenSession(start: Long, end: Long, n: Long, value: Double)
   case class OpenSessions(sessions: List[OpenSession])
   case class ClosedSession(user_id: Long, session_start: java.sql.Timestamp,
@@ -194,12 +200,15 @@ object Transforms {
     // session_end = last event + gap: the session_window BOUNDARY, so the
     // emitted rows agree column-for-column with the batch twin
     // [[sessionize]] (which selects session_window.end) — a consumer
-    // keyed on (user_id, session_end) can switch between the two paths
+    // keyed on (user_id, session_end) can switch between the two paths.
+    // Sessions hold µs event time, as session_window does; the
+    // watermark and the timeout deadline stay in ms.
+    val gapUs = gapMs * 1000L
     def close(user: Long, s: OpenSession) = ClosedSession(user,
-      new java.sql.Timestamp(s.start), new java.sql.Timestamp(s.end + gapMs), s.n, s.value)
+      fromUs(s.start), fromUs(s.end + gapUs), s.n, s.value)
     def coalesce(ss: List[OpenSession]): List[OpenSession] =
       ss.sortBy(s => (s.start, s.end)).foldLeft(List.empty[OpenSession]) {
-        case (acc @ (cur :: rest), nxt) if nxt.start < cur.end + gapMs =>
+        case (acc @ (cur :: rest), nxt) if nxt.start < cur.end + gapUs =>
           OpenSession(cur.start, math.max(cur.end, nxt.end),
             cur.n + nxt.n, cur.value + nxt.value) :: rest
         case (acc, nxt) => nxt :: acc
@@ -207,17 +216,17 @@ object Transforms {
     def fold(user: Long, prev: Option[OpenSessions], rows: Seq[(Long, java.sql.Timestamp, Double)],
         wm: Long): (Option[OpenSessions], Seq[ClosedSession]) = {
       val merged = coalesce(prev.fold(List.empty[OpenSession])(_.sessions) ++
-        rows.map(e => OpenSession(e._2.getTime, e._2.getTime, 1L, e._3)))
+        rows.map(e => OpenSession(us(e._2), us(e._2), 1L, e._3)))
       // closed = watermark has passed end + gap: no admissible event
       // (≥ watermark) can extend or bridge them anymore
-      val (done, open) = merged.partition(_.end + gapMs <= wm)
+      val (done, open) = merged.partition(_.end + gapUs <= wm * 1000L)
       (if (open.isEmpty) None else Some(OpenSessions(open)),
         done.sortBy(_.start).map(close(user, _)))
     }
     keyedFold(events.selectExpr("user_id", "ts", "value").as[(Long, java.sql.Timestamp, Double)],
         Some(watermark))(_._1, r => us(r._2))(fold)(
       // earliest close time
-      (_, st) => st.sessions.map(_.end + gapMs).min,
+      (_, st) => Math.floorDiv(st.sessions.map(_.end + gapUs).min, 1000L),
       // a timeout emits what the watermark closed and re-arms the rest
       (user, st, wm) => fold(user, Some(st), Nil, wm))
   }
@@ -454,7 +463,6 @@ object Transforms {
   def bm25Score(docs: DataFrame, queries: Map[Long, Seq[String]],
       df: Map[String, Long], nDocs: Long, avgdl: Double,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.Column
     // no standing queries → nothing can match: an empty scored frame
     // with the contract schema (a zero-arg array() literal is
     // void-typed and would fail analysis, so the degenerate registry
@@ -581,7 +589,6 @@ object Transforms {
     * batch `ir_phrase` hit set over the same corpus and registry. */
   def phraseGate(docs: DataFrame,
       phrases: Map[Long, Seq[String]]): DataFrame = {
-    import org.apache.spark.sql.Column
     // empty registry → every doc passes clean (same void-typed-array()
     // hazard as bm25Score's degenerate branch)
     if (phrases.isEmpty) {
@@ -870,14 +877,60 @@ object Transforms {
     }((_, st) => Math.floorDiv(st.lastUs, 1000L) + idleMs)
   }
 
+  /** The Bloom history-filter toolkit: every decision the four filter
+    * kinds share, made once. Each kind names its LONG key column once
+    * and its build and probe both read it — content `xxhash64(md5(normText))`,
+    * band `xxhash64` of each LSH band key, line `xxhash64` of each line
+    * segment, gram each `graft_gram_buckets` window hash — so every
+    * filter is one serialized format that save/load, merge and saturation
+    * all take. (The DataFrame-stat builder hashes with another scheme;
+    * its filters would silently never match this probe.) */
+  private[graft] object Bloom {
+    case class Sizing(items: Long, bits: Long)
+
+    /** The one sizing rule: `items` documents of `keysPerItem` keys over
+      * `shards` filters at per-document fpp put n = ⌈items·keysPerItem /
+      * shards⌉ keys in each, at p = fpp / keysPerItem: m = −n ln p / (ln 2)². */
+    def sizing(items: Long, fpp: Double, keysPerItem: Int = 1, shards: Int = 1): Sizing = {
+      require(shards >= 1, s"shards must be positive (got $shards)")
+      require(items > 0, s"expected item count must be positive (got $items)")
+      require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1) (got $fpp)")
+      val n = math.max(1L, math.ceil(items.toDouble * keysPerItem / shards).toLong)
+      Sizing(n, math.ceil(-n * math.log(fpp / keysPerItem) / (math.log(2) * math.log(2))).toLong)
+    }
+
+    /** The build aggregate: partial filters OR-merge map-side, one pass. */
+    def agg(h: Column, s: Sizing): Column =
+      GraftFunctions.call("graft_bloom_agg", h, lit(s.items), lit(s.bits))
+
+    /** One filter over `key` of every row of `rows`; null when empty. */
+    def build(rows: DataFrame, key: Column, s: Sizing): Array[Byte] =
+      rows.select(key.as("h")).agg(agg(col("h"), s)).head().getAs[Array[Byte]](0)
+
+    /** The stateless codegen'd probe of a literal filter for key `h`. */
+    def mightContain(filter: Array[Byte], h: Column): Column =
+      GraftFunctions.call("graft_bloom_contains", lit(filter), h)
+
+    /** The one shard count the sharded filter frames carry. */
+    def numShards(filters: DataFrame*): Int = {
+      val ns = filters.flatMap(_.select(col("num_shards")).distinct().collect().map(_.getInt(0))).distinct
+      require(ns.length == 1, s"sharded filters must carry one num_shards value; got ${ns.mkString(",")}")
+      ns.head
+    }
+
+    def read(filter: Array[Byte]): org.apache.spark.util.sketch.BloomFilter =
+      org.apache.spark.util.sketch.BloomFilter.readFrom(new java.io.ByteArrayInputStream(filter))
+  }
+
+  private def contentKey: Column =
+    xxhash64(md5(graft.functions.TextFns.normText(col("text")).cast("binary")))
+
   /** Historical-corpus dedup gate — the 100 TB form of "drop anything
     * we already ingested": exact membership state for billions of seen
     * content hashes is TBs, but a Bloom filter at fpp=1% is ~1.2 bytes
     * per item, so the whole history rides in one broadcast value. The
-    * filter BUILD is a distributed `bloom_filter_agg` over xxhash64 of
-    * the normalized-content hash (partial filters OR-merge map-side —
-    * one pass, no collect of hashes); the gate probes it with
-    * `might_contain` as a stateless codegen'd predicate — no join, no
+    * filter BUILD is a distributed aggregate over the content key; the
+    * gate probes it as a stateless codegen'd predicate — no join, no
     * keyed state, works identically on batch frames and streams.
     *
     * The asymmetry is the point: Bloom membership has ZERO false
@@ -892,53 +945,33 @@ object Transforms {
       expectedItems: Long, fpp: Double = 0.01): DataFrame =
     bloomGate(docs, buildBloom(historical, expectedItems, fpp))
 
-  private def contentHash: org.apache.spark.sql.Column =
-    md5(graft.functions.TextFns.normText(col("text")).cast("binary"))
-
   /** Build the serialized history filter distributed — the expensive
     * half of [[bloomDedup]], factored out so the production loop builds
     * ONCE, [[saveBloom]]s, and every later run [[loadBloom]]s +
-    * [[bloomGate]]s without touching the history corpus again. */
+    * [[bloomGate]]s (or [[extendBloom]]s) without touching the history
+    * corpus again. */
   def buildBloom(historical: DataFrame, expectedItems: Long,
-      fpp: Double = 0.01): Array[Byte] = {
-    require(expectedItems > 0, s"expectedItems must be positive (got $expectedItems)")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1) (got $fpp)")
-    // optimal bit count m = -n ln p / (ln 2)²; insertion and probe must
-    // share ONE hash pipeline (xxhash64 → mightContainLong) — the
-    // DataFrame-stat builder hashes strings internally with a different
-    // scheme and its filters would silently never match the probe
-    val numBits = math.ceil(
-      -expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    historical
-      .select(xxhash64(contentHash).as("h"))
-      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
-        lit(expectedItems), lit(numBits)).as("bf"))
-      .head().getAs[Array[Byte]](0)
-  }
+      fpp: Double = 0.01): Array[Byte] =
+    Bloom.build(historical, contentKey, Bloom.sizing(expectedItems, fpp))
 
   /** Apply a built/loaded filter as the stateless ingest predicate. */
-  def bloomGate(docs: DataFrame, filter: Array[Byte]): DataFrame = {
-    docs.filter(!GraftFunctions.call("graft_bloom_contains", lit(filter), xxhash64(contentHash)))
-  }
+  def bloomGate(docs: DataFrame, filter: Array[Byte]): DataFrame =
+    docs.filter(!Bloom.mightContain(filter, contentKey))
 
-  /** Persist / restore the serialized filter through the Hadoop
-    * FileSystem (file://, hdfs://, s3a:// alike — the same FS discipline
-    * as every sink commit path; java.io would silently miss URI paths).
-    * The write stages to a temp name and renames, so a crashed save can
-    * never be loaded as a truncated filter. */
-  def saveBloom(spark: SparkSession, filter: Array[Byte], path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(filter) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"saveBloom: rename failed: $tmp -> $p")
-  }
+  /** Persist / restore the serialized filter of any kind through the
+    * Hadoop FileSystem (file://, hdfs://, s3a:// alike — java.io would
+    * silently miss URI paths). The save is [[Sinks.replace]]'s swap: it
+    * never deletes the only complete copy, so a crashed save loads the
+    * previous filter, never a truncated one. */
+  def saveBloom(spark: SparkSession, filter: Array[Byte], path: String): Unit =
+    Sinks.replace(spark, path, "") { (fs, tmp) =>
+      val out = fs.create(tmp, true)
+      try out.write(filter) finally out.close()
+    }
 
   def loadBloom(spark: SparkSession, path: String): Array[Byte] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    Sinks.restore(spark, path, "")
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
     try {
@@ -952,7 +985,7 @@ object Transforms {
     * single broadcast value. One filter at fpp=1% is ~1.2 bytes/item, so
     * at ≳10B historical items the monolithic filter is ≳12 GB: too big
     * for a plan literal, a broadcast, or one executor's probe-side heap.
-    * Sharding by `pmod(xxhash64(content), S)` splits the history into S
+    * Sharding by `pmod(contentKey, S)` splits the history into S
     * independent filters, each sized for n/S items, built in ONE
     * distributed pass (groupBy-shard aggregate — partial filters still
     * OR-merge map-side within each shard).
@@ -970,22 +1003,16 @@ object Transforms {
     * raise it alongside, or add shards instead. */
   def buildBloomSharded(historical: DataFrame, expectedItems: Long,
       fpp: Double = 0.01, shards: Int = 64): DataFrame = {
-    require(shards >= 1, s"shards must be positive (got $shards)")
-    require(expectedItems > 0, s"expectedItems must be positive (got $expectedItems)")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1) (got $fpp)")
-    val perShard = math.max(1L, math.ceil(expectedItems.toDouble / shards).toLong)
-    val numBits = math.ceil(
-      -perShard * math.log(fpp) / (math.log(2) * math.log(2))).toLong
+    val s = Bloom.sizing(expectedItems, fpp, shards = shards)
     historical
-      .select(xxhash64(contentHash).as("h"))
+      .select(contentKey.as("h"))
       .withColumn("shard", pmod(col("h"), lit(shards.toLong)).cast("int"))
       .groupBy("shard")
-      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
-        lit(perShard), lit(numBits)).as("filter"))
+      .agg(Bloom.agg(col("h"), s).as("filter"))
       .withColumn("num_shards", lit(shards))
   }
 
-  /** Probe the sharded history: keep documents whose content hash is in
+  /** Probe the sharded history: keep documents whose content key is in
     * no shard filter. Each document joins to exactly its shard's filter
     * row; above the broadcast threshold that is a shuffle join keyed by
     * shard, so a task holds AT MOST the filters of the shards it
@@ -1002,15 +1029,12 @@ object Transforms {
     * gate reads `num_shards` from it up front, and an unpersisted
     * build-side frame would recompute the whole build for that lookup. */
   def bloomGateSharded(docs: DataFrame, filters: DataFrame): DataFrame = {
-    val ns = filters.select(col("num_shards")).distinct().collect()
-    require(ns.length == 1,
-      s"filters frame must carry one num_shards value; got ${ns.length}")
-    val shards = ns(0).getInt(0)
+    val shards = Bloom.numShards(filters)
     val hCol = "__graft_bloom_h"
     val sCol = "__graft_bloom_shard"
     val fCol = "__graft_bloom_filter"
     docs
-      .withColumn(hCol, xxhash64(contentHash))
+      .withColumn(hCol, contentKey)
       .withColumn(sCol, pmod(col(hCol), lit(shards.toLong)).cast("int"))
       .join(filters.select(col("shard").as(sCol), col("filter").as(fCol)),
         Seq(sCol), "left")
@@ -1018,36 +1042,27 @@ object Transforms {
       .drop(sCol, hCol, fCol)
   }
 
-  /** [[bloomDedup]] against a sharded history in one call (builds, then
-    * gates; the build side is persisted so the gate's metadata lookup and
-    * join don't re-aggregate the history). Production loops should
-    * [[saveBloomSharded]] the build instead and gate from the load. */
-  def bloomDedupSharded(docs: DataFrame, historical: DataFrame,
-      expectedItems: Long, fpp: Double = 0.01, shards: Int = 64): DataFrame = {
-    val filters = buildBloomSharded(historical, expectedItems, fpp, shards).persist()
-    bloomGateSharded(docs, filters)
+  /** Persist / restore the sharded filters as parquet — S rows, each
+    * shard's bytes a separate value, so save/load never serializes the
+    * whole history through one buffer. Same crash-safe swap as
+    * [[saveBloom]]. */
+  def saveBloomSharded(filters: DataFrame, path: String): Unit =
+    Sinks.replace(filters.sparkSession, path, "")((_, tmp) => filters.write.parquet(tmp.toString))
+
+  def loadBloomSharded(spark: SparkSession, path: String): DataFrame = {
+    Sinks.restore(spark, path, "")
+    spark.read.parquet(path)
   }
 
-  /** Persist the sharded filters as parquet — S rows, each shard's bytes
-    * a separate value, so save/load never serializes the whole history
-    * through one buffer. Same atomicity as every parquet commit. */
-  def saveBloomSharded(filters: DataFrame, path: String): Unit =
-    filters.write.mode("overwrite").parquet(path)
-
-  def loadBloomSharded(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** OR-merge two serialized filters. Bloom union is exact: the merged
-    * filter answers "might contain" for precisely the union of inserted
-    * keys, still with zero false negatives. Requires identical sizing
-    * (same numBits / hash count — i.e. both built with the same
-    * expectedItems and fpp arguments); anything else fails loudly here
-    * rather than producing a silently wrong filter. */
+  /** OR-merge two serialized filters of the same kind. Bloom union is
+    * exact: the merged filter answers "might contain" for precisely the
+    * union of inserted keys, still with zero false negatives. Requires
+    * identical sizing (same numBits / hash count — i.e. both built with
+    * the same expectedItems and fpp arguments); anything else fails
+    * loudly here rather than producing a silently wrong filter. */
   def mergeBloom(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val fa = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(a))
-    val fb = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(b))
+    val fa = Bloom.read(a)
+    val fb = Bloom.read(b)
     require(fa.isCompatible(fb),
       "cannot merge incompatible Bloom filters (different sizing params)")
     fa.mergeInPlace(fb)
@@ -1060,7 +1075,9 @@ object Transforms {
     * build a filter over ONLY the new batch (same sizing params as the
     * saved history, so the bitsets align), OR it into the loaded filter,
     * save back. The history corpus itself is never rescanned; each
-    * run's cost is one pass over the increment.
+    * run's cost is one pass over the increment. The other kinds extend
+    * the same way, by [[saveBloom]] of [[mergeBloom]] over [[loadBloom]]
+    * and the kind's builder.
     *
     * `expectedItems`/`fpp` MUST be the original build's values — they
     * size the bitset, and the merge requires identical sizing. The fp
@@ -1083,17 +1100,14 @@ object Transforms {
     * tool here (the row-path probe stays the codegen'd expression).
     * Shards present on only one side pass through unchanged. */
   def mergeBloomSharded(saved: DataFrame, increment: DataFrame): DataFrame = {
-    val ns = (saved.select(col("num_shards")).distinct().collect() ++
-      increment.select(col("num_shards")).distinct().collect()).map(_.getInt(0)).distinct
-    require(ns.length == 1,
-      s"sharded merge needs one shard count on both sides; got ${ns.mkString(",")}")
+    val shards = Bloom.numShards(saved, increment)
     val a = saved.select(col("shard"), col("filter").as("fa"))
     val b = increment.select(col("shard"), col("filter").as("fb"))
     val mergeUdf = udf((fa: Array[Byte], fb: Array[Byte]) =>
       if (fa == null) fb else if (fb == null) fa else mergeBloom(fa, fb))
     a.join(b, Seq("shard"), "full_outer")
       .select(col("shard"), mergeUdf(col("fa"), col("fb")).as("filter"),
-        lit(ns.head).as("num_shards"))
+        lit(shards).as("num_shards"))
   }
 
   /** Saturation report for a saved filter. A Bloom bitset cannot rehash,
@@ -1109,9 +1123,10 @@ object Transforms {
       rebuildRecommended: Boolean)
 
   /** `sizedForItems`/`fpp` are the ORIGINAL build's sizing arguments
-    * (the same values [[extendBloom]] already requires). The hash count
-    * k is read from the serialized header, not recomputed, so a filter
-    * sized under different arguments is still reported honestly. */
+    * (the same values [[extendBloom]] already requires; a band filter
+    * holds expectedDocs × NumBands keys). The hash count k is read from
+    * the serialized header, not recomputed, so a filter sized under
+    * different arguments is still reported honestly. */
   def bloomSaturation(filter: Array[Byte], sizedForItems: Long,
       fpp: Double = 0.01): BloomSaturation = {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(filter))
@@ -1122,8 +1137,7 @@ object Transforms {
     require(version == 1 || version == 2,
       s"unknown Bloom serialization version $version")
     val k = in.readInt()
-    val f = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(filter))
+    val f = Bloom.read(filter)
     val m = f.bitSize().toDouble
     // cardinality() is the SET-BIT count X, not an item estimate; the
     // load factor X/m is the whole story: a probe false-positives iff
@@ -1140,17 +1154,13 @@ object Transforms {
 
   /** Per-shard saturation over a sharded history frame — S metadata
     * rows, same lambda rationale as [[mergeBloomSharded]]. Each shard
-    * was sized for expectedItems/S ([[buildBloomSharded]]'s rule), and
-    * content-hash sharding keeps fills near-uniform, so one hot shard
-    * flagging `rebuild_recommended` means the horizon is genuinely
-    * outgrown, not skewed. */
+    * was sized by [[buildBloomSharded]]'s rule, and content-hash
+    * sharding keeps fills near-uniform, so one hot shard flagging
+    * `rebuild_recommended` means the horizon is genuinely outgrown, not
+    * skewed. */
   def bloomSaturationSharded(filters: DataFrame, expectedItems: Long,
       fpp: Double = 0.01): DataFrame = {
-    val ns = filters.select(col("num_shards")).distinct().collect()
-    require(ns.length == 1,
-      s"filters frame must carry one num_shards value; got ${ns.length}")
-    val perShard = math.max(1L,
-      math.ceil(expectedItems.toDouble / ns(0).getInt(0)).toLong)
+    val perShard = Bloom.sizing(expectedItems, fpp, shards = Bloom.numShards(filters)).items
     val satUdf = udf((f: Array[Byte]) => bloomSaturation(f, perShard, fpp))
     filters.select(col("shard"), satUdf(col("filter")).as("s"))
       .select(col("shard"), col("s.estimatedItems").as("estimated_items"),
@@ -1178,37 +1188,17 @@ object Transforms {
     * probe, so the per-DOC false-drop rate stays ≤ ~fpp. Docs under 3
     * tokens have no shingles and pass ungated (they are below the
     * resolution of 3-gram MinHash; route them through [[bloomGate]]).
-    *
-    * The serialized filter is format-compatible with the whole Bloom
-    * toolkit: [[saveBloom]]/[[loadBloom]], [[mergeBloom]] (via
-    * [[extendNearDupBloom]]) and [[bloomSaturation]] (size it for
-    * expectedDocs × NumBands insertions). */
+ */
   def buildNearDupBloom(historical: DataFrame, expectedDocs: Long,
-      fpp: Double = 0.01): Array[Byte] = {
-    require(expectedDocs > 0, s"expectedDocs must be positive (got $expectedDocs)")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1) (got $fpp)")
-    val nKeys = expectedDocs * graft.operators.Dedup.NumBands
-    val perProbeFpp = fpp / graft.operators.Dedup.NumBands
-    val numBits = math.ceil(
-      -nKeys * math.log(perProbeFpp) / (math.log(2) * math.log(2))).toLong
-    withSig(historical)
-      .filter(sigPresent)
-      .select(posexplode(array(
-        graft.operators.Dedup.bandKeysOf(col(SigCol)): _*)).as(Seq("b", "bk")))
-      .select(xxhash64(col("bk")).as("h"))
-      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
-        lit(nKeys), lit(numBits)).as("bf"))
-      .head().getAs[Array[Byte]](0)
-  }
+      fpp: Double = 0.01): Array[Byte] =
+    Bloom.build(withSig(historical).filter(sigPresent), explode(array(bandKeys: _*)),
+      Bloom.sizing(expectedDocs, fpp, keysPerItem = graft.operators.Dedup.NumBands))
 
   /** Gate a batch frame or a stream through a built/loaded band filter. */
-  def nearDupGate(docs: DataFrame, filter: Array[Byte]): DataFrame = {
-    val staged = withSig(docs)
-    val anyBandHit = graft.operators.Dedup.bandKeysOf(col(SigCol))
-      .map(bk => GraftFunctions.call("graft_bloom_contains", lit(filter), xxhash64(bk)))
-      .reduce(_ || _)
-    staged.filter(!sigPresent || !anyBandHit).drop(SigCol)
-  }
+  def nearDupGate(docs: DataFrame, filter: Array[Byte]): DataFrame =
+    withSig(docs)
+      .filter(!sigPresent || !bandKeys.map(Bloom.mightContain(filter, _)).reduce(_ || _))
+      .drop(SigCol)
 
   /** [[bloomDedup]]'s shape for the near-dup gate (build + gate in one
     * call — production loops should persist the build instead). */
@@ -1216,40 +1206,21 @@ object Transforms {
       expectedDocs: Long, fpp: Double = 0.01): DataFrame =
     nearDupGate(docs, buildNearDupBloom(historical, expectedDocs, fpp))
 
-  /** [[extendBloom]] for the band filter: OR the new batch's band keys
-    * into the saved history filter — one pass over the increment, the
-    * history corpus is never rescanned. Same sizing-params contract. */
-  def extendNearDupBloom(spark: SparkSession, path: String, newDocs: DataFrame,
-      expectedDocs: Long, fpp: Double = 0.01): Array[Byte] = {
-    val merged = mergeBloom(loadBloom(spark, path),
-      buildNearDupBloom(newDocs, expectedDocs, fpp))
-    saveBloom(spark, merged, path)
-    merged
-  }
+  /** The SAME segmentation the batch `dd_line_dup` census counts, so gate
+    * and census can never disagree on what a "line" is. */
+  private def lineSegs: Column =
+    graft.functions.TextFns.lineSegments(col("text"), graft.operators.Dedup.LineDupWidth)
 
   /** Build the LINE-hash history filter — the boilerplate-gate twin of
-    * [[buildBloom]] at line granularity: the filter holds
-    * `xxhash64(segment)` for every line segment of the history corpus
-    * (`TextFns.lineSegments` — the SAME segmentation the batch
-    * `dd_line_dup` census counts, so the gate and the census can never
-    * disagree on what a "line" is). `expectedLines` sizes the filter in
-    * SEGMENTS, not documents (a 10-line page inserts 10 keys);
-    * under-sizing degrades fpp, never correctness (no false negatives:
-    * a truly duplicated line always probes true). */
+    * [[buildBloom]] at line granularity, over every line segment of the
+    * history corpus. `expectedLines` sizes the filter in SEGMENTS, not
+    * documents (a 10-line page inserts 10 keys); under-sizing degrades
+    * fpp, never correctness (no false negatives: a truly duplicated line
+    * always probes true). */
   def buildLineBloom(historical: DataFrame, expectedLines: Long,
-      fpp: Double = 0.01): Array[Byte] = {
-    require(expectedLines > 0, s"expectedLines must be positive (got $expectedLines)")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1) (got $fpp)")
-    val numBits = math.ceil(
-      -expectedLines * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    historical
-      .select(explode(graft.functions.TextFns.lineSegments(col("text"),
-        graft.operators.Dedup.LineDupWidth)).as("seg"))
-      .select(xxhash64(col("seg")).as("h"))
-      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
-        lit(expectedLines), lit(numBits)).as("bf"))
-      .head().getAs[Array[Byte]](0)
-  }
+      fpp: Double = 0.01): Array[Byte] =
+    Bloom.build(historical, explode(transform(lineSegs, xxhash64(_))),
+      Bloom.sizing(expectedLines, fpp))
 
   /** Boilerplate ingest gate — the streaming twin of the batch
     * `dd_line_dup` census (C4/CCNet family): drops documents whose line
@@ -1269,12 +1240,11 @@ object Transforms {
       maxDupShare: Double = 0.3): DataFrame = {
     require(maxDupShare >= 0.0 && maxDupShare <= 1.0,
       s"maxDupShare must be in [0, 1] (got $maxDupShare)")
-    val segs = graft.functions.TextFns.lineSegments(col("text"),
-      graft.operators.Dedup.LineDupWidth)
+    val segs = lineSegs
     val nseg = size(segs) // -1 for null text
     // functions.filter qualified: the `filter` param (the bytes) shadows it
     val ndup = size(org.apache.spark.sql.functions.filter(segs, s =>
-      GraftFunctions.call("graft_bloom_contains", lit(filter), xxhash64(s))))
+      Bloom.mightContain(filter, xxhash64(s))))
     // Boundary-exact drop rule for ANY practical share value (ADVICE
     // r11): the census removal flag compares in exact INTEGER
     // cross-multiplication (10·dup ≥ 3·n), and the float product
@@ -1317,10 +1287,9 @@ object Transforms {
     * history). The segment/kept arrays are each referenced a bounded
     * 2× per row (the lineDupGate constant-factor contract). */
   def lineTrim(docs: DataFrame, filter: Array[Byte]): DataFrame = {
-    val segs = graft.functions.TextFns.lineSegments(col("text"),
-      graft.operators.Dedup.LineDupWidth)
+    val segs = lineSegs
     val kept = org.apache.spark.sql.functions.filter(segs, s =>
-      !GraftFunctions.call("graft_bloom_contains", lit(filter), xxhash64(s)))
+      !Bloom.mightContain(filter, xxhash64(s)))
     val nseg = coalesce(size(segs), lit(-1)) // -1 for null text
     docs
       .withColumn("n_lines", greatest(nseg, lit(0)).cast("long"))
@@ -1331,29 +1300,18 @@ object Transforms {
         when(nseg <= 0, col("text")).otherwise(array_join(kept, "\n")))
   }
 
-  /** [[buildBloom]] at SPAN granularity (round 15): the filter holds the
-    * fused 8-gram window hash (`graft_gram_buckets`, the SAME hash the
-    * batch `dd_span_trim` census counts — gate and census can never
-    * disagree on what a "window" is) for every window of the history
-    * corpus. `expectedGrams` sizes the filter in WINDOWS (a doc of n
-    * tokens inserts n−7 keys); under-sizing degrades fpp, never
-    * correctness. The gram value keys the filter directly (insertion
-    * and probe share the pipeline; the Bloom hashes the long
-    * internally). */
+  /** The SAME 8-gram window hash the batch `dd_span_trim` census counts. */
+  private def grams(tokens: Column): Column =
+    GraftFunctions.call("graft_gram_buckets", tokens, lit(8), lit(8), lit(0))
+
+  /** [[buildBloom]] at SPAN granularity (round 15): the filter holds
+    * every 8-gram window of the history corpus. `expectedGrams` sizes
+    * the filter in WINDOWS (a doc of n tokens inserts n−7 keys);
+    * under-sizing degrades fpp, never correctness. */
   def buildSpanBloom(historical: DataFrame, expectedGrams: Long,
-      fpp: Double = 0.01): Array[Byte] = {
-    require(expectedGrams > 0, s"expectedGrams must be positive (got $expectedGrams)")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1) (got $fpp)")
-    val numBits = math.ceil(
-      -expectedGrams * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    historical
-      .select(explode(GraftFunctions.call("graft_gram_buckets",
-        graft.functions.TextFns.tokens(col("text")),
-        lit(8), lit(8), lit(0))).as("h"))
-      .agg(GraftFunctions.call("graft_bloom_agg", col("h"),
-        lit(expectedGrams), lit(numBits)).as("bf"))
-      .head().getAs[Array[Byte]](0)
-  }
+      fpp: Double = 0.01): Array[Byte] =
+    Bloom.build(historical, explode(grams(graft.functions.TextFns.tokens(col("text")))),
+      Bloom.sizing(expectedGrams, fpp))
 
   /** Verbatim duplicated-span TRIM at ingest (round 15) — the streaming
     * twin of the batch `dd_span_trim` operator, completing the span
@@ -1378,9 +1336,7 @@ object Transforms {
     * on a corpus whose duplicated grams are all in the history. */
   def spanTrim(docs: DataFrame, filter: Array[Byte]): DataFrame = {
     val tk = graft.functions.TextFns.tokens(col("text"))
-    val flags = transform(
-      GraftFunctions.call("graft_gram_buckets", tk, lit(8), lit(8), lit(0)),
-      h => GraftFunctions.call("graft_bloom_contains", lit(filter), h))
+    val flags = transform(grams(tk), h => Bloom.mightContain(filter, h))
     val kept = GraftFunctions.call("graft_span_trim", tk, flags,
       lit(8), lit(graft.operators.Dedup.SpanTrimTokens))
     val ntk = coalesce(size(tk), lit(-1)) // -1 for null text
@@ -1410,8 +1366,11 @@ object Transforms {
       graft.functions.TextFns.tokens(col("text"))))
 
   /** A doc has a signature iff it has ≥1 shingle (first slot non-null). */
-  private def sigPresent: org.apache.spark.sql.Column =
+  private def sigPresent: Column =
     element_at(col(SigCol), 1).isNotNull
+
+  private def bandKeys: Seq[Column] =
+    graft.operators.Dedup.bandKeysOf(col(SigCol)).map(xxhash64(_))
 
   case class PathTail(t1: Option[String], t2: Option[String], lastSeenMs: Long)
   case class PathHit(user_id: Long, path: String)
@@ -1488,11 +1447,6 @@ object Transforms {
     * evict them and incomplete stragglers entirely). */
   def funnelConversions(spark: SparkSession, events: DataFrame): Dataset[FunnelConversion] = {
     import spark.implicits._
-    def ts(u: Long): java.sql.Timestamp = {
-      val t = new java.sql.Timestamp(u / 1000L)
-      t.setNanos(((u % 1000000L) * 1000L).toInt)
-      t
-    }
     keyedFold(events.selectExpr("user_id", "ts", "event_type", "event_id")
         .as[(Long, java.sql.Timestamp, String, Long)], None)(_._1, r => (us(r._2), r._4)) {
       (user: Long, prev: Option[FunnelProgress], rows: Seq[(Long, java.sql.Timestamp, String, Long)],
@@ -1507,8 +1461,8 @@ object Transforms {
             case "click" if st.view.exists(_ <= u) && st.click.isEmpty =>
               st = st.copy(click = Some(u))
             case "purchase" if st.click.exists(_ <= u) =>
-              out += FunnelConversion(user, ts(st.view.get), ts(st.click.get),
-                ts(u), (u - st.view.get) / 1e6)
+              out += FunnelConversion(user, fromUs(st.view.get), fromUs(st.click.get),
+                fromUs(u), (u - st.view.get) / 1e6)
               st = st.copy(done = true)
             case _ => ()
           }

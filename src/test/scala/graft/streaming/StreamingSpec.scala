@@ -1086,6 +1086,29 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     spark.table("closed").filter(col("user_id") === 2).count() shouldBe 0 // still open
   }
 
+  it should "keep microseconds in emit-on-close sessions, as sessionize does" in {
+    import org.apache.spark.sql.functions.col
+    val evs = Seq(
+      Ev(0, ts(0), 1, "click", 1.0, "{}"),
+      Ev(1, Timestamp.valueOf("2024-01-01 00:00:00.00025"), 1, "click", 2.0, "{}"),
+      Ev(2, Timestamp.valueOf("2024-01-01 00:00:01.00075"), 1, "click", 4.0, "{}"),
+      Ev(3, ts(120), 2, "view", 1.0, "{}")) // moves the watermark past user 1's session
+    val (_, onClose) = eventsStream(evs)
+    val q1 = Transforms.sessionizeOnClose(spark, onClose)
+      .writeStream.format("memory").queryName("closed_us").outputMode("append").start()
+    q1.processAllAvailable(); q1.stop()
+    val (_, windowed) = eventsStream(evs)
+    val q2 = Transforms.sessionize(windowed)
+      .writeStream.format("memory").queryName("sess_us").outputMode("complete").start()
+    q2.processAllAvailable(); q2.stop()
+    val cols = Seq("user_id", "session_start", "session_end", "n_events", "session_value")
+    def user1(table: String) =
+      spark.table(table).filter(col("user_id") === 1).select(cols.map(col): _*).collect().toSeq
+    user1("closed_us") shouldBe user1("sess_us")
+    user1("closed_us").map(_.getTimestamp(2)) shouldBe
+      Seq(Timestamp.valueOf("2024-01-01 00:30:01.00075"))
+  }
+
   it should "assign streamed embeddings to trained centroids and report drift" in {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1207,7 +1230,8 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
       .select("doc_id").as[Long].collect().toSet
     keptLoaded shouldBe keptDirect        // identical gating after reload
     keptLoaded.count(_ < 2000L) shouldBe 0 // dupes still all dropped
-    // a re-save over an existing file replaces it atomically
+    // a re-save over an existing file replaces it (moving the old copy
+    // aside, never deleting it first: BloomSpec's crash states)
     Transforms.saveBloom(spark, filter, path)
     Transforms.loadBloom(spark, path) shouldBe filter
   }
@@ -1221,12 +1245,14 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
       (500 until 1000).map(i => (10000L + i, s"HISTORICAL, document number $i body!"))
     val fresh = (0 until 2000).map(i => (20000L + i, s"genuinely new content item $i"))
     val stream = (clones ++ fresh).toDF("doc_id", "text")
-    val kept = Transforms.bloomDedupSharded(stream, hist, expectedItems = 2000L,
-      fpp = 0.01, shards = 8).select("doc_id").as[Long].collect().toSet
+    val filters = Transforms.buildBloomSharded(hist, expectedItems = 2000L,
+      fpp = 0.01, shards = 8).persist()
+    val kept = Transforms.bloomGateSharded(stream, filters)
+      .select("doc_id").as[Long].collect().toSet
     kept.count(_ < 20000L) shouldBe 0   // every clone dropped, exact or normalized
     kept.count(_ >= 20000L) should be >= 1900 // fresh false-drop stays near fpp
     // the sharded gate adds no schema residue
-    Transforms.bloomDedupSharded(stream, hist, 2000L, 0.01, 8)
+    Transforms.bloomGateSharded(stream, filters)
       .columns.toSeq shouldBe Seq("doc_id", "text")
   }
 
@@ -1359,7 +1385,8 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     val path = tmp() + "/neardup.bloom"
     Transforms.saveBloom(spark,
       Transforms.buildNearDupBloom(day1, 1000L, 0.01), path)
-    Transforms.extendNearDupBloom(spark, path, day2, 1000L, 0.01)
+    Transforms.saveBloom(spark, Transforms.mergeBloom(Transforms.loadBloom(spark, path),
+      Transforms.buildNearDupBloom(day2, 1000L, 0.01)), path)
     val probe = ((0 until 200).map(i => (i.toLong, body("a", i))) ++
       (0 until 150).map(i => (500L + i, body("b", i))) ++
       (0 until 150).map(i => (9000L + i, body("z", i)))).toDF("doc_id", "text")
@@ -2431,7 +2458,7 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 
   behavior of "src/main"
 
-  it should "keep keyed event-time state inside the one keyed fold of Transforms" in {
+  it should "keep keyed event-time state and Bloom filter decisions inside their one helper in Transforms" in {
     import java.io.File
     val root = new File("src/main/scala")
     withClue(s"run from the repository root (${root.getAbsolutePath}): ") {
@@ -2446,16 +2473,22 @@ class StreamingSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
       try s.mkString.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
       finally s.close()
     }
-    val helper = "(?s)\n  private def keyedFold\\[.*?\n  }\n".r
+    // each helper of Transforms is the one place its patterns may appear
+    val helpers = Seq(
+      "private def keyedFold\\[" -> Seq("flatMapGroupsWithState", "setTimeoutTimestamp",
+        "GroupStateTimeout.EventTimeTimeout"),
+      "private\\[graft\\] object Bloom \\{" -> Seq("call(\"graft_bloom_agg\"",
+        "call(\"graft_bloom_contains\"", "math.log(2) * math.log(2)"))
     val offenders = for {
       f <- files(root)
       src = code(f)
+      (head, patterns) <- helpers
+      helper = s"(?s)\n  $head.*?\n  }\n".r
       rest = if (f.getName != "Transforms.scala") src else {
-        withClue("Transforms.keyedFold: ") { helper.findAllIn(src).size shouldBe 1 }
+        withClue(s"Transforms $head: ") { helper.findAllIn(src).size shouldBe 1 }
         helper.replaceAllIn(src, "")
       }
-      pattern <- Seq("flatMapGroupsWithState", "setTimeoutTimestamp",
-        "GroupStateTimeout.EventTimeTimeout") if rest.contains(pattern)
+      pattern <- patterns if rest.contains(pattern)
     } yield s"${f.getPath}: $pattern"
     offenders shouldBe empty
   }
