@@ -1,9 +1,11 @@
 package graft.streaming
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
 
 /** One exactly-once epoch sink — the reference's `RecordBatchStorage`
   * contract on Structured Streaming's epoch model (Armbrust et al.,
@@ -32,15 +34,14 @@ trait EpochSink extends Serializable {
 
 object EpochSink {
 
-  /** Run `body` with `batch` cached: foreachBatch re-executes the source
-    * scan for every action otherwise. The epoch is persisted only when
-    * the caller has not already cached it, and only what was persisted
-    * here is released — a caller's cache outlives the call, and a failed
-    * write leaves nothing cached. */
-  def cached[T](batch: DataFrame)(body: => T): T = {
-    val owned = batch.storageLevel == StorageLevel.NONE
-    if (owned) batch.persist()
-    try body finally if (owned) batch.unpersist()
+  /** What `record` observed on an epoch write that has returned, by
+    * metric name. The metrics reach the driver through the session's
+    * listener bus; if they never arrive (a dropped listener event), the
+    * epoch fails and its replay rewrites it, instead of the stream
+    * hanging. */
+  private[streaming] def observed(record: Observation): Map[String, Any] = {
+    val row = Await.result(record.future, 2.minutes)
+    row.getValuesMap[Any](row.schema.fieldNames.toSeq)
   }
 
   /** A sink whose epoch is one directory `<prefix><id>` under `outDir`:

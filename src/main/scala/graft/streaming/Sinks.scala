@@ -1,10 +1,12 @@
 package graft.streaming
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
 
 /** Storage sinks with the reference's delivery guarantees, re-expressed on
   * Structured Streaming's epoch model.
@@ -296,50 +298,90 @@ object Sinks {
         .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
     }
 
-    /** Idempotent epoch write (the two phases + marker commit), over the
-      * cached epoch: write + ranges + count would otherwise be 3 source
-      * reads. */
+    /** Idempotent epoch write (the two phases + marker commit) in ONE
+      * Spark job: the marker's consumed ranges are observed during the
+      * data write itself ([[EpochRanges]]), so the write is the epoch's
+      * only read. */
     def writeBatch(batch: DataFrame, batchId: Long): Unit = {
       val spark = batch.sparkSession
       if (committedBatchIds(spark).contains(batchId)) return // replay → skip
-      EpochSink.cached(batch) {
-        // Integrity gate BEFORE phase 2: a refused epoch publishes
-        // NOTHING — no visible data dir, no marker — and fails the query
-        // loudly (never a silent drop; the epoch re-delivers after the
-        // defect is fixed upstream)
-        for (g <- epochGate; reason <- g(batch))
-          throw new IllegalStateException(s"two-phase commit REFUSED epoch $batchId: $reason")
-        val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // Phases 1+2: stage, then one atomic rename (shared protocol)
-        publish(fs, outDir, s"batch=$batchId") { staging =>
-          batch.write.mode("overwrite").parquet(staging.toString)
-        }
-        // Commit: marker `_commits/<id>` with `partition=min..max,...;rows=n`.
-        // Range endpoints come from (event_type, event_id) when the schema
-        // carries them — the sink itself is schema-agnostic (the
-        // SnapshotTableSink rule), so non-event epochs (e.g. a gated
-        // shard-manifest stream) commit rows-only markers. The row count
-        // rides in the range aggregate, so an event epoch costs one job
-        val hasEv = batch.columns.contains("event_type") &&
-          batch.columns.contains("event_id")
-        val (ranges, rows) =
-          if (!hasEv) ("", batch.count())
-          else {
-            val groups = batch.groupBy(col("event_type"))
-              .agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"), count(lit(1)).as("n"))
-              .collect()
-              .sortBy(_.getString(0))
-            (groups.map(r => s"${r.getString(0)}=${r.getLong(1)}..${r.getLong(2)}").mkString(","),
-              groups.map(_.getLong(3)).sum)
-          }
-        val commits = new Path(outDir, "_commits")
-        fs.mkdirs(commits)
-        val tmpMarker = new Path(commits, s".tmp.$batchId")
-        val out = fs.create(tmpMarker, true)
-        out.write(s"$ranges;rows=$rows\n".getBytes("UTF-8")); out.close()
-        renameOrThrow(fs, tmpMarker, new Path(commits, batchId.toString))
+      // Integrity gate BEFORE phase 2: a refused epoch publishes
+      // NOTHING — no visible data dir, no marker — and fails the query
+      // loudly (never a silent drop; the epoch re-delivers after the
+      // defect is fixed upstream). A gated epoch pays one extra source
+      // read for it
+      for (g <- epochGate; reason <- g(batch))
+        throw new IllegalStateException(s"two-phase commit REFUSED epoch $batchId: $reason")
+      val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // Marker `_commits/<id>` with `partition=min..max,...;rows=n`. Range
+      // endpoints come from (event_type, event_id) when the schema carries
+      // them — the sink itself is schema-agnostic (the SnapshotTableSink
+      // rule), so non-event epochs (e.g. a gated shard-manifest stream)
+      // commit rows-only markers
+      val hasEv = batch.columns.contains("event_type") && batch.columns.contains("event_id")
+      val record = new Observation()
+      val observed = batch.observe(record,
+        if (hasEv) EpochRanges(col("event_type"), col("event_id")).as("marker")
+        else concat(lit(";rows="), count(lit(1))).as("marker"))
+      // Phases 1+2: stage, then one atomic rename (shared protocol)
+      publish(fs, outDir, s"batch=$batchId") { staging =>
+        observed.write.mode("overwrite").parquet(staging.toString)
       }
+      // Commit
+      val commits = new Path(outDir, "_commits")
+      fs.mkdirs(commits)
+      val tmpMarker = new Path(commits, s".tmp.$batchId")
+      val out = fs.create(tmpMarker, true)
+      out.write(s"${EpochSink.observed(record)("marker")}\n".getBytes("UTF-8")); out.close()
+      renameOrThrow(fs, tmpMarker, new Path(commits, batchId.toString))
     }
+  }
+
+  /** The two-phase-commit marker's consumed ranges as one aggregate over
+    * `(event_type, event_id)`: `<type>=<lo>..<hi>,…;rows=<n>`, types in
+    * order (a null type prints `null`, and sorts first). `n` counts every
+    * row; `lo`/`hi` ignore null ids. Observed on the epoch's data write,
+    * so the ranges cost no pass of their own; a retried task's partial
+    * buffer is dropped with its attempt, like any accumulator. */
+  private[streaming] object EpochRanges
+      extends Aggregator[(String, java.lang.Long), mutable.HashMap[String, Array[Long]], String] {
+    type Buf = mutable.HashMap[String, Array[Long]]
+
+    def apply(eventType: Column, eventId: Column): Column =
+      udaf(this, Encoders.tuple(Encoders.STRING, Encoders.LONG))(eventType, eventId)
+
+    def zero: Buf = mutable.HashMap.empty
+
+    def reduce(b: Buf, in: (String, java.lang.Long)): Buf = {
+      val r = b.getOrElseUpdate(in._1, Array(Long.MaxValue, Long.MinValue, 0L))
+      if (in._2 != null) {
+        r(0) = math.min(r(0), in._2)
+        r(1) = math.max(r(1), in._2)
+      }
+      r(2) += 1
+      b
+    }
+
+    def merge(a: Buf, b: Buf): Buf = {
+      b.foreach { case (k, r) =>
+        a.get(k) match {
+          case None => a(k) = r
+          case Some(q) =>
+            q(0) = math.min(q(0), r(0)); q(1) = math.max(q(1), r(1)); q(2) += r(2)
+        }
+      }
+      a
+    }
+
+    def finish(b: Buf): String = {
+      val groups = b.toSeq.sortBy(g => Option(g._1))
+      def end(v: Long, none: Long) = if (v == none) "null" else v.toString
+      groups.map { case (k, r) => s"$k=${end(r(0), Long.MaxValue)}..${end(r(1), Long.MinValue)}" }
+        .mkString(",") + s";rows=${groups.map(_._2(2)).sum}"
+    }
+
+    def bufferEncoder: Encoder[Buf] = Encoders.javaSerialization[Buf]
+    def outputEncoder: Encoder[String] = Encoders.STRING
   }
 
   /** In-data offset storage: the epoch id travels inside the data as a

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iceberg-style snapshot table sink (reference:
@@ -296,36 +296,39 @@ class SnapshotTableSink(tableDir: String,
     orphans.map(_.getPath.toString)
   }
 
+  /** Idempotent epoch write in ONE Spark job: the consumed range
+    * recorded with the commit (StreamRange analog) is observed during the
+    * data write, so the write is the epoch's only read. */
   def writeBatch(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val prev = latestSnap(spark)
     if (prev.exists(_.committed.contains(batchId))) return // replayed epoch
-    // cached: the write and the ranges agg would otherwise each re-read the source
-    val ranges = EpochSink.cached(batch) {
-      // data files (distributed write; optionally cell/partition-pruned).
-      // An EMPTY epoch writes unpartitioned: partitionBy of zero rows
-      // emits no files at all and the dir becomes unreadable (schema
-      // inference fails); the unpartitioned empty write keeps a
-      // schema-bearing file, and readDirs null-fills the partition column
-      val w = batch.write.mode("overwrite")
-      if (partitionCols.nonEmpty) writePartTypes(spark, batch.schema)
-      (if (partitionCols.nonEmpty && !batch.isEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(s"$tableDir/data/batch=$batchId")
-      // consumed ranges recorded with the commit (StreamRange analog); the
-      // range endpoints come from event_id when the schema carries one —
-      // the sink itself is schema-agnostic, so other tables get rows-only
-      val hasEventId = batch.columns.contains("event_id")
-      val loHi =
-        if (hasEventId) Seq(min(col("event_id")), max(col("event_id")))
-        else Seq(lit(null), lit(null))
-      batch.agg(loHi.head, (loHi.tail :+ count(lit(1))): _*).collect()(0)
-    }
+    // the range endpoints come from event_id when the schema carries one —
+    // the sink itself is schema-agnostic, so other tables get rows-only
+    val record = new Observation()
+    val rows = count(lit(1)).as("rows")
+    val observed =
+      if (batch.columns.contains("event_id"))
+        batch.observe(record, min(col("event_id")).as("lo"), max(col("event_id")).as("hi"), rows)
+      else batch.observe(record, rows)
+    // data files (distributed write; optionally cell/partition-pruned)
+    val dir = s"$tableDir/data/batch=$batchId"
+    if (partitionCols.nonEmpty) writePartTypes(spark, batch.schema)
+    val w = observed.write.mode("overwrite")
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dir)
+    val range = EpochSink.observed(record)
+    // An EMPTY partitioned epoch is rewritten unpartitioned: partitionBy
+    // of zero rows emits no files at all and the dir becomes unreadable
+    // (schema inference fails); the unpartitioned empty write keeps a
+    // schema-bearing file, and readDirs null-fills the partition column
+    if (partitionCols.nonEmpty && range("rows") == 0L)
+      batch.write.mode("overwrite").parquet(dir)
     val committed = prev.map(_.committed).getOrElse(Seq.empty) :+ batchId
     val live = prev.map(_.live).getOrElse(Seq.empty) :+ s"batch=$batchId"
     publishSnapshot(spark,
       Snap(prev.map(_.id + 1).getOrElse(0L), committed, live),
       parent = prev.map(_.id).getOrElse(-1L), epoch = batchId,
-      rangeJson = s"""{"lo": ${ranges.get(0)}, "hi": ${ranges.get(1)}, "rows": ${ranges.get(2)}}""")
+      rangeJson = s"""{"lo": ${range.getOrElse("lo", null)}, "hi": ${range.getOrElse("hi", null)}, "rows": ${range("rows")}}""")
   }
 
   /** Materialize the [[readLatest]] view: fold every live data dir into

@@ -52,17 +52,20 @@ object StandingQueryLoader {
       partitionCols = Seq("query_id"))
     val clean = new SnapshotTableSink(cleanDir)
     new EpochSink {
-      def writeBatch(batch: DataFrame, epochId: Long): Unit =
-        EpochSink.cached(batch) { // split consumers: quarantine + clean
+      def writeBatch(batch: DataFrame, epochId: Long): Unit = {
+        batch.persist() // split consumers: quarantine + clean
+        try {
           val hits = Transforms.bm25Score(batch, queries, df, nDocs, avgdl)
             .filter(col("score") >= minScore)
-          EpochSink.cached(hits) { // consumers: quarantine write + hit-id anti-join
+            .persist() // consumers: quarantine write + hit-id anti-join
+          try {
             quarantine.writeBatch(hits, epochId)
             clean.writeBatch(
               batch.join(hits.select(col("doc_id")).distinct(),
                 Seq("doc_id"), "left_anti"), epochId)
-          }
-        }
+          } finally hits.unpersist()
+        } finally batch.unpersist()
+      }
     }.attach(docs, checkpointDir)
   }
 

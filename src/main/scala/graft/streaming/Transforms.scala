@@ -903,9 +903,26 @@ object Transforms extends Serializable {
     def agg(h: Column, s: Sizing): Column =
       GraftFunctions.call("graft_bloom_agg", h, lit(s.items), lit(s.bits))
 
-    /** One filter over `key` of every row of `rows`; null when empty. */
+    /** One filter over `key` of every row of `rows`. Spark's aggregate
+      * answers null when no key was inserted; that is the empty filter of
+      * the same sizing here, which every probe answers false and which
+      * merges with any filter of that sizing. */
     def build(rows: DataFrame, key: Column, s: Sizing): Array[Byte] =
-      rows.select(key.as("h")).agg(agg(col("h"), s)).head().getAs[Array[Byte]](0)
+      Option(rows.select(key.as("h")).agg(agg(col("h"), s)).head().getAs[Array[Byte]](0))
+        .getOrElse(empty(rows.sparkSession, s))
+
+    /** The aggregate's own empty buffer: its item and bit caps are the
+      * session's runtime Bloom filter limits. */
+    private def empty(spark: SparkSession, s: Sizing): Array[Byte] = {
+      import org.apache.spark.sql.internal.SQLConf
+      def cap(key: String) = spark.conf.get(key).toLong
+      val f = org.apache.spark.util.sketch.BloomFilter.create(
+        math.min(s.items, cap(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_ITEMS.key)),
+        math.min(s.bits, cap(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_BITS.key)))
+      val out = new java.io.ByteArrayOutputStream()
+      f.writeTo(out)
+      out.toByteArray
+    }
 
     /** The stateless codegen'd probe of a literal filter for key `h`. */
     def mightContain(filter: Array[Byte], h: Column): Column =

@@ -45,12 +45,14 @@ object VectorStoreLoader {
       vecCol: String = "embedding"): StreamingQuery = {
     val sink = new SnapshotTableSink(tableDir, partitionCols = Seq("cell"))
     new EpochSink {
-      def writeBatch(batch: DataFrame, epochId: Long): Unit =
-        EpochSink.cached(batch) { // split consumers: index write + DLQ
+      def writeBatch(batch: DataFrame, epochId: Long): Unit = {
+        batch.persist() // split consumers: index write + DLQ
+        try {
           sink.writeBatch(batch.filter(col("routed")).drop("routed"), epochId)
           batch.filter(!col("routed")).drop("routed", "cell")
             .write.mode("overwrite").parquet(s"$dlqDir/batch=$epochId")
-        }
+        } finally batch.unpersist()
+      }
     }.attach(Transforms.ivfRoute(vectors, sb, cb, probes, vecCol), checkpointDir)
   }
 

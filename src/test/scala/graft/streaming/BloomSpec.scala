@@ -72,6 +72,32 @@ class BloomSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     }
   }
 
+  it should "keep every document and line against an empty history" in {
+    val fx = fixture
+    val none = fx.limit(0)
+    def total(df: DataFrame, c: String): Long = df.agg(sum(col(c))).head().getLong(0)
+    Transforms.bloomDedup(fx, none, 120L).count() shouldBe 120
+    Transforms.nearDupDedup(fx, none, 120L).count() shouldBe 120
+    Transforms.lineDupGate(fx, Transforms.buildLineBloom(none, 400L)).count() shouldBe 120
+    val lines = Transforms.lineTrim(fx, Transforms.buildLineBloom(none, 400L))
+    (total(lines, "n_lines"), total(lines, "removed_lines")) shouldBe ((360L, 0L))
+    val spans = Transforms.spanTrim(fx, Transforms.buildSpanBloom(none, 2000L))
+    total(spans, "n_tokens") should be > 0L
+    total(spans, "removed_tokens") shouldBe 0L
+    // the empty filter has its kind's sizing, so it merges with a full one
+    Seq[DataFrame => Array[Byte]](Transforms.buildBloom(_, 120L),
+      Transforms.buildNearDupBloom(_, 120L), Transforms.buildLineBloom(_, 400L),
+      Transforms.buildSpanBloom(_, 2000L)).foreach { build =>
+      val full = build(fx)
+      Transforms.mergeBloom(full, build(none)) shouldBe full
+    }
+    val path = tmp() + "/history"
+    val saved = Transforms.buildBloom(fx, 120L)
+    Transforms.saveBloom(spark, saved, path)
+    Transforms.extendBloom(spark, path, none, 120L) shouldBe saved
+    Transforms.loadBloom(spark, path) shouldBe saved
+  }
+
   behavior of "saveBloom"
 
   it should "load the last complete filter from every crash state of a save" in {
