@@ -168,10 +168,11 @@ def main():
                                   a.max_steal, a.reruns)
         pairs.append(pair)
         brief = []
+        rate = "traced.rows_per_s" if a.trace else "rows_per_s"
         for side in ("base", "head"):
             last = pair[side][-1]
-            v = last["result"]["metrics"].get("rows_per_s", {}).get("value") if last["result"] else None
-            brief.append(f"{side} steal={last['steal_pct']:.2f}% rows_per_s={v}")
+            v = last["result"]["metrics"].get(rate, {}).get("value") if last["result"] else None
+            brief.append(f"{side} steal={last['steal_pct']:.2f}% {rate}={v}")
         log(f"pair {i + 1}/{a.pairs} seed={seed} first={order[0]}: " + "; ".join(brief))
 
     summary = summarize(pairs, metrics)
