@@ -11,8 +11,9 @@ import org.scalatest.matchers.should.Matchers
 import graft.GraftSession
 
 /** The Bloom history-filter toolkit of [[Transforms]]: every kind's
-  * filter keeps its bytes, and a save that crashed at any step loads the
-  * last complete filter or fails loudly, never a truncated one. */
+  * filter keeps its bytes, an empty history gates nothing, and a save
+  * that crashed at any step loads the last complete filter or fails
+  * loudly, never a truncated one. */
 class BloomSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = GraftSession.create("local[2]", 2)
