@@ -344,12 +344,9 @@ object Retrieval {
       .localCheckpoint(false)
     val qsizes = qtok.groupBy(col("query_id")).agg(count(lit(1)).as("nq"))
       .localCheckpoint(false)
-    // empty query set → null filter → no pre-filter (the join below
+    // empty query set → empty filter → no token passes (the join below
     // is empty either way; EmptyInputSpec's contract)
-    val bf = truthFilter(qtok)
-    val dtkF =
-      if (bf == null) dtk
-      else dtk.filter(Bloom.mightContain(bf, xxhash64(col("t"))))
+    val dtkF = dtk.filter(Bloom.mightContain(truthFilter(qtok), xxhash64(col("t"))))
     // shuffle-hash, not broadcast: qtok is bounded by the sampled docs'
     // VOCABULARY (unbounded per doc length), and the joined stream must
     // shuffle for the (query, doc) agg regardless — the hash build side

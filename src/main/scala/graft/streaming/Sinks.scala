@@ -340,7 +340,9 @@ object Sinks {
   /** The two-phase-commit marker's consumed ranges as one aggregate over
     * `(event_type, event_id)`: `<type>=<lo>..<hi>,…;rows=<n>`, types in
     * order (a null type prints `null`, and sorts first). `n` counts every
-    * row; `lo`/`hi` ignore null ids. Observed on the epoch's data write,
+    * row; `lo`/`hi` ignore null ids, and print `null..null` for a type
+    * with no non-null id. Each type's buffer is `(lo, hi, n, ids)`, where
+    * `ids` counts the non-null ids. Observed on the epoch's data write,
     * so the ranges cost no pass of their own; a retried task's partial
     * buffer is dropped with its attempt, like any accumulator. */
   private[streaming] object EpochRanges
@@ -353,10 +355,11 @@ object Sinks {
     def zero: Buf = mutable.HashMap.empty
 
     def reduce(b: Buf, in: (String, java.lang.Long)): Buf = {
-      val r = b.getOrElseUpdate(in._1, Array(Long.MaxValue, Long.MinValue, 0L))
+      val r = b.getOrElseUpdate(in._1, Array(Long.MaxValue, Long.MinValue, 0L, 0L))
       if (in._2 != null) {
         r(0) = math.min(r(0), in._2)
         r(1) = math.max(r(1), in._2)
+        r(3) += 1
       }
       r(2) += 1
       b
@@ -367,7 +370,8 @@ object Sinks {
         a.get(k) match {
           case None => a(k) = r
           case Some(q) =>
-            q(0) = math.min(q(0), r(0)); q(1) = math.max(q(1), r(1)); q(2) += r(2)
+            q(0) = math.min(q(0), r(0)); q(1) = math.max(q(1), r(1))
+            q(2) += r(2); q(3) += r(3)
         }
       }
       a
@@ -375,8 +379,7 @@ object Sinks {
 
     def finish(b: Buf): String = {
       val groups = b.toSeq.sortBy(g => Option(g._1))
-      def end(v: Long, none: Long) = if (v == none) "null" else v.toString
-      groups.map { case (k, r) => s"$k=${end(r(0), Long.MaxValue)}..${end(r(1), Long.MinValue)}" }
+      groups.map { case (k, r) => if (r(3) == 0) s"$k=null..null" else s"$k=${r(0)}..${r(1)}" }
         .mkString(",") + s";rows=${groups.map(_._2(2)).sum}"
     }
 

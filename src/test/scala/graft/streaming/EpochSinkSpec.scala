@@ -148,7 +148,8 @@ class EpochSinkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     failed.get shouldBe 2 // one failed attempt in each sink's write
   }
 
-  /** Epochs with null types, null ids, no rows and no event columns. */
+  /** Epochs with null types, null ids, no rows, no event columns and
+    * ids at the ends of the long range. */
   private def fixture: Seq[DataFrame] = {
     val ev = StructType(Seq(StructField("event_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType)))
@@ -161,7 +162,8 @@ class EpochSinkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
       frame(ev),
       frame(StructType(ev.filter(_.name != "event_type")), Row(4L, 1.0), Row(null, 2.0), Row(8L, 3.0)),
       frame(StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))),
-        Row(1L, "a"), Row(2L, "b")))
+        Row(1L, "a"), Row(2L, "b")),
+      frame(ev, Row(Long.MaxValue, "max", 1.0), Row(null, "max", 2.0), Row(Long.MinValue, "min", 3.0)))
   }
 
   it should "write the same marker and snapshot bytes as the range aggregate they replaced" in {
@@ -174,11 +176,15 @@ class EpochSinkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
       "twopc 2" -> "c9a4e4fb40b2b156295fd1710d04dc00", // ;rows=0
       "twopc 3" -> "c1351a5e969ca233d7995f2c8fc5bf7f", // ;rows=3
       "twopc 4" -> "6bfe71c811c0bc685739728e09e1be45", // ;rows=2
+      // max=9223372036854775807..9223372036854775807,
+      // min=-9223372036854775808..-9223372036854775808;rows=3
+      "twopc 5" -> "cd9c211f582a1266e2dba04d2eeaf867",
       "snapshot 0" -> "183961082778aa28567bf9d9bd0f2a1b",
       "snapshot 1" -> "7bc97aec79a46470544f25143ad4d58a",
       "snapshot 2" -> "22dd4f88427fbf1cb71e826819213a7a",
       "snapshot 3" -> "d86ae246d816aed4b161b9b874d85d17",
-      "snapshot 4" -> "a622179a2ee5a6668f0bc6f7d0561b46")
+      "snapshot 4" -> "a622179a2ee5a6668f0bc6f7d0561b46",
+      "snapshot 5" -> "ae4f6f12c150d0ec962e9f96da8bffe7")
     val twopc = tmp(); val snap = tmp()
     fixture.zipWithIndex.foreach { case (batch, i) =>
       new Sinks.TwoPhaseCommitSink(twopc).writeBatch(batch, i.toLong)

@@ -7,10 +7,11 @@
 Both revisions are exported with `git archive` into a work directory (one
 tree each, reused while its revision is unchanged), and each pair runs
 `perfbench/run.py` once in each tree with the same seed, alternating which
-side runs first. A run whose `host_steal_pct` exceeds --max-steal is run
-again (up to --reruns times): the hypervisor gave that share of the CPUs to
-other guests, which slows the wall-clock metrics by itself. One untimed run
-per side first builds the tree and fills the file cache.
+side runs first, for BENCHMARK.json's `run_seconds`. A run whose
+`host_steal_pct` exceeds MAX_STEAL_PCT is run again (up to RERUNS times): the
+hypervisor gave that share of the CPUs to other guests, which slows the
+wall-clock metrics by itself. One untimed run per side first builds the tree
+and fills the file cache.
 
 Prints, per metric, each side's median and quartiles, the head's wins and
 ties, and the median change as a share of the metric's bound in
@@ -27,6 +28,10 @@ import subprocess
 import sys
 import tempfile
 import time
+
+# A run above this host steal share is run again, at most RERUNS times.
+MAX_STEAL_PCT = 2.0
+RERUNS = 3
 
 
 def log(msg):
@@ -68,17 +73,17 @@ def run_once(tree, workload, seed, seconds, trace):
     return json.loads(lines[-1]), info, 0
 
 
-def measured(tree, workload, seed, seconds, trace, max_steal, reruns):
-    """A run below the steal threshold, after at most `reruns` repeats;
+def measured(tree, workload, seed, seconds, trace):
+    """A run below the steal threshold, after at most RERUNS repeats;
     every attempt is kept."""
     attempts = []
-    for _ in range(reruns + 1):
+    for _ in range(RERUNS + 1):
         res, info, code = run_once(tree, workload, seed, seconds, trace)
         steal = float(info.get("host_steal_pct", "nan"))
         attempts.append({"result": res, "info": info, "exit": code, "steal_pct": steal})
-        if res is not None and steal <= max_steal:
+        if res is not None and steal <= MAX_STEAL_PCT:
             break
-        log(f"seed {seed}: steal {steal:.2f} % (limit {max_steal} %) or failed run; running again")
+        log(f"seed {seed}: steal {steal:.2f} % (limit {MAX_STEAL_PCT} %) or failed run; running again")
     return attempts
 
 
@@ -136,11 +141,8 @@ def main():
     ap.add_argument("--head", default="HEAD", help="head revision (default HEAD)")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=int, default=15)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--seed", type=int, default=301, help="seed of the first pair; pair i uses seed+i")
-    ap.add_argument("--max-steal", type=float, default=2.0, help="rerun a run above this host steal %%")
-    ap.add_argument("--reruns", type=int, default=3, help="reruns per run past the steal limit")
     ap.add_argument("--workdir", default=os.path.join(tempfile.gettempdir(), "graft-ab"))
     ap.add_argument("--out", default=None, help="JSON artifact (default <workdir>/ab_<workload>.json)")
     a = ap.parse_args()
@@ -150,13 +152,14 @@ def main():
     with open("BENCHMARK.json") as f:
         spec = json.load(f)
     metrics = spec["per_layer"] if a.trace else spec["end_to_end"]
+    seconds = spec["run_seconds"]
     trees = {}
     commits = {"base": rev_parse(a.base), "head": rev_parse(a.head)}
     for side, commit in commits.items():
         trees[side] = os.path.join(a.workdir, side)
         export(commit, trees[side])
         log(f"{side}: {commit[:12]} at {trees[side]}; untimed warm-up run")
-        run_once(trees[side], a.workload, a.seed - 1, min(a.seconds, 5), a.trace)
+        run_once(trees[side], a.workload, a.seed - 1, min(seconds, 5), a.trace)
 
     pairs = []
     for i in range(a.pairs):
@@ -164,8 +167,7 @@ def main():
         order = ("base", "head") if i % 2 == 0 else ("head", "base")
         pair = {"seed": seed, "order": list(order)}
         for side in order:
-            pair[side] = measured(trees[side], a.workload, seed, a.seconds, a.trace,
-                                  a.max_steal, a.reruns)
+            pair[side] = measured(trees[side], a.workload, seed, seconds, a.trace)
         pairs.append(pair)
         brief = []
         rate = "traced.rows_per_s" if a.trace else "rows_per_s"
@@ -188,8 +190,8 @@ def main():
     failed = sum(1 for p in pairs for side in ("base", "head")
                  if p[side][-1]["result"] is None or not p[side][-1]["result"]["correct"])
     artifact = {"workload": a.workload, "base": commits["base"], "head": commits["head"],
-                "pairs": a.pairs, "seconds": a.seconds, "trace": a.trace, "first_seed": a.seed,
-                "max_steal_pct": a.max_steal, "reruns": a.reruns, "failed_runs": failed,
+                "pairs": a.pairs, "seconds": seconds, "trace": a.trace, "first_seed": a.seed,
+                "max_steal_pct": MAX_STEAL_PCT, "reruns": RERUNS, "failed_runs": failed,
                 "summary": summary, "runs": pairs}
     out = a.out or os.path.join(a.workdir, f"ab_{a.workload}.json")
     with open(out, "w") as f:
